@@ -6,7 +6,7 @@ import javax.imageio.ImageIO
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SharedViews, Tables}
 
 /** Multimodal column plumbing: image/audio/video travel as opaque `binary`
   * columns with typed metadata; decode / feature-extract / resize /
@@ -166,22 +166,12 @@ object MediaOps {
 
   /** Decoded features are consumed by BOTH query faces (q70 summary, q71
     * ANN) and twice within the ANN self-join — the PNG decode is the
-    * expensive leg, so materialize it once per (session, dir) like
-    * [[graft.operators.GraphOps]]'s edge cache. */
-  private val featCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Drop cached feature relations (same lifecycle hook as
-    * [[graft.operators.Dedup.clearCaches]]). */
-  def clearCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    featCache.values.asScala.foreach(df => scala.util.Try(df.unpersist()))
-    featCache.clear()
-  }
-
+    * expensive leg, so materialize it once per (session, dir) as a keyed
+    * [[graft.SharedViews]] view, like [[graft.operators.GraphOps]]' edges. */
   private def cachedFeatures(spark: SparkSession, dir: String): DataFrame =
-    featCache.computeIfAbsent((spark, dir),
-      _ => extractFeatures(mediaTable(spark, dir)).toDF().cache())
+    SharedViews.view("media.features", spark, dir) {
+      extractFeatures(mediaTable(spark, dir)).toDF().cache()
+    }
 
   /** Media features → similarity search: nearest media by cosine over the
     * ImageIO-decoded feature vectors — the decode→embed→ANN pipeline shape,

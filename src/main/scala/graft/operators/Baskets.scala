@@ -3,7 +3,7 @@ package graft.operators
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SharedViews, Tables}
 
 /** Market-basket analytics (SURVEY.md §2.9 G1): frequent-itemset mining.
   * Baskets are the distinct part sets per order (the reference's baskets are
@@ -142,9 +142,11 @@ object Baskets {
       org.apache.spark.sql.Dataset[Seq[Long]], supportOpt: Option[Int],
       maxCandidates: Long = 1000000L): DataFrame = {
     import spark.implicits._
-    val baskets = basketsIn
+    // phase 2 re-reads the baskets when the caller finally executes the
+    // returned lazy frame, so the cache is a transient, not released here
+    val baskets = SharedViews.transient(basketsIn
       .repartition(32)
-      .cache()
+      .cache())
 
     val nBaskets = baskets.count()
     val support = supportOpt.getOrElse(math.max(3, math.round(nBaskets * 0.0002).toInt))
@@ -185,9 +187,6 @@ object Baskets {
       .map { case (s, n) => (s.mkString(","), s.size, n) }
       .toDF("itemset", "size", "support")
       .where(col("support") >= support)
-    // NOTE: do not unpersist here — the returned frame is lazy, and phase 2
-    // re-reads the cached baskets when the caller finally executes it; the
-    // cache dies with the session
     counted.orderBy("size", "itemset")
   }
 }

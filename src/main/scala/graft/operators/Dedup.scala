@@ -1,10 +1,9 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import org.apache.spark.storage.StorageLevel
+import graft.{SharedViews, Tables}
 
 /** Document deduplication for large-scale training-data pipelines: exact
   * (content-hash groupBy; streaming twin in `streaming.DedupStream`),
@@ -70,28 +69,18 @@ object Dedup {
       i => aggregate(sh, lit(Long.MaxValue),
         (acc, h) => least(acc, xxhash64(h, i))))
 
-  /** The whole dedup family (signatures, LSH pairs, OPH, incremental,
-    * n-gram Jaccard, grouping) consumes the same shingle-hash relation, and
-    * three of those also share the dense MinHash signature — the same
-    * materialized-view shape as [[GraphOps.coPurchaseEdges]]'s edge cache:
-    * build once per (session, dir), `.cache()` lazily, every consumer after
-    * the first reads the in-memory copy. The relation is small relative to
-    * its input (hashes, not text), so pinning it is safe at scale. */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val contentCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val groupedDenseCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val groupsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Double), DataFrame]()
-  private val bandIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val prefixOrderCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Cache level for the array-carrying keyed views: MEMORY_ONLY, never
-    * disk. These relations carry 1–2 KB rows (shingle sets, 128-long
+  /** Cache level for the array-carrying keyed views. The whole dedup
+    * family (signatures, LSH pairs, OPH, incremental, n-gram Jaccard,
+    * grouping) consumes the same shingle-hash relation, and three of those
+    * also share the dense MinHash signature — the same materialized-view
+    * shape as [[GraphOps.coPurchaseEdges]]: each is a keyed
+    * [[graft.SharedViews]] view, built once per (session, dir) and read in
+    * memory by every consumer after the first. The relations are small
+    * relative to their input (hashes, not text), so pinning them is safe
+    * at scale.
+    *
+    * The level is MEMORY_ONLY, never disk. These relations carry 1–2 KB
+    * rows (shingle sets, 128-long
     * signatures, band explosions), and every one of them derives from a
     * staged columnar parquet or a retained shuffle — so an evicted
     * partition re-reads a COMPRESSED scan. The default MEMORY_AND_DISK
@@ -106,41 +95,9 @@ object Dedup {
     * local disk at 2-4× its columnar size is never the right trade when
     * the columnar source is one storage round-trip away. */
   private def viewCache(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    df.persist(StorageLevel.MEMORY_ONLY)
 
-  /** Per-call `.cache()`s (content groups, OPH signatures, SimHash
-    * fingerprints, band tables) are not keyed views — they exist so one
-    * invocation's self-joins don't recompute the build — but the returned
-    * relation still references them lazily, so they can't be unpersisted
-    * before return. Track them here instead; [[clearCaches]] drains the
-    * list, so repeated invocations in one session can't accumulate pinned
-    * blocks indefinitely. */
-  private val transientCaches =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
-  private def tracked(df: DataFrame): DataFrame = { transientCaches.add(df); df }
-
-  /** Drop every cached relation (unpersist + forget). The static maps
-    * otherwise pin DataFrames — and through them their sessions — for the
-    * JVM lifetime, and would serve stale results if a documents table were
-    * rewritten in-place under the same path. Call on fixture rewrite or
-    * session teardown (DedupSpec exercises it). */
-  def clearCaches(): Unit = {
-    (shingleCache.values.asScala ++
-        contentCache.values.asScala ++ groupedDenseCache.values.asScala ++
-        groupsCache.values.asScala ++ bandIndexCache.values.asScala ++
-        prefixOrderCache.values.asScala ++
-        transientCaches.asScala)
-      .foreach(df => scala.util.Try(df.unpersist()))
-    shingleCache.clear()
-    contentCache.clear()
-    groupedDenseCache.clear()
-    groupsCache.clear()
-    bandIndexCache.clear()
-    prefixOrderCache.clear()
-    transientCaches.clear()
-  }
-
-  /** (doc_id, sh) shingle-hash relation, cached per (session, dir). Only
+  /** (doc_id, sh) shingle-hash relation, a keyed view per (session, dir). Only
     * the hash set is pinned — tokens are consumed by `shingle_hashes`
     * inside the build and never needed downstream, so caching them would
     * double the pinned bytes for nothing.
@@ -154,7 +111,7 @@ object Dedup {
     * read. A rewritten fixture re-stages via the size+mtime fingerprint. */
   private def shingled(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    shingleCache.computeIfAbsent((spark, dir), _ => {
+    SharedViews.view("dedup.shingles", spark, dir) {
       val src = s"$dir/documents.parquet"
       val staged = graft.sources.Staging.persistent(
         "shingles", src, graft.sources.Staging.fingerprintOf(src)) { out =>
@@ -164,7 +121,7 @@ object Dedup {
           .write.mode("overwrite").parquet(s"$out/shingles")
       }
       viewCache(spark.read.parquet(s"$staged/shingles"))
-    })
+    }
   }
 
   /** (doc_id, sh, band, bh) banding of an arbitrary documents relation —
@@ -286,10 +243,11 @@ object Dedup {
     * groups (the bulk of q8n's r8 0.7 → 1.9 s drift at sf0.1: q8n pays
     * the build once for its pair stage and ExplainAudit/verify pay it
     * again per face). Same keyed-materialized-view discipline as
-    * [[shingleCache]]; dropped by [[clearCaches]]. */
+    * [[shingled]]; dropped by [[graft.SharedViews.clearAll]]. */
   private def groupedDense(spark: SparkSession, dir: String): DataFrame =
-    groupedDenseCache.computeIfAbsent((spark, dir), _ =>
-      viewCache(groupedSigs(spark, dir, minhashSigCol)))
+    SharedViews.view("dedup.groupedDense", spark, dir) {
+      viewCache(groupedSigs(spark, dir, minhashSigCol))
+    }
 
   /** The corpus's content-level LSH band index — (cid, kb), two longs
     * per band row (kb = xxhash64(band, bh), see the packing note in the
@@ -310,7 +268,7 @@ object Dedup {
     * session joining against this DataFrame reads the same in-memory
     * blocks. */
   private[graft] def corpusBandIndex(spark: SparkSession, dir: String): DataFrame =
-    bandIndexCache.computeIfAbsent((spark, dir), _ => {
+    SharedViews.view("dedup.bandIndex", spark, dir) {
       // partition count sized by the corpus, not the session default: the
       // index is Bands × |contents| rows, and at 50M docs the session's 32
       // shuffle partitions put 1.6B/32 = 50M 24-byte rows into EACH
@@ -346,7 +304,7 @@ object Dedup {
         .repartition(parts, col("kb"))
         .sortWithinPartitions("kb")
         .transform(viewCache)
-    })
+    }
 
   /** (cid, sh) — one shingle set per distinct content, the verify-side
     * lookup paired with the narrow [[corpusBandIndex]]. A projection of
@@ -522,7 +480,9 @@ object Dedup {
     val broadcastCandCap = spark.conf
       .getOption("graft.dedup.broadcastCandCap").map(_.toLong)
       .getOrElse(4000000L)
-    val candM = cand.persist()
+    // MEMORY_ONLY for the [[viewCache]] reason (no row-format spill);
+    // a transient because the returned relation still reads it
+    val candM = SharedViews.transient(cand.persist(StorageLevel.MEMORY_ONLY))
     val candDriverSized = candM.count() <= broadcastCandCap
     val touched = candM.select(col("doc_a").as("doc_id"))
       .union(candM.select(col("doc_b").as("doc_id"))).distinct()
@@ -581,7 +541,7 @@ object Dedup {
     // adaptive probe needed): identical texts share fp, so g copies would
     // otherwise square every chunk bucket; fp-equal pairs re-expand at
     // hamming 0, cross-fp pairs inherit their representatives' distance
-    val grp = tracked(simhash(spark, dir)
+    val grp = SharedViews.transient(simhash(spark, dir)
       .groupBy("fp")
       .agg(min("doc_id").as("cid"), sort_array(collect_list("doc_id")).as("members"))
       .cache())
@@ -671,8 +631,8 @@ object Dedup {
     // group-aware split key), each previously re-running band join + CC +
     // expansion — the residual q8n cost after the groupedDense cache
     // landed. Cached UNordered; each face applies its own presentation
-    // sort. Dropped by [[clearCaches]].
-    groupsCache.computeIfAbsent((spark, dir, minJaccard), _ => {
+    // sort.
+    SharedViews.view("dedup.groups", spark, dir, minJaccard) {
       // CC runs at CONTENT level (the q9q name-level discipline): vertices
       // are content representatives, edges the verified rep pairs; the
       // expanded record graph's components are exactly the unions of its
@@ -702,7 +662,7 @@ object Dedup {
         .withColumn("is_keeper", col("doc_id") === col("group_id"))
         .select("doc_id", "group_id", "group_size", "is_keeper")
         .cache()
-    }).orderBy("group_id", "doc_id")
+    }.orderBy("group_id", "doc_id")
 
   /** qad: prefix-filtered set-similarity join (the PPJoin/AllPairs
     * family) — the EXACT counterpart of the probabilistic MinHash route,
@@ -750,7 +710,7 @@ object Dedup {
   private val CollapseMaxGroup = 4L
 
   private[graft] def contentGroups(spark: SparkSession, dir: String): DataFrame =
-    contentCache.computeIfAbsent((spark, dir), _ => {
+    SharedViews.view("dedup.contentGroups", spark, dir) {
       val base = shingled(spark, dir).where(size(col("sh")) > 0)
       // the max aggregate over an EMPTY corpus (or one where every text
       // yields zero shingles) returns a null row — read it safely so the
@@ -770,7 +730,7 @@ object Dedup {
       else
         viewCache(base.groupBy("sh")
           .agg(min("doc_id").as("cid"), collect_list("doc_id").as("members")))
-    })
+    }
 
   /** (cid, o) — per content, its shingle hashes as (df, h) structs sorted
     * rarest-first: the shared base of BOTH set-similarity joins (qad's
@@ -785,7 +745,7 @@ object Dedup {
     * swings at sf10p. Staged, an evicted partition re-reads a columnar
     * scan instead. */
   private def prefixOrder(spark: SparkSession, dir: String): DataFrame =
-    prefixOrderCache.computeIfAbsent((spark, dir), _ => {
+    SharedViews.view("dedup.prefixOrder", spark, dir) {
       val src = s"$dir/documents.parquet"
       val staged = graft.sources.Staging.persistent(
         "prefix-order", src, graft.sources.Staging.fingerprintOf(src)) { out =>
@@ -798,7 +758,7 @@ object Dedup {
           .write.mode("overwrite").parquet(s"$out/prefix_order")
       }
       viewCache(spark.read.parquet(s"$staged/prefix_order"))
-    })
+    }
 
   /** Filter-threshold slack: the verify rounds to 6 dp (oracle parity),
     * so a pair with exact score t − 5e-7 still PASSES verification — every

@@ -3,7 +3,7 @@ package graft.operators
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SharedViews, Tables}
 
 /** Graph analytics (SURVEY.md §2.9 G2–G6): similarity-graph construction,
   * degrees, connected components, Brandes edge betweenness, modularity and
@@ -33,52 +33,31 @@ import graft.Tables
   */
 object GraphOps {
 
-  /** The whole graph family (degrees, components, betweenness, communities,
-    * modularity) consumes the same co-purchase edge relation; a real engine
-    * materializes it once instead of re-running the join+aggregate per
-    * query. Keyed per (session, dir, minShared); `.cache()` is lazy, so the
-    * first consumer pays the build and the rest read the in-memory copy.
-    * The relation is tiny relative to its inputs (edges ≪ lineitem), so
-    * pinning it is safe even at large scale — it's the classic
-    * materialized-view shape. */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
-
-  /** Drop the cached edge + betweenness relations (unpersist + forget) —
-    * same lifecycle hook as [[Dedup.clearCaches]]: without it the static
-    * maps pin the DataFrames (and sessions) for the JVM lifetime and would
-    * serve stale results if a fixture were rewritten in-place. */
-  def clearCaches(): Unit = {
-    import scala.jdk.CollectionConverters._
-    (edgeCache.values.asScala ++ btwCache.values.asScala ++
-        cpCache.values.asScala)
-      .foreach(df => scala.util.Try(df.unpersist()))
-    edgeCache.clear()
-    btwCache.clear()
-    cpCache.clear()
-  }
-
-  private val cpCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Distinct customer–part incidence (c, p) — the shared base relation of
-    * the co-purchase graph AND item-item CF ([[Recommend]]); cached per
-    * (session, dir) so the lineitem⋈orders distinct is paid once across
-    * both families. Same materialized-view rationale as [[edgeCache]]. */
+    * the co-purchase graph AND item-item CF ([[Recommend]]); a keyed
+    * [[graft.SharedViews]] view per (session, dir) so the lineitem⋈orders
+    * distinct is paid once across both families. */
   private[operators] def incidence(spark: SparkSession, dir: String): DataFrame =
-    cpCache.computeIfAbsent((spark, dir), _ => {
+    SharedViews.view("graph.incidence", spark, dir) {
       val l = Tables(spark, dir, "lineitem")
       val o = Tables(spark, dir, "orders")
       l.join(o, l("l_orderkey") === o("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .distinct().cache()
-    })
+    }
 
-  /** Undirected co-purchase edges (u < v, with shared-part count), cached
-    * per (session, dir, minShared) — see [[edgeCache]]. */
+  /** Undirected co-purchase edges (u < v, with shared-part count). The
+    * whole graph family (degrees, components, betweenness, communities,
+    * modularity) consumes this one relation, so it is a keyed
+    * [[graft.SharedViews]] view per (session, dir, minShared) instead of a
+    * join+aggregate per query; `.cache()` is lazy, so the first consumer
+    * pays the build and the rest read the in-memory copy. The relation is
+    * tiny relative to its inputs (edges ≪ lineitem), so pinning it is safe
+    * even at large scale — it's the classic materialized-view shape. */
   def coPurchaseEdges(spark: SparkSession, dir: String, minShared: Int = 3): DataFrame =
-    edgeCache.computeIfAbsent((spark, dir, minShared),
-      _ => buildCoPurchaseEdges(spark, dir, minShared).cache())
+    SharedViews.view("graph.edges", spark, dir, minShared) {
+      buildCoPurchaseEdges(spark, dir, minShared).cache()
+    }
 
   private def buildCoPurchaseEdges(spark: SparkSession, dir: String, minShared: Int): DataFrame = {
     val cp = incidence(spark, dir)
@@ -146,12 +125,15 @@ object GraphOps {
       driverEdgeLimit: Long = 5000000L): DataFrame = {
     import spark.implicits._
     val e = edgeDf.select("u", "v").cache()
-    if (e.count() <= driverEdgeLimit) {
-      val edges = e.as[(Long, Long)].collect()
-      val vertices = edges.iterator.flatMap(x => Iterator(x._1, x._2)).toArray.distinct
-      spark.createDataset(unionFind(vertices, edges).toSeq)
-        .toDF("vertex", "component").orderBy("vertex")
-    } else componentsOfEdges(e)
+    try {
+      if (e.count() <= driverEdgeLimit) {
+        val edges = e.as[(Long, Long)].collect()
+        val vertices = edges.iterator.flatMap(x => Iterator(x._1, x._2)).toArray.distinct
+        spark.createDataset(unionFind(vertices, edges).toSeq)
+          .toDF("vertex", "component").orderBy("vertex")
+      } else componentsOfEdges(e)
+    } finally e.unpersist() // both tiers consume `e` eagerly (collect /
+    // checkpointed labels), as in betweennessAuto
   }
 
   /** Min-label propagation with pointer jumping over an arbitrary (u, v)
@@ -192,6 +174,7 @@ object GraphOps {
       curSum = labelSum(l2)
       labels = l2
     }
+    e.unpersist(); nbrs.unpersist() // labels is a checkpoint; both are done
     labels.orderBy("vertex")
   }
 
@@ -302,17 +285,15 @@ object GraphOps {
     * `aggregateMessages`. */
   /** Exact betweenness is consumed by THREE queries (q33 raw, q34
     * communities, q35 modularity curve — the reference's own pipeline
-    * computes it once and reuses it, `Community.scala:56`); cached like
-    * [[edgeCache]] so the O(V·E) Brandes pass runs once per (session,
-    * dir, minShared), not once per consumer. */
-  private val btwCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
-
+    * computes it once and reuses it, `Community.scala:56`); a keyed
+    * [[graft.SharedViews]] view like [[coPurchaseEdges]], so the O(V·E)
+    * Brandes pass runs once per (session, dir, minShared), not once per
+    * consumer. */
   def betweenness(spark: SparkSession, dir: String, minShared: Int = 3): DataFrame =
-    btwCache.computeIfAbsent((spark, dir, minShared), _ => {
+    SharedViews.view("graph.betweenness", spark, dir, minShared) {
       betweennessAuto(spark, coPurchaseEdges(spark, dir, minShared).select("u", "v"))
         .cache()
-    })
+    }
 
   /** q33's oracle-able face: values rounded to 6 dp (the engine-wide float
     * discipline — an independent recomputation's per-edge sums differ at
@@ -425,7 +406,7 @@ object GraphOps {
         .groupBy("u", "v").agg(sum("c").as("c"))
     // both passes are done (every level/credit is localCheckpoint'ed) —
     // the returned relation reads only canon + credits, so release sym now
-    // rather than pinning 2|E| rows until someone calls clearCaches
+    // rather than pinning 2|E| rows until SharedViews.clearAll
     sym.unpersist()
     // zero-credit edges surface too, so the output edge set matches the
     // exact tier's (and the ranking is total over the graph)
@@ -1054,11 +1035,15 @@ object GraphOps {
       iters, damping)
 
   /** [[personalizedPageRank]] over an explicit undirected (u, v) edge
-    * list (seed = minimum vertex id present). */
+    * list (seed = minimum vertex id present). Self-loops are dropped: a
+    * loop on the seed would otherwise give superstep 1 a second seed row
+    * next to the injected restart row. */
   private[graft] def pprOf(e0: DataFrame, iters: Int,
       damping: Double): DataFrame = {
     val eCnt = e0.count()
+    // the filter sits in the cached static side `w`, so it runs once
     val e = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
+      .where(col("u") =!= col("v"))
       .select(col("u").as("src"), col("v").as("dst"))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
     // static side cached pre-partitioned on its per-superstep join key,
@@ -1073,18 +1058,20 @@ object GraphOps {
     // rank; zeros are restored by ONE final left-outer against the vertex
     // set instead of the per-superstep verts-left-outer that re-streamed
     // the full vertex relation every round (one join fewer per superstep
-    // at every scale). Bit-safety vs the dense form: each emitted vertex
-    // evaluates the SAME expression dense did (lit(1-d)*restart +
-    // lit(d)*mass), and the rows sparse drops contributed only exact-0.0
-    // terms (0.0·w inside mass sums, 0.15·0.0+0.85·0.0 rank rows) — IEEE
-    // x+0.0 = x for x ≥ 0, so no value can move. Oracle unchanged.
+    // at every scale). Each emitted vertex evaluates the SAME expression
+    // dense did (lit(1-d)*restart + lit(d)*mass), and the rows sparse
+    // drops contributed only exact-0.0 terms. That alone does not make the
+    // two forms bit-equal: dropping rows also changes how the
+    // non-associative double sum(r*w) is split into partial aggregates and
+    // in which order they merge. Bit-equality is therefore not guaranteed
+    // by construction; it rests on the qa7 oracle matching, per fixture.
     val verts = w.select(col("src").as("v")).distinct().localCheckpoint()
     var pr = e0.sparkSession.range(1)
       .select(lit(seed).as("v"), lit(1.0).as("r")).localCheckpoint()
     for (i <- 1 to iters) {
       val stepped = pprStep(w, pr, seed, damping)
-      // only superstep 1 can miss the seed (u < v edges — no self-loops —
-      // so mass(seed) needs a ranked in-neighbor, which every i ≥ 2
+      // only superstep 1 can miss the seed (self-loops are filtered out
+      // of `e`, so mass(seed) needs a ranked in-neighbor, which every i ≥ 2
       // guarantees: the seed's neighbors hold mass > 0 from round 1 on);
       // its restart row is injected with the step's own arithmetic shape
       val next =
@@ -1322,7 +1309,9 @@ object GraphOps {
       driverEdgeLimit: Long = 5000000L): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    val cached = e0.cache()
+    // transient, not released here: when the caller already cached e0
+    // (GraphScale's edge list) this `.cache()` is that same entry
+    val cached = SharedViews.transient(e0.cache())
     if (cached.count() <= driverEdgeLimit) {
       val edges = cached.as[(Long, Long)].collect()
       return spark.createDataset(driverBfs(edges, maxIters).toSeq)
@@ -1414,7 +1403,7 @@ object GraphOps {
       driverEdgeLimit: Long = 5000000L): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    val cached = e0.cache()
+    val cached = SharedViews.transient(e0.cache()) // see ssspOf
     if (cached.count() <= driverEdgeLimit) {
       val edges = cached.as[(Long, Long)].collect()
       spark.createDataset(driverKCore(edges, k).toSeq)
@@ -1569,27 +1558,29 @@ object GraphOps {
     // static sides mirror the kernels' r13 shape (repartition on the
     // per-superstep join key + cache) so the dumped plan shows the loop's
     // steady state: the join reads the keyed InMemoryRelation with no
-    // fresh exchange above it
-    val w = e.join(deg, "src")
+    // fresh exchange above it. The returned plans read them lazily, so
+    // they are transients.
+    def static(df: DataFrame): DataFrame = SharedViews.transient(df.cache())
+    val w = static(e.join(deg, "src")
       .select(col("src"), col("dst"), (lit(1.0) / col("d")).as("w"))
-      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("src")).sortWithinPartitions("src").cache()
+      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("src")).sortWithinPartitions("src"))
     val verts = w.select(col("src").as("v")).distinct().sortWithinPartitions("v")
     val pr0 = verts.select(col("v"), lit(1.0).as("r"))
-    val nbrs = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
+    val nbrs = static(e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
       .select(col("u"), col("v"))
-      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("v")).sortWithinPartitions("v").cache()
+      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("v")).sortWithinPartitions("v"))
     // sssp's static side is keyed on u (frontier joins nbrs("u"))
-    val nbrsU = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
+    val nbrsU = static(e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
       .select(col("u"), col("v"))
-      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("u")).sortWithinPartitions("u").cache()
+      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("u")).sortWithinPartitions("u"))
     val labels0 = nbrs.select(col("u").as("vertex")).distinct()
       .withColumn("label", col("vertex"))
     val dist0 = spark.range(1)
       .select(lit(0L).as("vertex"), lit(0).as("dist"))
     val inc = incidence(spark, dir)
     val incParts = staticParts(inc.count(), inc.sparkSession)
-    val incC = inc.repartition(incParts, col("c")).sortWithinPartitions("c").cache()
-    val incP = inc.repartition(incParts, col("p")).sortWithinPartitions("p").cache()
+    val incC = static(inc.repartition(incParts, col("c")).sortWithinPartitions("c"))
+    val incP = static(inc.repartition(incParts, col("p")).sortWithinPartitions("p"))
     val hub0 = incC.select(col("c")).distinct().withColumn("h", lit(1.0))
     Seq(
       "q88_pagerank superstep" -> pageRankStep(w, pr0, 1000L, 0.85),

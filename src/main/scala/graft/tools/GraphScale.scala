@@ -65,6 +65,7 @@ object GraphScale {
       if (n >= 0)
         println(f"[time] $name rep$r ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
     }
+    edges.unpersist()
     spark.stop()
   }
 }

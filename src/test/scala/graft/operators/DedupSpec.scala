@@ -215,10 +215,9 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     assert(js.zip(js.tail).forall { case (a, b) => a >= b })
   }
 
-  test("clearCaches drops the cached relations and results rebuild identically") {
+  test("clearAll drops the cached relations and results rebuild identically") {
     val before = Dedup.minhashSignatures(spark, sfDir).collect().toSeq
-    Dedup.clearCaches()
-    GraphOps.clearCaches()
+    graft.SharedViews.clearAll()
     val after = Dedup.minhashSignatures(spark, sfDir).collect().toSeq
     assert(before == after)
   }

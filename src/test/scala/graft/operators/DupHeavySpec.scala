@@ -154,7 +154,7 @@ class DupHeavySpec extends AnyFunSuite with SparkSuite {
 
   test("duplicate-heavy caches clear and rebuild identically") {
     val before = Dedup.minhashPairs(spark, dupDir).collect().toSeq
-    Dedup.clearCaches()
+    graft.SharedViews.clearAll()
     val after = Dedup.minhashPairs(spark, dupDir).collect().toSeq
     assert(before == after)
   }

@@ -273,4 +273,19 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     }
     assert(eM.getMessage.contains("communitiesLpa"))
   }
+
+  test("personalized PageRank ignores a self-loop on the seed") {
+    import spark.implicits._
+    // seed = min vertex = 1; the loop (1, 1) must change nothing
+    val loopFree = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+    def ranks(edges: Seq[(Long, Long)], iters: Int): Seq[(Long, Double)] =
+      GraphOps.pprOf(edges.toDF("u", "v"), iters, 0.85).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    for (iters <- Seq(1, 2, 10)) {
+      val got = ranks(loopFree :+ ((1L, 1L)), iters)
+      assert(got.map(_._1).distinct.size == got.size,
+        s"iters=$iters: one row per vertex expected, got $got")
+      assert(got == ranks(loopFree, iters), s"iters=$iters")
+    }
+  }
 }

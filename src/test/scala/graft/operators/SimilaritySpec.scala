@@ -206,7 +206,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
 
   test("near-dup cache clears and rebuilds identically") {
     val before = Similarity.cosineNearDups(spark, sfDir, nTables = 16).collect().toSeq
-    Similarity.clearCaches()
+    graft.SharedViews.clearAll()
     val after = Similarity.cosineNearDups(spark, sfDir, nTables = 16).collect().toSeq
     assert(before == after)
   }
@@ -253,7 +253,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
       s"capped expansion diverges from brute force:\n engine=$engine\n brute=$brute")
     assert(brute.exists { case (a, b, _) => (a + b) % 2 == 1 },
       "fixture no longer exercises the cross-group cap (no mixed-parity pair in top-20)")
-    Similarity.clearCaches()
+    graft.SharedViews.clearAll()
   }
 
   test("near-dup top pair equals the global max-cosine pair") {
