@@ -33,10 +33,9 @@ object TimeOne {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // A/B probe hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" sets arbitrary
       // session confs so a config hypothesis can be measured without
-      // editing this file per experiment
-      .config(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "").split(";")
-        .filter(_.contains("="))
-        .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap)
+      // editing this file per experiment. Entries split on ';', so a value
+      // cannot contain ';'.
+      .config(extraConf(sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val picked = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -53,4 +52,16 @@ object TimeOne {
     }
     spark.stop()
   }
+
+  /** `k=v;k2=v2` as a conf map: keys and values are trimmed and blank
+    * entries skipped; an entry without `=` or with an empty key fails,
+    * naming the entry. */
+  private[graft] def extraConf(spec: String): Map[String, String] =
+    spec.split(";").iterator.map(_.trim).filter(_.nonEmpty).map { kv =>
+      val eq = kv.indexOf('=')
+      val k = if (eq < 0) "" else kv.substring(0, eq).trim
+      require(k.nonEmpty,
+        s"SPARK_GRAFT_EXTRA_CONF: bad entry '$kv' (want key=value, non-empty key)")
+      k -> kv.substring(eq + 1).trim
+    }.toMap
 }

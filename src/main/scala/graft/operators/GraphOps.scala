@@ -3,6 +3,7 @@ package graft.operators
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.{SharedViews, Tables}
 
 /** Graph analytics (SURVEY.md §2.9 G2–G6): similarity-graph construction,
@@ -122,19 +123,13 @@ object GraphOps {
     * pointer-jumping propagation. Same contract either way: (vertex,
     * component=min member id). */
   def componentsAuto(spark: SparkSession, edgeDf: DataFrame,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
-    import spark.implicits._
-    val e = edgeDf.select("u", "v").cache()
-    try {
-      if (e.count() <= driverEdgeLimit) {
-        val edges = e.as[(Long, Long)].collect()
-        val vertices = edges.iterator.flatMap(x => Iterator(x._1, x._2)).toArray.distinct
-        spark.createDataset(unionFind(vertices, edges).toSeq)
-          .toDF("vertex", "component").orderBy("vertex")
-      } else componentsOfEdges(e)
-    } finally e.unpersist() // both tiers consume `e` eagerly (collect /
-    // checkpointed labels), as in betweennessAuto
-  }
+      driverEdgeLimit: Long = 5000000L): DataFrame =
+    byTier(edgeDf, driverEdgeLimit) { edges =>
+      import spark.implicits._
+      val vertices = edges.iterator.flatMap(x => Iterator(x._1, x._2)).toArray.distinct
+      spark.createDataset(unionFind(vertices, edges).toSeq)
+        .toDF("vertex", "component").orderBy("vertex")
+    }(componentsOfEdges)
 
   /** Min-label propagation with pointer jumping over an arbitrary (u, v)
     * edge DataFrame. Plain neighbor-min propagation needs O(diameter)
@@ -143,39 +138,66 @@ object GraphOps {
     * label(label(v)) (every label is itself a vertex id), giving O(log
     * diameter) rounds. `localCheckpoint` truncates the per-round lineage so
     * round N+1 doesn't re-execute rounds 1..N. */
-  def componentsOfEdges(edgeDf: DataFrame): DataFrame = {
-    val e = edgeDf.select("u", "v").cache()
-    // static side cached pre-partitioned on v — the propagation joins
-    // nbrs(v) = labels(vertex) every round (see pageRankOf, same r13 fix)
-    val nbrs = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      .repartition(staticParts(2 * e.count(), e.sparkSession), col("v")).sortWithinPartitions("v").cache()
-    var labels = nbrs.select(col("u").as("vertex")).distinct()
-      .withColumn("component", col("vertex"))
-      .localCheckpoint()
-    // Labels only ever decrease under min-propagation, so Σ labels strictly
-    // decreases until the fixpoint — convergence is one cheap aggregate per
-    // round instead of a change-detection join.
-    def labelSum(df: DataFrame): java.math.BigDecimal = // decimal: no overflow on huge ids
-      df.agg(sum(col("component").cast("decimal(38,0)"))).head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var curSum = labelSum(labels)
-    while (curSum != prevSum) {
-      // label(v) ← min(label(v), min over neighbors w of label(w))
-      val nmin = nbrs.join(labels, nbrs("v") === labels("vertex"))
-        .groupBy(nbrs("u").as("vertex")).agg(min("component").as("nl"))
-      val l1 = labels.as("l").join(nmin.as("n"), Seq("vertex"), "left_outer")
-        .select(col("vertex"),
-          least(col("component"), coalesce(col("nl"), col("component"))).as("component"))
-      // pointer jump: label(v) ← label(label(v))
-      val l2 = l1.as("a").join(l1.as("b"), col("a.component") === col("b.vertex"))
-        .select(col("a.vertex").as("vertex"), col("b.component").as("component"))
+  def componentsOfEdges(edgeDf: DataFrame): DataFrame =
+    withCache(edgeDf.select("u", "v")) { e =>
+      // the propagation joins nbrs(v) = labels(vertex) every round
+      // (see keyedStatic)
+      val nbrs = keyedStatic(bothWays(e), 2 * e.count(), "v")
+      var labels = nbrs.select(col("u").as("vertex")).distinct()
+        .withColumn("component", col("vertex"))
         .localCheckpoint()
-      prevSum = curSum
-      curSum = labelSum(l2)
-      labels = l2
+      // Labels only ever decrease under min-propagation, so Σ labels strictly
+      // decreases until the fixpoint — convergence is one cheap aggregate per
+      // round instead of a change-detection join.
+      def labelSum(df: DataFrame): java.math.BigDecimal = // decimal: no overflow on huge ids
+        df.agg(sum(col("component").cast("decimal(38,0)"))).head.getDecimal(0)
+      var prevSum: java.math.BigDecimal = null
+      var curSum = labelSum(labels)
+      while (curSum != prevSum) {
+        // label(v) ← min(label(v), min over neighbors w of label(w))
+        val nmin = nbrs.join(labels, nbrs("v") === labels("vertex"))
+          .groupBy(nbrs("u").as("vertex")).agg(min("component").as("nl"))
+        val l1 = labels.as("l").join(nmin.as("n"), Seq("vertex"), "left_outer")
+          .select(col("vertex"),
+            least(col("component"), coalesce(col("nl"), col("component"))).as("component"))
+        // pointer jump: label(v) ← label(label(v))
+        val l2 = l1.as("a").join(l1.as("b"), col("a.component") === col("b.vertex"))
+          .select(col("a.vertex").as("vertex"), col("b.component").as("component"))
+          .localCheckpoint()
+        prevSum = curSum
+        curSum = labelSum(l2)
+        labels = l2
+      }
+      nbrs.unpersist() // labels is a checkpoint
+      labels.orderBy("vertex")
     }
-    e.unpersist(); nbrs.unpersist() // labels is a checkpoint; both are done
-    labels.orderBy("vertex")
+
+  /** The tier gate of the tiered graph kernels ([[componentsAuto]],
+    * [[betweennessAuto]], [[betweennessSampled]], [[ssspOf]],
+    * [[kCoreOf]]): count the (u, v) relation, and at most
+    * `driverEdgeLimit` edges run `driver` on the collected edge list —
+    * the collect itself is the driver OOM at 100× edge counts, so above
+    * the limit `distributed` runs on the relation, which never leaves the
+    * executors. The relation is cached for the count and the tier's read
+    * and released on return ([[withCache]]): both tiers consume it
+    * eagerly (collect, localCheckpoint, or a static side of their own). */
+  private def byTier(edgeDf: DataFrame, driverEdgeLimit: Long)(
+      driver: Array[(Long, Long)] => DataFrame)(
+      distributed: DataFrame => DataFrame): DataFrame =
+    withCache(edgeDf.select("u", "v")) { e =>
+      val spark = e.sparkSession
+      import spark.implicits._
+      if (e.count() <= driverEdgeLimit) driver(e.as[(Long, Long)].collect())
+      else distributed(e)
+    }
+
+  /** `body` over `df` cached, where this call owns only the cache entry it
+    * made: when the caller already cached `df`'s plan, `df.cache()` IS the
+    * caller's entry, and unpersisting it would drop the caller's cache. */
+  private def withCache(df: DataFrame)(body: DataFrame => DataFrame): DataFrame = {
+    val owned = df.storageLevel == StorageLevel.NONE
+    if (owned) df.cache()
+    try body(df) finally if (owned) df.unpersist()
   }
 
   // ---------------------------------------------------------------- Brandes
@@ -313,17 +335,9 @@ object GraphOps {
     * DataFrame joins. `fraction` applies only to the over-limit tier
     * (exact under the limit). */
   def betweennessAuto(spark: SparkSession, edgeDf: DataFrame,
-      driverEdgeLimit: Long = 5000000L, fraction: Double = 0.05): DataFrame = {
-    import spark.implicits._
-    val e = edgeDf.select("u", "v").cache()
-    try {
-      if (e.count() <= driverEdgeLimit)
-        betweennessOfEdges(spark, e.as[(Long, Long)].collect())
-      else betweennessDistributed(spark, e, fraction)
-    } finally e.unpersist() // both tiers consume `e` eagerly (collect /
-    // localCheckpoint'ed canon) — holding the block past return would
-    // just accumulate pinned memory across invocations
-  }
+      driverEdgeLimit: Long = 5000000L, fraction: Double = 0.05): DataFrame =
+    byTier(edgeDf, driverEdgeLimit)(betweennessOfEdges(spark, _))(
+      betweennessDistributed(spark, _, fraction))
 
   /** Brandes with NO driver-side edge materialization: BFS state lives in
     * (src, v)-keyed relations, partitioned across executors by key — the
@@ -457,54 +471,54 @@ object GraphOps {
   def betweennessSampled(spark: SparkSession, dir: String,
       fraction: Double, minShared: Int = 3,
       driverEdgeLimit: Long = 5000000L): DataFrame = {
-    import spark.implicits._
     val edgeDf = coPurchaseEdges(spark, dir, minShared).select("u", "v")
-    if (edgeDf.count() > driverEdgeLimit)
-      return betweennessDistributed(spark, edgeDf, fraction)
-        .withColumnRenamed("btw", "btw_est")
-    val edges = edgeDf.as[(Long, Long)].collect()
-    val g = buildCsr(edges)
-    val bc = spark.sparkContext.broadcast(g)
-    val n = g.verts.length
-    // Source selection is keyed by vertex ID through the SAME expression
-    // as the distributed tier ([[portableSourceKey]] < f·1e6) — a fraction
-    // must pick the identical source set on both sides of the
-    // driverEdgeLimit boundary, or the estimate jumps discontinuously
-    // across tiers. Evaluated as a one-job Spark expression so the two
-    // tiers share the hash implementation by construction.
-    val keepByIdx: Array[Boolean] = {
-      val keepIds = spark.createDataset(g.verts.toSeq).toDF("s")
-        .where(portableSourceKey(col("s")) < lit((fraction * 1000000).toLong))
-        .as[Long].collect().toSet
-      g.verts.map(keepIds.contains)
+    byTier(edgeDf, driverEdgeLimit) { edges =>
+      import spark.implicits._
+      val g = buildCsr(edges)
+      val bc = spark.sparkContext.broadcast(g)
+      val n = g.verts.length
+      // Source selection is keyed by vertex ID through the SAME expression
+      // as the distributed tier ([[portableSourceKey]] < f·1e6) — a fraction
+      // must pick the identical source set on both sides of the
+      // driverEdgeLimit boundary, or the estimate jumps discontinuously
+      // across tiers. Evaluated as a one-job Spark expression so the two
+      // tiers share the hash implementation by construction.
+      val keepByIdx: Array[Boolean] = {
+        val keepIds = spark.createDataset(g.verts.toSeq).toDF("s")
+          .where(portableSourceKey(col("s")) < lit((fraction * 1000000).toLong))
+          .as[Long].collect().toSet
+        g.verts.map(keepIds.contains)
+      }
+      val bcKeep = spark.sparkContext.broadcast(keepByIdx)
+      val keep = (s: Int) => bcKeep.value(s)
+      val credits = spark.sparkContext.parallelize(0 until n, 32)
+        .mapPartitions { sources =>
+          val csr = bc.value
+          val m = csr.edges.length
+          val nn = csr.verts.length
+          val acc = new Array[Double](m)
+          val dist = Array.fill(nn)(-1)
+          val sigma = new Array[Double](nn)
+          val delta = new Array[Double](nn)
+          val order = new Array[Int](nn)
+          val sink = new DenseCredits(acc)
+          sources.filter(keep)
+            .foreach(s => brandesOneSource(csr, s, sink, dist, sigma, delta, order))
+          Iterator.single(acc)
+        }
+        .treeReduce { (a, b) =>
+          var i = 0
+          while (i < a.length) { a(i) += b(i); i += 1 }
+          a
+        }
+      spark.createDataset(
+          g.edges.indices.map(e =>
+            (g.edges(e)._1, g.edges(e)._2, credits(e) / 2.0 / fraction)))
+        .toDF("u", "v", "btw_est")
+        .orderBy(col("btw_est").desc, col("u"), col("v"))
+    } { e =>
+      betweennessDistributed(spark, e, fraction).withColumnRenamed("btw", "btw_est")
     }
-    val bcKeep = spark.sparkContext.broadcast(keepByIdx)
-    val keep = (s: Int) => bcKeep.value(s)
-    val credits = spark.sparkContext.parallelize(0 until n, 32)
-      .mapPartitions { sources =>
-        val csr = bc.value
-        val m = csr.edges.length
-        val nn = csr.verts.length
-        val acc = new Array[Double](m)
-        val dist = Array.fill(nn)(-1)
-        val sigma = new Array[Double](nn)
-        val delta = new Array[Double](nn)
-        val order = new Array[Int](nn)
-        val sink = new DenseCredits(acc)
-        sources.filter(keep)
-          .foreach(s => brandesOneSource(csr, s, sink, dist, sigma, delta, order))
-        Iterator.single(acc)
-      }
-      .treeReduce { (a, b) =>
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      }
-    spark.createDataset(
-        g.edges.indices.map(e =>
-          (g.edges(e)._1, g.edges(e)._2, credits(e) / 2.0 / fraction)))
-      .toDF("u", "v", "btw_est")
-      .orderBy(col("btw_est").desc, col("u"), col("v"))
   }
 
   /** Distributed Brandes over an explicit undirected edge list. Tiered:
@@ -952,19 +966,58 @@ object GraphOps {
     *  - parallelism regime (small graphs): up to defaultParallelism
     *    partitions but never fewer than ~50k rows each, so a superstep
     *    neither serializes on one core nor schedules 32 near-empty tasks.
-    * Cap 20k keeps the count sane past the third decade.
-    *
-    * Callers also `sortWithinPartitions(key)` before caching: once the
-    * rank vector outgrows broadcast the per-superstep join is a
-    * SortMergeJoin, and a cached key-sorted layout satisfies its ordering
-    * requirement too — the big-side SORT (like the exchange) is paid once
-    * at build instead of every round. */
+    * Cap 20k keeps the count sane past the third decade. */
   private def staticParts(directedRows: Long, spark: SparkSession): Int = {
     val bySize = directedRows / 2000000L
     val byCpu = math.min(spark.sparkContext.defaultParallelism.toLong,
       directedRows / 50000L)
     math.max(1L, math.min(20000L, math.max(bySize, byCpu))).toInt
   }
+
+  /** The STATIC side of an iterative kernel — the relation every
+    * superstep joins on `key` — shuffled once, ever (the iterate-vs-static
+    * discipline, the q9n lesson of r13): cached pre-partitioned on the
+    * join key, so each round's join reads the in-memory layout instead of
+    * re-exchanging the edge list per superstep (plan evidence:
+    * plans/r13/q88_pagerank superstep_{before,after}.txt), over
+    * [[staticParts]]`(rows)` partitions. Sorted within partitions too:
+    * once the iterated vector outgrows broadcast the per-superstep join
+    * is a SortMergeJoin, and a cached key-sorted layout satisfies its
+    * ordering requirement — the big-side SORT, like the exchange, is paid
+    * once at build instead of every round. The caller unpersists it. */
+  private def keyedStatic(df: DataFrame, rows: Long, key: String): DataFrame =
+    df.repartition(staticParts(rows, df.sparkSession), col(key))
+      .sortWithinPartitions(key).cache()
+
+  /** Both directions of an undirected (u, v) edge list. */
+  private def bothWays(e: DataFrame): DataFrame =
+    e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+
+  /** The random-walk static side of [[pageRankOf]] and [[pprOf]]: every
+    * undirected edge of `e0` walked both ways as (src, dst, w = 1/deg(src)),
+    * keyed on src ([[keyedStatic]]); `eCnt` = rows of `e0`. */
+  private def rankWeights(e0: DataFrame, eCnt: Long): DataFrame = {
+    val e = bothWays(e0).select(col("u").as("src"), col("v").as("dst"))
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    keyedStatic(e.join(deg, "src")
+      .select(col("src"), col("dst"), (lit(1.0) / col("d")).as("w")), 2 * eCnt, "src")
+  }
+
+  /** The fixed-count superstep loop of the iterative kernels:
+    * `step(i, vector)` for i = 1..iters. The vector is `localCheckpoint`ed
+    * (eager: materializes AND truncates the plan) every SECOND superstep
+    * and on the last one: plan depth stays ≤ 2 supersteps — still O(1)
+    * analysis per round; a cache alone would let Catalyst re-analyze the
+    * whole nested lineage every superstep — while the job barriers halve,
+    * since each checkpoint job executes two supersteps. Blocks of
+    * superseded checkpoints are GC-reclaimed. The returned vector is
+    * materialized, so the caller may release its static side. */
+  private def supersteps(init: DataFrame, iters: Int)(
+      step: (Int, DataFrame) => DataFrame): DataFrame =
+    (1 to iters).foldLeft(init) { (vec, i) =>
+      val next = step(i, vec)
+      if (i % 2 == 0 || i == iters) next.localCheckpoint() else next
+    }
 
   /** [[pageRank]] over an explicit undirected (u, v) edge list — the
     * kernel surface ([[communitiesLpaOf]]/[[ssspOf]] discipline): any
@@ -973,35 +1026,12 @@ object GraphOps {
     * driver, not base-table rows). */
   private[graft] def pageRankOf(e0: DataFrame, iters: Int,
       damping: Double): DataFrame = {
-    val eCnt = e0.count()
-    val e = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
-      .select(col("u").as("src"), col("v").as("dst"))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // iterate-vs-static discipline (the q9n lesson, r13): the static edge
-    // relation is joined on src EVERY superstep — cache it pre-partitioned
-    // on the join key so the per-round join reads the in-memory layout
-    // instead of re-exchanging the full edge list 10× (plan evidence:
-    // plans/r13/q88_pagerank superstep_{before,after}.txt); partition
-    // count derives from the edge count ([[staticParts]]), never a local
-    // constant
-    val w = e.join(deg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("d")).as("w"))
-      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("src"))
-      .sortWithinPartitions("src")
-      .cache()
+    val w = rankWeights(e0, e0.count())
     val n = w.select("src").distinct().count()
-    // eager localCheckpoint: plan depth stays one superstep regardless of
-    // iteration count (blocks of superseded checkpoints are GC-reclaimed)
-    var pr = w.select(col("src").as("v")).distinct()
+    val pr0 = w.select(col("src").as("v")).distinct()
       .select(col("v"), lit(1.0 / n).as("r"))
       .localCheckpoint()
-    for (i <- 1 to iters) {
-      val next = pageRankStep(w, pr, n, damping)
-      // checkpoint every SECOND superstep (and the last): plan depth stays
-      // ≤ 2 supersteps — still O(1) analysis — while halving the number of
-      // job barriers; each checkpoint job simply executes two supersteps
-      pr = if (i % 2 == 0 || i == iters) next.localCheckpoint() else next
-    }
+    val pr = supersteps(pr0, iters)((_, pr) => pageRankStep(w, pr, n, damping))
     w.unpersist() // pr is materialized past the last superstep; w is done
     pr.select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
   }
@@ -1040,19 +1070,7 @@ object GraphOps {
     * next to the injected restart row. */
   private[graft] def pprOf(e0: DataFrame, iters: Int,
       damping: Double): DataFrame = {
-    val eCnt = e0.count()
-    // the filter sits in the cached static side `w`, so it runs once
-    val e = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
-      .where(col("u") =!= col("v"))
-      .select(col("u").as("src"), col("v").as("dst"))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // static side cached pre-partitioned on its per-superstep join key,
-    // scale-adaptive count (see pageRankOf — same r13 fix)
-    val w = e.join(deg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("d")).as("w"))
-      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("src"))
-      .sortWithinPartitions("src")
-      .cache()
+    val w = pprWeights(e0, e0.count())
     val seed = w.agg(min("src")).head.getLong(0)
     // SPARSE rank vector (r14): pr carries only vertices with NONZERO
     // rank; zeros are restored by ONE final left-outer against the vertex
@@ -1066,20 +1084,18 @@ object GraphOps {
     // in which order they merge. Bit-equality is therefore not guaranteed
     // by construction; it rests on the qa7 oracle matching, per fixture.
     val verts = w.select(col("src").as("v")).distinct().localCheckpoint()
-    var pr = e0.sparkSession.range(1)
+    val pr0 = e0.sparkSession.range(1)
       .select(lit(seed).as("v"), lit(1.0).as("r")).localCheckpoint()
-    for (i <- 1 to iters) {
+    val pr = supersteps(pr0, iters) { (i, pr) =>
       val stepped = pprStep(w, pr, seed, damping)
       // only superstep 1 can miss the seed (self-loops are filtered out
-      // of `e`, so mass(seed) needs a ranked in-neighbor, which every i ≥ 2
+      // of `w`, so mass(seed) needs a ranked in-neighbor, which every i ≥ 2
       // guarantees: the seed's neighbors hold mass > 0 from round 1 on);
       // its restart row is injected with the step's own arithmetic shape
-      val next =
-        if (i == 1) stepped.unionAll(e0.sparkSession.range(1).select(
-          lit(seed).as("v"),
-          (lit(1.0 - damping) * lit(1.0) + lit(damping) * lit(0.0)).as("r")))
-        else stepped
-      pr = if (i % 2 == 0 || i == iters) next.localCheckpoint() else next
+      if (i == 1) stepped.unionAll(e0.sparkSession.range(1).select(
+        lit(seed).as("v"),
+        (lit(1.0 - damping) * lit(1.0) + lit(damping) * lit(0.0)).as("r")))
+      else stepped
     }
     w.unpersist()
     verts.join(pr.withColumnRenamed("r", "pr_r"), Seq("v"), "left_outer")
@@ -1087,6 +1103,11 @@ object GraphOps {
         round(coalesce(col("pr_r"), lit(0.0)), 8).as("rank"))
       .orderBy("v")
   }
+
+  /** [[pprOf]]'s static side: [[rankWeights]] over the loop-free edges
+    * (the filter sits in the cached relation, so it runs once). */
+  private def pprWeights(e0: DataFrame, eCnt: Long): DataFrame =
+    rankWeights(e0.where(col("u") =!= col("v")), eCnt)
 
   /** One SPARSE personalized-PageRank superstep — mass flows only from
     * ranked vertices and only vertices RECEIVING mass emit a row (the
@@ -1126,21 +1147,12 @@ object GraphOps {
 
   /** [[communitiesLpa]] over an explicit undirected edge list. */
   private[graft] def communitiesLpaOf(e0: DataFrame, iters: Int): DataFrame = {
-    // static side cached pre-partitioned on v — lpaStep joins
-    // nbrs(v) = labels(vertex) every round (see pageRankOf, same r13 fix)
-    val eCnt = e0.count()
-    val nbrs = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
-      .select(col("u"), col("v"))
-      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("v")).sortWithinPartitions("v").cache()
-    var labels = nbrs.select(col("u").as("vertex")).distinct()
+    // lpaStep joins nbrs(v) = labels(vertex) every round (see keyedStatic)
+    val nbrs = keyedStatic(bothWays(e0), 2 * e0.count(), "v")
+    val labels0 = nbrs.select(col("u").as("vertex")).distinct()
       .withColumn("label", col("vertex"))
       .localCheckpoint()
-    for (i <- 1 to iters) {
-      val next = lpaStep(nbrs, labels)
-      // every-2nd-superstep checkpoint (see pageRank): half the job
-      // barriers at plan depth ≤ 2
-      labels = if (i % 2 == 0 || i == iters) next.localCheckpoint() else next
-    }
+    val labels = supersteps(labels0, iters)((_, l) => lpaStep(nbrs, l))
     nbrs.unpersist()
     labels.select(col("vertex"), col("label").as("community"))
       .orderBy("vertex")
@@ -1309,37 +1321,31 @@ object GraphOps {
       driverEdgeLimit: Long = 5000000L): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    // transient, not released here: when the caller already cached e0
-    // (GraphScale's edge list) this `.cache()` is that same entry
-    val cached = SharedViews.transient(e0.cache())
-    if (cached.count() <= driverEdgeLimit) {
-      val edges = cached.as[(Long, Long)].collect()
-      return spark.createDataset(driverBfs(edges, maxIters).toSeq)
+    byTier(e0, driverEdgeLimit) { edges =>
+      spark.createDataset(driverBfs(edges, maxIters).toSeq)
         .toDF("vertex", "dist")
         .select(col("vertex"), col("dist").cast("int").as("dist"))
         .orderBy("vertex")
+    } { e =>
+      // ssspStep joins frontier(vertex) = nbrs(u) every round (see
+      // keyedStatic; the tier gate just counted `e`, which is cached)
+      val nbrs = keyedStatic(bothWays(e), 2 * e.count(), "u")
+      val src = nbrs.agg(min("u")).head.getLong(0)
+      var dist = spark.range(1)
+        .select(lit(src).as("vertex"), lit(0).as("dist"))
+        .localCheckpoint()
+      var frontier = dist
+      var iter = 0
+      while (iter < maxIters && !frontier.isEmpty) {
+        frontier = ssspStep(nbrs, frontier, dist).localCheckpoint()
+        if (!frontier.isEmpty)
+          dist = dist.unionAll(frontier).localCheckpoint()
+        iter += 1
+      }
+      nbrs.unpersist()
+      dist.select(col("vertex"), col("dist").cast("int").as("dist"))
+        .orderBy("vertex")
     }
-    // static side cached pre-partitioned on u — ssspStep joins
-    // frontier(vertex) = nbrs(u) every round (see pageRankOf, same r13
-    // fix; the driver-tier gate just counted `cached`, reuse it)
-    val nbrs = cached
-      .unionAll(cached.select(col("v").as("u"), col("u").as("v")))
-      .repartition(staticParts(2 * cached.count(), spark), col("u")).sortWithinPartitions("u").cache()
-    val src = nbrs.agg(min("u")).head.getLong(0)
-    var dist = spark.range(1)
-      .select(lit(src).as("vertex"), lit(0).as("dist"))
-      .localCheckpoint()
-    var frontier = dist
-    var iter = 0
-    while (iter < maxIters && !frontier.isEmpty) {
-      frontier = ssspStep(nbrs, frontier, dist).localCheckpoint()
-      if (!frontier.isEmpty)
-        dist = dist.unionAll(frontier).localCheckpoint()
-      iter += 1
-    }
-    nbrs.unpersist()
-    dist.select(col("vertex"), col("dist").cast("int").as("dist"))
-      .orderBy("vertex")
   }
 
   /** One frontier-expansion BFS superstep — [[ssspOf]]'s distributed-tier
@@ -1358,12 +1364,7 @@ object GraphOps {
   private[graft] def driverBfs(edges: Array[(Long, Long)],
       maxIters: Int): Map[Long, Int] = {
     if (edges.isEmpty) return Map.empty
-    val adj = scala.collection.mutable.Map.empty[Long,
-      scala.collection.mutable.ArrayBuffer[Long]]
-    edges.foreach { case (u, v) =>
-      adj.getOrElseUpdate(u, scala.collection.mutable.ArrayBuffer.empty) += v
-      adj.getOrElseUpdate(v, scala.collection.mutable.ArrayBuffer.empty) += u
-    }
+    val adj = adjacency(edges)
     val src = adj.keysIterator.min
     val dist = scala.collection.mutable.Map(src -> 0)
     var frontier = List(src)
@@ -1403,12 +1404,10 @@ object GraphOps {
       driverEdgeLimit: Long = 5000000L): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    val cached = SharedViews.transient(e0.cache()) // see ssspOf
-    if (cached.count() <= driverEdgeLimit) {
-      val edges = cached.as[(Long, Long)].collect()
+    byTier(e0, driverEdgeLimit) { edges =>
       spark.createDataset(driverKCore(edges, k).toSeq)
         .toDF("vertex", "core_degree").orderBy("vertex")
-    } else {
+    } { cached =>
       var e = cached.localCheckpoint()
       var prev = -1L
       var cur = e.count()
@@ -1436,12 +1435,7 @@ object GraphOps {
     * total. Returns surviving vertex → within-core degree. */
   private[graft] def driverKCore(edges: Array[(Long, Long)],
       k: Int): Map[Long, Long] = {
-    val adj = scala.collection.mutable.Map.empty[Long,
-      scala.collection.mutable.ArrayBuffer[Long]]
-    edges.foreach { case (u, v) =>
-      adj.getOrElseUpdate(u, scala.collection.mutable.ArrayBuffer.empty) += v
-      adj.getOrElseUpdate(v, scala.collection.mutable.ArrayBuffer.empty) += u
-    }
+    val adj = adjacency(edges)
     val deg = scala.collection.mutable.Map.empty[Long, Long]
     adj.foreach { case (vx, ns) => deg(vx) = ns.size.toLong }
     val removed = scala.collection.mutable.Set.empty[Long]
@@ -1461,6 +1455,18 @@ object GraphOps {
     deg.iterator.collect {
       case (vx, d) if !removed(vx) => vx -> d
     }.toMap
+  }
+
+  /** Undirected adjacency lists of an edge list, for the driver tiers
+    * ([[driverBfs]], [[driverKCore]]). */
+  private def adjacency(
+      edges: Array[(Long, Long)]): mutable.Map[Long, mutable.ArrayBuffer[Long]] = {
+    val adj = mutable.Map.empty[Long, mutable.ArrayBuffer[Long]]
+    edges.foreach { case (u, v) =>
+      adj.getOrElseUpdate(u, mutable.ArrayBuffer.empty) += v
+      adj.getOrElseUpdate(v, mutable.ArrayBuffer.empty) += u
+    }
+    adj
   }
 
   /** q9n: HITS hubs & authorities over the BIPARTITE customer–part
@@ -1485,37 +1491,32 @@ object GraphOps {
 
   /** [[hits]] over an explicit bipartite (c, p) incidence relation. */
   private[graft] def hitsOf(inc: DataFrame, iters: Int): DataFrame = {
+    require(iters >= 1, s"HITS needs iters >= 1 (the authority vector is " +
+      s"the last round's), got $iters")
     // The static incidence is joined on c and on p EVERY round — shuffling
     // it 2×iters times is the dominant cost. Pre-partition it once per
-    // key (two cached copies): each round's joins then align with the
-    // rank vectors (groupBy output and localCheckpoint both preserve hash
-    // partitioning), so the only exchanges left are the two per-round
-    // TRANSPOSES (groupBy p after a c-join and vice versa), which no
-    // layout can avoid. This is the iterate-vs-static discipline every
-    // Pregel-style loop wants: shuffle the static side once, ever.
-    // r13: partition count derives from the incidence size (staticParts)
-    // instead of the session shuffle width — a bare repartition(col) pins
-    // spark.sql.shuffle.partitions slices exempt from AQE coalescing,
-    // which at fixture scale costs pure task scheduling (the q88 lesson)
-    val incParts = staticParts(inc.count(), inc.sparkSession)
-    val incC = inc.repartition(incParts, col("c")).sortWithinPartitions("c").cache()
-    val incP = inc.repartition(incParts, col("p")).sortWithinPartitions("p").cache()
-    var hub = incC.select(col("c")).distinct()
+    // key (two cached copies, see keyedStatic): each round's joins then
+    // align with the rank vectors (groupBy output and localCheckpoint both
+    // preserve hash partitioning), so the only exchanges left are the two
+    // per-round TRANSPOSES (groupBy p after a c-join and vice versa), which
+    // no layout can avoid.
+    val incRows = inc.count()
+    val incC = keyedStatic(inc, incRows, "c")
+    val incP = keyedStatic(inc, incRows, "p")
+    val hub0 = incC.select(col("c")).distinct()
       .withColumn("h", lit(1.0)).localCheckpoint()
     // A broadcast tier for the rank vector was measured and REJECTED —
     // broadcasting the lazy mid-round aggregates serializes each round
     // behind a driver-side broadcast build, and the transpose exchange
-    // remains either way. Checkpoint every SECOND round (the q88
-    // cadence: plan depth ≤ 2, half the job barriers).
+    // remains either way.
     var auth: DataFrame = null
-    for (i <- 1 to iters) {
+    val hub = supersteps(hub0, iters) { (i, hub) =>
       val a0 = hitsAuthStep(incC, hub)
       // auth stays lazy inside the hub job except on the last round,
       // where it is materialized for the output
       val authStep = if (i == iters) { auth = a0.localCheckpoint(); auth }
                      else a0
-      val next = hitsHubStep(incP, authStep)
-      hub = if (i % 2 == 0 || i == iters) next.localCheckpoint() else next
+      hitsHubStep(incP, authStep)
     }
     incC.unpersist(); incP.unpersist() // results live in checkpoints
     val hn = hub.agg(sqrt(sum(col("h") * col("h"))).as("nrm"))
@@ -1539,11 +1540,12 @@ object GraphOps {
 
   /** Superstep-1 relations of the ITERATIVE graph faces (q88 PageRank,
     * qa7 PPR, q8j LPA, q8z SSSP's distributed tier, q9n HITS' two
-    * half-steps), built from the SAME step functions the loops run — the
-    * per-superstep plan-audit surface. The loop faces' own explained plans
-    * are useless for this: `localCheckpoint` truncates lineage (by
-    * design — O(1) analysis per round), so the face's final plan shows a
-    * checkpoint scan, not the superstep. Each entry here is ONE loop-body
+    * half-steps), built from the SAME step functions and static-side
+    * builders the loops run — the per-superstep plan-audit surface. The
+    * loop faces' own explained plans are useless for this:
+    * `localCheckpoint` truncates lineage (by design — O(1) analysis per
+    * round), so the face's final plan shows a checkpoint scan, not the
+    * superstep. Each entry here is ONE loop-body
     * application over the real static relations and an un-checkpointed
     * initial vector, so the dumped plan is exactly what every iteration
     * compiles to (modulo the checkpoint scan replacing the previous
@@ -1552,42 +1554,31 @@ object GraphOps {
       dir: String): Seq[(String, DataFrame)] = {
     val e0 = coPurchaseEdges(spark, dir, 3).select("u", "v")
     val eCnt = e0.count()
-    val e = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
-      .select(col("u").as("src"), col("v").as("dst"))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // static sides mirror the kernels' r13 shape (repartition on the
-    // per-superstep join key + cache) so the dumped plan shows the loop's
+    // the static sides are cached, so the dumped plan shows the loop's
     // steady state: the join reads the keyed InMemoryRelation with no
     // fresh exchange above it. The returned plans read them lazily, so
     // they are transients.
-    def static(df: DataFrame): DataFrame = SharedViews.transient(df.cache())
-    val w = static(e.join(deg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("d")).as("w"))
-      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("src")).sortWithinPartitions("src"))
+    def static(df: DataFrame): DataFrame = SharedViews.transient(df)
+    val w = static(rankWeights(e0, eCnt))
     val verts = w.select(col("src").as("v")).distinct().sortWithinPartitions("v")
     val pr0 = verts.select(col("v"), lit(1.0).as("r"))
-    val nbrs = static(e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
-      .select(col("u"), col("v"))
-      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("v")).sortWithinPartitions("v"))
-    // sssp's static side is keyed on u (frontier joins nbrs("u"))
-    val nbrsU = static(e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
-      .select(col("u"), col("v"))
-      .repartition(staticParts(2 * eCnt, e0.sparkSession), col("u")).sortWithinPartitions("u"))
+    val nbrs = static(keyedStatic(bothWays(e0), 2 * eCnt, "v"))
     val labels0 = nbrs.select(col("u").as("vertex")).distinct()
       .withColumn("label", col("vertex"))
     val dist0 = spark.range(1)
       .select(lit(0L).as("vertex"), lit(0).as("dist"))
     val inc = incidence(spark, dir)
-    val incParts = staticParts(inc.count(), inc.sparkSession)
-    val incC = static(inc.repartition(incParts, col("c")).sortWithinPartitions("c"))
-    val incP = static(inc.repartition(incParts, col("p")).sortWithinPartitions("p"))
+    val incRows = inc.count()
+    val incC = static(keyedStatic(inc, incRows, "c"))
+    val incP = static(keyedStatic(inc, incRows, "p"))
     val hub0 = incC.select(col("c")).distinct().withColumn("h", lit(1.0))
     Seq(
       "q88_pagerank superstep" -> pageRankStep(w, pr0, 1000L, 0.85),
-      "qa7_ppr superstep" -> pprStep(w, pr0, 0L, 0.85),
+      "qa7_ppr superstep" -> pprStep(static(pprWeights(e0, eCnt)), pr0, 0L, 0.85),
       "q8j_lpa superstep" -> lpaStep(nbrs, labels0),
       "q8z_sssp superstep (distributed tier)" ->
-        ssspStep(nbrsU, dist0, dist0.select(col("vertex"), col("dist"))),
+        ssspStep(static(keyedStatic(bothWays(e0), 2 * eCnt, "u")), dist0,
+          dist0.select(col("vertex"), col("dist"))),
       "q9n_hits auth half-step" -> hitsAuthStep(incC, hub0),
       "q9n_hits hub half-step" ->
         hitsHubStep(incP, hitsAuthStep(incC, hub0)))

@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 
@@ -286,6 +289,158 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
       assert(got.map(_._1).distinct.size == got.size,
         s"iters=$iters: one row per vertex expected, got $got")
       assert(got == ranks(loopFree, iters), s"iters=$iters")
+    }
+  }
+
+  test("LPA resolves a two-clique bridge graph into the two cliques") {
+    import spark.implicits._
+    def clique(vs: Seq[Long]) =
+      for { a <- vs; b <- vs if a < b } yield (a, b)
+    val edges = (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(10L, 11L, 12L, 13L)) ++
+      Seq((4L, 10L))).toDF("u", "v")
+    val got = GraphOps.communitiesLpaOf(edges, 10).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got(1L) == got(2L) && got(2L) == got(3L) && got(3L) == got(4L))
+    assert(got(10L) == got(11L) && got(11L) == got(12L) && got(12L) == got(13L))
+    assert(got(1L) != got(10L), "bridge must not merge the cliques")
+  }
+
+  test("LPA partition refines connected components, deterministically") {
+    val lpa1 = GraphOps.communitiesLpa(spark, sfDir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    val lpa2 = GraphOps.communitiesLpa(spark, sfDir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    assert(lpa1.sameElements(lpa2), "reruns must be bit-stable")
+    val comp = GraphOps.connectedComponents(spark, sfDir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val lpaMap = lpa1.toMap
+    assert(lpaMap.keySet == comp.keySet, "same vertex set as CC")
+    // every LPA community lives inside one connected component
+    lpa1.groupBy(_._2).foreach { case (label, members) =>
+      val comps = members.map(m => comp(m._1)).distinct
+      assert(comps.length == 1, s"community $label spans components $comps")
+    }
+  }
+
+  test("hits scores are L2-normalized per role with positive mass") {
+    val h = GraphOps.hits(spark, sfDir).cache()
+    val norms = h.groupBy("role")
+      .agg(sum(col("score") * col("score")).as("n2"), min("score").as("mn"))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    Seq("hub", "authority").foreach { role =>
+      val (n2, mn) = norms(role)
+      assert(math.abs(n2 - 1.0) < 1e-6, s"$role not L2-normalized: $n2")
+      assert(mn >= 0.0, s"$role has negative score")
+    }
+    h.unpersist()
+  }
+
+  test("tiered kernels keep the caller's cache and leave none of their own") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+    // cached non-checkpoint RDDs: a distributed tier's localCheckpoints
+    // are released by the ContextCleaner, not by the kernel
+    def cachedRdds: Map[Int, String] = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id -> rdd.toString }.toMap
+    for (limit <- Seq(5000000L, 0L)) {
+      val kernels: Seq[(String, DataFrame => DataFrame)] = Seq(
+        "componentsAuto" -> (GraphOps.componentsAuto(spark, _, limit)),
+        "betweennessAuto" -> (GraphOps.betweennessAuto(spark, _, limit, 1.0)),
+        "ssspOf" -> (GraphOps.ssspOf(_, 50, limit)),
+        "kCoreOf" -> (GraphOps.kCoreOf(_, 2, 30, limit)))
+      kernels.foreach { case (name, kernel) =>
+        val callers = edges.toDF("u", "v").cache()
+        callers.count()
+        kernel(callers).collect()
+        assert(callers.storageLevel != StorageLevel.NONE,
+          s"$name (driverEdgeLimit $limit) released the caller's cache")
+        callers.unpersist()
+        val before = cachedRdds
+        kernel(edges.toDF("u", "v")).collect()
+        val left = cachedRdds -- before.keySet
+        assert(left.isEmpty,
+          s"$name (driverEdgeLimit $limit) left cached: ${left.values.mkString("; ")}")
+      }
+    }
+  }
+
+  test("hitsOf rejects iters < 1") {
+    import spark.implicits._
+    val inc = Seq((1L, 10L), (2L, 10L)).toDF("c", "p")
+    intercept[IllegalArgumentException](GraphOps.hitsOf(inc, 0))
+  }
+
+  test("iterative kernels match a driver-side iteration at iters 1, 2 and 3") {
+    import spark.implicits._
+    // irregular and far from converged after 3 rounds, so every iteration
+    // count gives a different answer (asserted below)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (2L, 7L), (7L, 8L), (3L, 8L), (8L, 9L))
+    val nbrs: Map[Long, Seq[Long]] = (edges ++ edges.map(_.swap))
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    val verts = nbrs.keys.toSeq.sorted
+    val d = 0.85
+    // pr'(v) = restart(v) + d · Σ_{u ∈ N(v)} pr(u) / deg(u)
+    def walk(pr0: Map[Long, Double], restart: Long => Double,
+        iters: Int): Map[Long, Double] =
+      (1 to iters).foldLeft(pr0) { (pr, _) =>
+        verts.map(v => v -> (restart(v) +
+          d * nbrs(v).map(u => pr(u) / nbrs(u).size).sum)).toMap
+      }
+    val n = verts.size.toDouble
+    def pageRank(iters: Int) =
+      walk(verts.map(_ -> 1.0 / n).toMap, _ => (1.0 - d) / n, iters)
+    val seed = verts.head
+    def ppr(iters: Int) = walk(verts.map(v => v -> (if (v == seed) 1.0 else 0.0)).toMap,
+      v => if (v == seed) 1.0 - d else 0.0, iters)
+    // synchronous LPA: the most frequent neighbor label, ties to the smallest
+    def lpa(iters: Int): Map[Long, Long] =
+      (1 to iters).foldLeft(verts.map(v => v -> v).toMap) { (label, _) =>
+        verts.map { v =>
+          val counts = nbrs(v).groupBy(label).map { case (l, us) => l -> us.size }
+          v -> counts.toSeq.minBy { case (l, c) => (-c, l) }._1
+        }.toMap
+      }
+    val inc = Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 11L), (3L, 12L),
+      (4L, 12L), (4L, 13L), (5L, 13L), (5L, 10L))
+    def hits(iters: Int): Map[(String, Long), Double] = {
+      val (hub, auth) = (1 to iters).foldLeft(
+          (inc.map(_._1).distinct.map(_ -> 1.0).toMap, Map.empty[Long, Double])) {
+        case ((h, _), _) =>
+          val a = inc.groupBy(_._2).map { case (p, cs) => p -> cs.map(c => h(c._1)).sum }
+          (inc.groupBy(_._1).map { case (c, ps) => c -> ps.map(p => a(p._2)).sum }, a)
+      }
+      def unit(m: Map[Long, Double]) = {
+        val nrm = math.sqrt(m.values.map(x => x * x).sum)
+        m.map { case (k, x) => k -> x / nrm }
+      }
+      unit(hub).map { case (c, x) => ("hub", c) -> x } ++
+        unit(auth).map { case (p, x) => ("authority", p) -> x }
+    }
+
+    val edgeDf = edges.toDF("u", "v")
+    def ranks(df: DataFrame): Map[Long, Double] =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def close[K](got: Map[K, Double], want: Map[K, Double], what: String): Unit = {
+      assert(got.keySet == want.keySet, what)
+      want.foreach { case (k, x) =>
+        assert(math.abs(got(k) - x) < 1e-8, s"$what at $k: got ${got(k)}, want $x")
+      }
+    }
+    for (iters <- 1 to 3) {
+      close(ranks(GraphOps.pageRankOf(edgeDf, iters, d)), pageRank(iters),
+        s"pageRankOf iters=$iters")
+      close(ranks(GraphOps.pprOf(edgeDf, iters, d)), ppr(iters), s"pprOf iters=$iters")
+      assert(GraphOps.communitiesLpaOf(edgeDf, iters).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap == lpa(iters),
+        s"communitiesLpaOf iters=$iters")
+      close(GraphOps.hitsOf(inc.toDF("c", "p"), iters).collect()
+          .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap,
+        hits(iters), s"hitsOf iters=$iters")
+    }
+    // the references themselves tell the three iteration counts apart
+    Seq[Int => Any](pageRank, ppr, lpa, hits).foreach { ref =>
+      assert((1 to 3).map(ref).distinct.size == 3)
     }
   }
 }

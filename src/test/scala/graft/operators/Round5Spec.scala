@@ -203,36 +203,6 @@ class Round5Spec extends AnyFunSuite with SparkSuite {
     assert(got == brute, s"missing=${(brute -- got).take(5)} extra=${(got -- brute).take(5)}")
   }
 
-  test("LPA resolves a two-clique bridge graph into the two cliques") {
-    import spark.implicits._
-    def clique(vs: Seq[Long]) =
-      for { a <- vs; b <- vs if a < b } yield (a, b)
-    val edges = (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(10L, 11L, 12L, 13L)) ++
-      Seq((4L, 10L))).toDF("u", "v")
-    val got = GraphOps.communitiesLpaOf(edges, 10).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got(1L) == got(2L) && got(2L) == got(3L) && got(3L) == got(4L))
-    assert(got(10L) == got(11L) && got(11L) == got(12L) && got(12L) == got(13L))
-    assert(got(1L) != got(10L), "bridge must not merge the cliques")
-  }
-
-  test("LPA partition refines connected components, deterministically") {
-    val lpa1 = GraphOps.communitiesLpa(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-    val lpa2 = GraphOps.communitiesLpa(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-    assert(lpa1.sameElements(lpa2), "reruns must be bit-stable")
-    val comp = GraphOps.connectedComponents(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lpaMap = lpa1.toMap
-    assert(lpaMap.keySet == comp.keySet, "same vertex set as CC")
-    // every LPA community lives inside one connected component
-    lpa1.groupBy(_._2).foreach { case (label, members) =>
-      val comps = members.map(m => comp(m._1)).distinct
-      assert(comps.length == 1, s"community $label spans components $comps")
-    }
-  }
-
   test("weighted sample equals the driver-side A-Res recompute") {
     val docs = Tables(spark, sfDir, "documents")
       .select("doc_id", "source").collect()

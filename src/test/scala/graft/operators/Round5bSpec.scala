@@ -5,8 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkSuite, Tables}
 
 /** Round-5 second batch: SCD2 interval algebra, entity-resolution
-  * transitivity, the Morton key's bit math, and HITS' bipartite
-  * normalization invariants.
+  * transitivity and the Morton key's bit math.
   */
 class Round5bSpec extends AnyFunSuite with SparkSuite {
 
@@ -189,18 +188,5 @@ class Round5bSpec extends AnyFunSuite with SparkSuite {
       assert(lastByUser((r.getAs[Long]("user_id"), r.getAs[Long]("event_id"))))
     }
     s.unpersist()
-  }
-
-  test("hits scores are L2-normalized per role with positive mass") {
-    val h = GraphOps.hits(spark, sfDir).cache()
-    val norms = h.groupBy("role")
-      .agg(sum(col("score") * col("score")).as("n2"), min("score").as("mn"))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    Seq("hub", "authority").foreach { role =>
-      val (n2, mn) = norms(role)
-      assert(math.abs(n2 - 1.0) < 1e-6, s"$role not L2-normalized: $n2")
-      assert(mn >= 0.0, s"$role has negative score")
-    }
-    h.unpersist()
   }
 }
