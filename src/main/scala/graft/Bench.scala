@@ -1,10 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Round-over-round attribution is ARTIFACT-NATIVE: the committed
     // bench_detail.json from the previous round is read BEFORE this run
     // overwrites it, and every shared face gets `prev`/`ratio`/`verdict`
@@ -48,36 +46,20 @@ object Bench {
       }
     } catch { case _: Throwable =>
       (Map.empty[String, Double], Map.empty[String, Double]) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // many-small-files sources (binaryFile staging, streaming file
-      // sinks): the default 4 MB per-file open cost packs ~32 tiny files
-      // per task, so a 500k-file corpus plans 15k tasks and q84 goes
-      // scheduling-bound (measured 17.6 s at sf10). 256 KB packs ~500
-      // files/task (~1k tasks); parquet scans are unaffected (big files).
-      .config("spark.sql.files.openCostInBytes", 262144L)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warm-up (untimed): parquet footers + codegen/JIT, so the first timed
     // query isn't charged the session's fixed costs.
     try SparkEntry.queries("q01_groupavg_brand_flag")(spark, sfDir).count()
     catch { case _: Throwable => }
+    // failures are recorded as -1, never as a (misleadingly fast) timing;
+    // a face's first failure cause lands in bench_detail.json
+    val errors = scala.collection.mutable.Map.empty[String, String]
+    def seconds(name: String)(run: => Long): Double =
+      FaceRunner.timed("bench", name)(run)
+        .fold(cause => { errors.getOrElseUpdate(name, cause); -1.0 }, _._1)
+    val faces = FaceRunner.select(SparkEntry.queries, Nil)
     def runOnce(): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        // failures are recorded as -1, never as a (misleadingly fast) timing
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }.toMap
+      faces.map { case (name, fn) => name -> seconds(name)(fn(spark, sfDir).count()) }.toMap
     // One cold pass + N warm passes (default 3), per-query MINIMUM over
     // the WARM passes: single-run timings on a shared host swing multiples
     // from neighbor contention (observed 1.2s <-> 21.9s for an unchanged
@@ -177,11 +159,7 @@ object Bench {
     }.sorted
     val soloSamples: Map[String, Seq[Double]] = sweepFlagged.map { name =>
       val fn = SparkEntry.queries(name)
-      name -> (1 to soloReps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
-      }
+      name -> (1 to soloReps).map(_ => seconds(name)(fn(spark, sfDir).count()))
     }.toMap
     val soloWarm: Map[String, Double] = soloSamples.collect {
       case (name, ss) if ss.forall(_ >= 0) => name -> ss.min
@@ -279,11 +257,16 @@ object Bench {
           ",\"warm_samples\":" + warms.map(w =>
             fmt(w.getOrElse(k, -1.0))).mkString("[", ",", "]") +
           ",\"prev\":" + prevS + ",\"ratio\":" + ratioS +
-          ",\"verdict\":" + verdictS + soloS + "}" }
+          ",\"verdict\":" + verdictS + soloS +
+          errors.get(k).fold("")(c => ",\"error\":" + FaceRunner.jsonString(c)) + "}" }
       .mkString("{", ",", "}")
+    // the confs the run was under, so a perturbed-conf run cannot pass
+    // for a normal one
+    val extraConf = GraftSession.extra.toSeq.sorted.map { case (k, v) =>
+      FaceRunner.jsonString(k) + ":" + FaceRunner.jsonString(v) }.mkString("{", ",", "}")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"),
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","median_vs_prev":${fmt(medianRatio)},"n_regression":$nRegression,"prev_detail":"$prevPath","queries":$detail,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","median_vs_prev":${fmt(medianRatio)},"n_regression":$nRegression,"prev_detail":"$prevPath","queries":$detail,"sf":"$sfDir","cpus":${GraftSession.cpus},"extra_conf":$extraConf}""")
     catch { case _: Throwable => }
     // The stdout line is fragile under wrappers (sbt's LoggedOutput
     // prefixed it with "[info] " and appended "[success] ..." — the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,56 +7,24 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated name prefixes (dev iteration only —
     // the driver always runs the full surface)
-    val only: String => Boolean = args.lift(2) match {
-      case Some(p) => val ps = p.split(","); n => ps.exists(n.startsWith)
-      case None => _ => true
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // many-small-files sources (binaryFile staging, streaming file
-      // sinks): the default 4 MB per-file open cost packs ~32 tiny files
-      // per task, so a 500k-file corpus plans 15k tasks and q84 goes
-      // scheduling-bound (measured 17.6 s at sf10). 256 KB packs ~500
-      // files/task (~1k tasks); parquet scans are unaffected (big files).
-      .config("spark.sql.files.openCostInBytes", 262144L)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val faces = FaceRunner.select(SparkEntry.queries, FaceRunner.prefixes(args.lift(2)))
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     def deleteRec(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(deleteRec)
       f.delete(): Unit
     }
-    SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
+    faces.foreach { case (name, fn) =>
       // pre-delete so a failure can never leave a stale (older-run) result
       // behind for the driver's compare to misread as current
       val target = new java.io.File(s"$outDir/$name")
       if (target.exists()) deleteRec(target)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        if (target.exists()) deleteRec(target)
-      }
+      val result = FaceRunner.timed("verify", name)(
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      if (result.isLeft && target.exists()) deleteRec(target)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${FaceRunner.jsonString(k)}: ${FaceRunner.jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

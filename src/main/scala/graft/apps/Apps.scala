@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.GraftSession
 import graft.operators.{Baskets, GraphOps}
 import graft.sources.DelimitedText
 
@@ -32,11 +33,7 @@ object Apps {
   /** Shared session factory for `main` entry points: reuses an active
     * session (tests) or builds the standard local one (spark-submit). */
   private[apps] def session(): SparkSession =
-    SparkSession.builder()
-      .appName("graft-apps")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    GraftSession.build(GraftSession.engine + ("spark.app.name" -> "graft-apps"))
 
   /** The reference's number rendering (`task1.scala:83`):
     * `"%.11f".format(avg).toDouble` — 11-dp rounding, then Scala's Double

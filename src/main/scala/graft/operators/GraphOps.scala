@@ -129,7 +129,7 @@ object GraphOps {
       val vertices = edges.iterator.flatMap(x => Iterator(x._1, x._2)).toArray.distinct
       spark.createDataset(unionFind(vertices, edges).toSeq)
         .toDF("vertex", "component").orderBy("vertex")
-    }(componentsOfEdges)
+    }(componentsOf)
 
   /** Min-label propagation with pointer jumping over an arbitrary (u, v)
     * edge DataFrame. Plain neighbor-min propagation needs O(diameter)
@@ -139,38 +139,41 @@ object GraphOps {
     * diameter) rounds. `localCheckpoint` truncates the per-round lineage so
     * round N+1 doesn't re-execute rounds 1..N. */
   def componentsOfEdges(edgeDf: DataFrame): DataFrame =
-    withCache(edgeDf.select("u", "v")) { e =>
-      // the propagation joins nbrs(v) = labels(vertex) every round
-      // (see keyedStatic)
-      val nbrs = keyedStatic(bothWays(e), 2 * e.count(), "v")
-      var labels = nbrs.select(col("u").as("vertex")).distinct()
-        .withColumn("component", col("vertex"))
+    withCache(edgeDf.select("u", "v"))(e => componentsOf(e, e.count()))
+
+  /** [[componentsOfEdges]] over the cached (u, v) relation `e` of `m` edges. */
+  private def componentsOf(e: DataFrame, m: Long): DataFrame = {
+    // the propagation joins nbrs(v) = labels(vertex) every round
+    // (see keyedStatic)
+    val nbrs = keyedStatic(bothWays(e), 2 * m, "v")
+    var labels = nbrs.select(col("u").as("vertex")).distinct()
+      .withColumn("component", col("vertex"))
+      .localCheckpoint()
+    // Labels only ever decrease under min-propagation, so Σ labels strictly
+    // decreases until the fixpoint — convergence is one cheap aggregate per
+    // round instead of a change-detection join.
+    def labelSum(df: DataFrame): java.math.BigDecimal = // decimal: no overflow on huge ids
+      df.agg(sum(col("component").cast("decimal(38,0)"))).head.getDecimal(0)
+    var prevSum: java.math.BigDecimal = null
+    var curSum = labelSum(labels)
+    while (curSum != prevSum) {
+      // label(v) ← min(label(v), min over neighbors w of label(w))
+      val nmin = nbrs.join(labels, nbrs("v") === labels("vertex"))
+        .groupBy(nbrs("u").as("vertex")).agg(min("component").as("nl"))
+      val l1 = labels.as("l").join(nmin.as("n"), Seq("vertex"), "left_outer")
+        .select(col("vertex"),
+          least(col("component"), coalesce(col("nl"), col("component"))).as("component"))
+      // pointer jump: label(v) ← label(label(v))
+      val l2 = l1.as("a").join(l1.as("b"), col("a.component") === col("b.vertex"))
+        .select(col("a.vertex").as("vertex"), col("b.component").as("component"))
         .localCheckpoint()
-      // Labels only ever decrease under min-propagation, so Σ labels strictly
-      // decreases until the fixpoint — convergence is one cheap aggregate per
-      // round instead of a change-detection join.
-      def labelSum(df: DataFrame): java.math.BigDecimal = // decimal: no overflow on huge ids
-        df.agg(sum(col("component").cast("decimal(38,0)"))).head.getDecimal(0)
-      var prevSum: java.math.BigDecimal = null
-      var curSum = labelSum(labels)
-      while (curSum != prevSum) {
-        // label(v) ← min(label(v), min over neighbors w of label(w))
-        val nmin = nbrs.join(labels, nbrs("v") === labels("vertex"))
-          .groupBy(nbrs("u").as("vertex")).agg(min("component").as("nl"))
-        val l1 = labels.as("l").join(nmin.as("n"), Seq("vertex"), "left_outer")
-          .select(col("vertex"),
-            least(col("component"), coalesce(col("nl"), col("component"))).as("component"))
-        // pointer jump: label(v) ← label(label(v))
-        val l2 = l1.as("a").join(l1.as("b"), col("a.component") === col("b.vertex"))
-          .select(col("a.vertex").as("vertex"), col("b.component").as("component"))
-          .localCheckpoint()
-        prevSum = curSum
-        curSum = labelSum(l2)
-        labels = l2
-      }
-      nbrs.unpersist() // labels is a checkpoint
-      labels.orderBy("vertex")
+      prevSum = curSum
+      curSum = labelSum(l2)
+      labels = l2
     }
+    nbrs.unpersist() // labels is a checkpoint
+    labels.orderBy("vertex")
+  }
 
   /** The tier gate of the tiered graph kernels ([[componentsAuto]],
     * [[betweennessAuto]], [[betweennessSampled]], [[ssspOf]],
@@ -178,17 +181,19 @@ object GraphOps {
     * `driverEdgeLimit` edges run `driver` on the collected edge list —
     * the collect itself is the driver OOM at 100× edge counts, so above
     * the limit `distributed` runs on the relation, which never leaves the
-    * executors. The relation is cached for the count and the tier's read
+    * executors, and gets its edge count so it need not count again. The
+    * relation is cached for the count and the tier's read
     * and released on return ([[withCache]]): both tiers consume it
     * eagerly (collect, localCheckpoint, or a static side of their own). */
   private def byTier(edgeDf: DataFrame, driverEdgeLimit: Long)(
       driver: Array[(Long, Long)] => DataFrame)(
-      distributed: DataFrame => DataFrame): DataFrame =
+      distributed: (DataFrame, Long) => DataFrame): DataFrame =
     withCache(edgeDf.select("u", "v")) { e =>
       val spark = e.sparkSession
       import spark.implicits._
-      if (e.count() <= driverEdgeLimit) driver(e.as[(Long, Long)].collect())
-      else distributed(e)
+      val m = e.count()
+      if (m <= driverEdgeLimit) driver(e.as[(Long, Long)].collect())
+      else distributed(e, m)
     }
 
   /** `body` over `df` cached, where this call owns only the cache entry it
@@ -337,7 +342,7 @@ object GraphOps {
   def betweennessAuto(spark: SparkSession, edgeDf: DataFrame,
       driverEdgeLimit: Long = 5000000L, fraction: Double = 0.05): DataFrame =
     byTier(edgeDf, driverEdgeLimit)(betweennessOfEdges(spark, _))(
-      betweennessDistributed(spark, _, fraction))
+      (e, _) => betweennessDistributed(spark, e, fraction))
 
   /** Brandes with NO driver-side edge materialization: BFS state lives in
     * (src, v)-keyed relations, partitioned across executors by key — the
@@ -516,7 +521,7 @@ object GraphOps {
             (g.edges(e)._1, g.edges(e)._2, credits(e) / 2.0 / fraction)))
         .toDF("u", "v", "btw_est")
         .orderBy(col("btw_est").desc, col("u"), col("v"))
-    } { e =>
+    } { (e, _) =>
       betweennessDistributed(spark, e, fraction).withColumnRenamed("btw", "btw_est")
     }
   }
@@ -1326,10 +1331,10 @@ object GraphOps {
         .toDF("vertex", "dist")
         .select(col("vertex"), col("dist").cast("int").as("dist"))
         .orderBy("vertex")
-    } { e =>
+    } { (e, m) =>
       // ssspStep joins frontier(vertex) = nbrs(u) every round (see
-      // keyedStatic; the tier gate just counted `e`, which is cached)
-      val nbrs = keyedStatic(bothWays(e), 2 * e.count(), "u")
+      // keyedStatic)
+      val nbrs = keyedStatic(bothWays(e), 2 * m, "u")
       val src = nbrs.agg(min("u")).head.getLong(0)
       var dist = spark.range(1)
         .select(lit(src).as("vertex"), lit(0).as("dist"))
@@ -1407,10 +1412,10 @@ object GraphOps {
     byTier(e0, driverEdgeLimit) { edges =>
       spark.createDataset(driverKCore(edges, k).toSeq)
         .toDF("vertex", "core_degree").orderBy("vertex")
-    } { cached =>
+    } { (cached, m) =>
       var e = cached.localCheckpoint()
       var prev = -1L
-      var cur = e.count()
+      var cur = m
       var rounds = 0
       while (cur != prev && rounds < maxRounds) {
         val deg = e.select(explode(array(col("u"), col("v"))).as("vx"))

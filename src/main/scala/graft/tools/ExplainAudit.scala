@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for the flagship queries so the
   * pushdown/broadcast/codegen properties are auditable. Run:
   *   sbt "runMain graft.tools.ExplainAudit /root/testdata/sf0.01"
@@ -9,11 +7,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     Seq("q01_groupavg_brand_flag", "q03_filter_eq", "q21_freq_pairs",
       "q46_ann_brute", "q49_ann_native", "q60_events_hourly",

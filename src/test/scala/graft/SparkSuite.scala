@@ -12,16 +12,13 @@ trait SparkSuite { self: Suite =>
 
 object SparkSuite {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val s = GraftSession.build(GraftSession.engine ++ Map(
+      "spark.master" -> "local[4]",
+      "spark.app.name" -> "graft-test",
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString,
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.ui.enabled" -> "false"))
     s.sparkContext.setLogLevel("WARN")
     s
   }

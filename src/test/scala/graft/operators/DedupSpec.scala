@@ -221,4 +221,33 @@ class DedupSpec extends AnyFunSuite with SparkSuite {
     val after = Dedup.minhashSignatures(spark, sfDir).collect().toSeq
     assert(before == after)
   }
+
+  test("group-aware split never puts a near-dup pair across the wall") {
+    val rows = Sampling.groupAwareSplit(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+    val split = rows.map(r => (r._1, r._3)).toMap
+    // every LSH near-dup pair lands in ONE split — the guarantee q57's
+    // independent per-doc hashing cannot give
+    val pairs = Dedup.minhashPairs(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.nonEmpty)
+    pairs.foreach { case (a, b) =>
+      assert(split(a) == split(b), s"near-dups $a,$b straddle splits")
+    }
+    // group members share the split by construction too
+    rows.groupBy(_._2).foreach { case (g, members) =>
+      assert(members.map(_._3).distinct.length == 1, s"group $g splits")
+    }
+    // ungrouped docs key on their own id — identical arithmetic to q57,
+    // so their assignment matches the plain hash split
+    val grouped = rows.filter(r => r._2 != r._1 ||
+      rows.exists(o => o._2 == r._1 && o._1 != r._1)).map(_._1).toSet
+    val plain = Sampling.trainValTest(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toMap
+    rows.filterNot(r => grouped(r._1)).foreach { r =>
+      assert(r._3 == plain(r._1), s"ungrouped doc ${r._1} diverges from q57")
+    }
+    // and the split is a partition of the corpus
+    assert(rows.length == Tables(spark, sfDir, "documents").count())
+  }
 }

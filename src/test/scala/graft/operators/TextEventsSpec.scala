@@ -207,4 +207,24 @@ class TextEventsSpec extends AnyFunSuite with SparkSuite {
     val n = Events.hourly(spark, sfDir).agg(sum("n")).head.getLong(0)
     assert(n == Tables(spark, sfDir, "events").count())
   }
+
+  test("packing manifest: offsets are the exact global running sum") {
+    val budget = 512L
+    val rows = TextOps.packingManifest(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5)))
+    assert(rows.nonEmpty)
+    // driver replay of the concat-and-cut arithmetic
+    var cum = 0L
+    rows.sortBy(_._1).foreach { case (id, n, start, sf, sl, ns) =>
+      assert(start == cum, s"doc $id start $start != running sum $cum")
+      assert(sf == start / budget, s"doc $id seq_first")
+      assert(sl == (start + n - 1) / budget, s"doc $id seq_last")
+      assert(ns == sl - sf + 1 && ns >= 1, s"doc $id n_seqs")
+      cum += n
+    }
+    // some docs must straddle a window boundary on this fixture (token
+    // counts are not multiples of the budget)
+    assert(rows.exists(_._6 > 1), "expected at least one straddling doc")
+  }
 }

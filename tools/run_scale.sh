@@ -15,8 +15,10 @@
 # shape for a few % CPU, and the probes at those fixtures are
 # disk-capacity-bound, not CPU-bound — the standard big-cluster trade.
 # Dev/bench runs at sf0.1 are CPU-bound with tiny shuffles, so lz4 stays
-# their default. Override with SPARK_GRAFT_SHUFFLE_CODEC if a probe needs
-# to isolate the codec variable.
+# their default. The codec is one SPARK_GRAFT_EXTRA_CONF entry, prepended
+# to any entries the caller exports; a caller entry for the same key comes
+# later and wins, so a probe can isolate the codec variable with e.g.
+# SPARK_GRAFT_EXTRA_CONF="spark.io.compression.codec=lz4".
 #
 # Usage: tools/run_scale.sh <sfDir> <outPrefix> [fam1,fam2,...]
 #   e.g. tools/run_scale.sh /tmp/sf10 /tmp/scale_sf10
@@ -32,7 +34,7 @@
 set -u
 SF="$1"; OUT="$2"; ONLY="${3:-}"
 
-export SPARK_GRAFT_SHUFFLE_CODEC="${SPARK_GRAFT_SHUFFLE_CODEC:-zstd}"
+export SPARK_GRAFT_EXTRA_CONF="spark.io.compression.codec=zstd;${SPARK_GRAFT_EXTRA_CONF:-}"
 
 declare -A FAMS=(
   [linear]="q40,q57"
