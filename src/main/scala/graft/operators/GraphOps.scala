@@ -177,7 +177,9 @@ object GraphOps {
 
   /** The tier gate of the tiered graph kernels ([[componentsAuto]],
     * [[betweennessAuto]], [[betweennessSampled]], [[ssspOf]],
-    * [[kCoreOf]]): count the (u, v) relation, and at most
+    * [[kCoreOf]], and the fixed-count [[pageRankOf]], [[pprOf]],
+    * [[communitiesLpaOf]] and [[hitsOf]], whose driver tiers iterate on
+    * [[InArcs]]): count the (u, v) relation, and at most
     * `driverEdgeLimit` edges run `driver` on the collected edge list —
     * the collect itself is the driver OOM at 100× edge counts, so above
     * the limit `distributed` runs on the relation, which never leaves the
@@ -953,7 +955,10 @@ object GraphOps {
     * both materializes it AND truncates the logical plan — a cache alone
     * keeps results but Catalyst still re-analyzes the whole nested lineage
     * every superstep, so planning cost compounds per iteration (measured:
-    * 800 s for 10 supersteps cached vs seconds checkpointed). Oracle:
+    * 800 s for 10 supersteps cached vs seconds checkpointed). That is the
+    * tier above `driverEdgeLimit` (5M edges); at or below it the same
+    * iteration runs on the driver ([[pageRankOf]]), as it does for PPR,
+    * LPA and HITS. Oracle:
     * the same 10 iterations unrolled as DuckDB CTEs — a full cross-engine
     * hash match of an iterative algorithm, not a spot check. */
   def pageRank(spark: SparkSession, dir: String, iters: Int = 10,
@@ -1028,17 +1033,56 @@ object GraphOps {
     * kernel surface ([[communitiesLpaOf]]/[[ssspOf]] discipline): any
     * edge relation, not just the co-purchase graph, and the probe surface
     * the scale axis measures (edge COUNT is the iterative family's cost
-    * driver, not base-table rows). */
-  private[graft] def pageRankOf(e0: DataFrame, iters: Int,
-      damping: Double): DataFrame = {
-    val w = rankWeights(e0, e0.count())
-    val n = w.select("src").distinct().count()
-    val pr0 = w.select(col("src").as("v")).distinct()
-      .select(col("v"), lit(1.0 / n).as("r"))
-      .localCheckpoint()
-    val pr = supersteps(pr0, iters)((_, pr) => pageRankStep(w, pr, n, damping))
-    w.unpersist() // pr is materialized past the last superstep; w is done
-    pr.select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
+    * driver, not base-table rows). Tiered ([[byTier]]): a superstep costs
+    * a few jobs and stages however small the graph, so at most
+    * `driverEdgeLimit` edges run the whole iteration on the driver
+    * ([[driverPageRank]]); above it, the superstep join loop. */
+  private[graft] def pageRankOf(e0: DataFrame, iters: Int, damping: Double,
+      driverEdgeLimit: Long = 5000000L): DataFrame = {
+    byTier(e0, driverEdgeLimit) { edges =>
+      rankRows(e0.sparkSession, driverPageRank(edges, iters, damping))
+    } { (e, m) =>
+      val w = rankWeights(e, m)
+      // the vertex set, once: n is its count and pr0 its projection. The
+      // count reads the checkpoint's partitions in one job; a Dataset
+      // count would plan an aggregate and exchange, two jobs under AQE
+      val verts = w.select(col("src").as("v")).distinct().localCheckpoint()
+      val n = verts.rdd.count()
+      val pr0 = verts.select(col("v"), lit(1.0 / n).as("r"))
+      val pr = supersteps(pr0, iters)((_, pr) => pageRankStep(w, pr, n, damping))
+      w.unpersist() // pr is materialized past the last superstep; w is done
+      pr.select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
+    }
+  }
+
+  /** [[pageRankOf]]'s driver tier: (vertex ids ascending, their ranks
+    * unrounded), restart (1-d)/n everywhere ([[driverWalk]]). */
+  private[operators] def driverPageRank(edges: Array[(Long, Long)], iters: Int,
+      damping: Double): (Array[Long], Array[Double]) = {
+    val g = undirectedArcs(edges)
+    val n = g.dstIds.length
+    (g.dstIds, driverWalk(g, Array.fill(n)(1.0 / n), iters, damping)(_ => (1.0 - damping) / n))
+  }
+
+  /** The driver tiers' random walk, [[rankWeights]]' superstep on
+    * [[InArcs]]: `iters` rounds of restart(v) + d·Σ r(u)·(1/deg(u)), the
+    * distributed tiers' expression, each sum in ascending source-id order. */
+  private def driverWalk(g: InArcs, pr0: Array[Double], iters: Int,
+      damping: Double)(restart: Int => Double): Array[Double] = {
+    val w = g.outDegrees.map(1.0 / _)
+    (1 to iters).foldLeft(pr0) { (pr, _) =>
+      val x = Array.tabulate(pr.length)(u => pr(u) * w(u))
+      Array.tabulate(pr.length)(v => restart(v) + damping * g.inSum(v, x))
+    }
+  }
+
+  /** A driver tier's (vertex ids, ranks) as the distributed tiers' rows:
+    * (v, rank), rounded by Spark's `round` to 8 dp, ordered by v. */
+  private def rankRows(spark: SparkSession,
+      ranks: (Array[Long], Array[Double])): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(ranks._1.toSeq.zip(ranks._2)).toDF("v", "r")
+      .select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
   }
 
   /** One PageRank superstep — the loop body of [[pageRank]], factored out
@@ -1063,7 +1107,8 @@ object GraphOps {
     * rank 0 and the seed's restart must exist even before mass returns
     * to it — the subtle difference from the global walk, and the reason
     * the oracle unrolls the same left-join shape round for round. Same
-    * every-2nd-superstep checkpoint cadence as q88. */
+    * every-2nd-superstep checkpoint cadence as q88, and the same tiers:
+    * at most `driverEdgeLimit` edges iterate on the driver ([[pprOf]]). */
   def personalizedPageRank(spark: SparkSession, dir: String, iters: Int = 10,
       damping: Double = 0.85, minShared: Int = 3): DataFrame =
     pprOf(coPurchaseEdges(spark, dir, minShared).select("u", "v"),
@@ -1072,10 +1117,34 @@ object GraphOps {
   /** [[personalizedPageRank]] over an explicit undirected (u, v) edge
     * list (seed = minimum vertex id present). Self-loops are dropped: a
     * loop on the seed would otherwise give superstep 1 a second seed row
-    * next to the injected restart row. */
-  private[graft] def pprOf(e0: DataFrame, iters: Int,
+    * next to the injected restart row. Tiered like [[pageRankOf]]: at
+    * most `driverEdgeLimit` edges (loops included) run [[driverPpr]]. */
+  private[graft] def pprOf(e0: DataFrame, iters: Int, damping: Double,
+      driverEdgeLimit: Long = 5000000L): DataFrame = {
+    byTier(e0, driverEdgeLimit) { edges =>
+      rankRows(e0.sparkSession, driverPpr(edges, iters, damping))
+    }(distributedPpr(_, _, iters, damping))
+  }
+
+  /** [[pprOf]]'s driver tier: (vertex ids ascending, their ranks
+    * unrounded) over the loop-free edges, seed = the smallest id. Dense
+    * where the distributed tier is sparse: an unranked vertex holds 0.0,
+    * and adding its 0.0 term leaves a sum unchanged, so both evaluate
+    * (1-d)·[v = seed] + d·Σ r(u)·(1/deg(u)) to the same value
+    * ([[driverWalk]]). */
+  private[operators] def driverPpr(edges: Array[(Long, Long)], iters: Int,
+      damping: Double): (Array[Long], Array[Double]) = {
+    val g = undirectedArcs(edges.filter(e => e._1 != e._2))
+    def seed(v: Int) = if (v == 0) 1.0 else 0.0
+    val pr0 = Array.tabulate(g.dstIds.length)(seed)
+    (g.dstIds, driverWalk(g, pr0, iters, damping)(v => (1.0 - damping) * seed(v)))
+  }
+
+  /** [[pprOf]]'s distributed tier over the cached (u, v) relation `e0` of
+    * `m` edges. */
+  private def distributedPpr(e0: DataFrame, m: Long, iters: Int,
       damping: Double): DataFrame = {
-    val w = pprWeights(e0, e0.count())
+    val w = pprWeights(e0, m)
     val seed = w.agg(min("src")).head.getLong(0)
     // SPARSE rank vector (r14): pr carries only vertices with NONZERO
     // rank; zeros are restored by ONE final left-outer against the vertex
@@ -1133,34 +1202,76 @@ object GraphOps {
     * driver-coordinated Girvan–Newman: GN is the reference's semantics for
     * curated graphs; LPA is what actually runs on a graph too large to
     * betweenness-sweep — O(iters) shuffles of the edge list and nothing
-    * driver-side at all. Deterministic throughout: labels start as vertex
-    * ids, each round every vertex adopts the SMALLEST label among its
-    * neighbors' most-frequent labels (classic tie-break; no randomized
-    * update order), updates are synchronous, and the rank vector is
+    * driver-side at all above `driverEdgeLimit`. Deterministic throughout:
+    * labels start as vertex ids, each round every vertex adopts the
+    * SMALLEST label among its neighbors' most-frequent labels (classic
+    * tie-break; no randomized update order), updates are synchronous,
+    * and the rank vector is
     * `localCheckpoint`ed per round exactly as [[pageRank]] — plan depth
     * stays one superstep. Labels can only move within a connected
     * component, so the result PARTITION refines connected components
     * (GraphSpec invariant); a two-clique bridge graph resolves to the two
     * cliques. Fixed iteration cap (LPA can oscillate on bipartite
     * structure; the cap is the standard remedy and keeps reruns
-    * bit-stable). */
+    * bit-stable). At or below the limit the same rounds run on the
+    * driver ([[communitiesLpaOf]]). */
   def communitiesLpa(spark: SparkSession, dir: String, iters: Int = 10,
       minShared: Int = 3): DataFrame = {
     val e0 = coPurchaseEdges(spark, dir, minShared).select("u", "v")
     communitiesLpaOf(e0, iters)
   }
 
-  /** [[communitiesLpa]] over an explicit undirected edge list. */
-  private[graft] def communitiesLpaOf(e0: DataFrame, iters: Int): DataFrame = {
-    // lpaStep joins nbrs(v) = labels(vertex) every round (see keyedStatic)
-    val nbrs = keyedStatic(bothWays(e0), 2 * e0.count(), "v")
-    val labels0 = nbrs.select(col("u").as("vertex")).distinct()
-      .withColumn("label", col("vertex"))
-      .localCheckpoint()
-    val labels = supersteps(labels0, iters)((_, l) => lpaStep(nbrs, l))
-    nbrs.unpersist()
-    labels.select(col("vertex"), col("label").as("community"))
-      .orderBy("vertex")
+  /** [[communitiesLpa]] over an explicit undirected edge list. Tiered like
+    * [[pageRankOf]]: at most `driverEdgeLimit` edges run [[driverLpa]]. */
+  private[graft] def communitiesLpaOf(e0: DataFrame, iters: Int,
+      driverEdgeLimit: Long = 5000000L): DataFrame = {
+    val spark = e0.sparkSession
+    import spark.implicits._
+    byTier(e0, driverEdgeLimit) { edges =>
+      val (ids, labels) = driverLpa(edges, iters)
+      spark.createDataset(ids.toSeq.zip(labels)).toDF("vertex", "community")
+        .orderBy("vertex")
+    } { (e, m) =>
+      // lpaStep joins nbrs(v) = labels(vertex) every round (see keyedStatic)
+      val nbrs = keyedStatic(bothWays(e), 2 * m, "v")
+      val labels0 = nbrs.select(col("u").as("vertex")).distinct()
+        .withColumn("label", col("vertex"))
+        .localCheckpoint()
+      val labels = supersteps(labels0, iters)((_, l) => lpaStep(nbrs, l))
+      nbrs.unpersist()
+      labels.select(col("vertex"), col("label").as("community"))
+        .orderBy("vertex")
+    }
+  }
+
+  /** [[communitiesLpaOf]]'s driver tier: (vertex ids ascending, their
+    * labels). Each round a vertex takes its neighbors' most frequent label,
+    * ties to the smallest — [[lpaStep]]'s rule; an arc counts once per
+    * copy, so a self-loop votes twice for the vertex's own label. */
+  private[operators] def driverLpa(edges: Array[(Long, Long)],
+      iters: Int): (Array[Long], Array[Long]) = {
+    val g = undirectedArcs(edges)
+    val n = g.dstIds.length
+    val votes = new Array[Long](g.src.length)
+    val labels = (1 to iters).foldLeft(g.dstIds) { (label, _) =>
+      Array.tabulate(n) { v =>
+        val (from, until) = (g.offsets(v), g.offsets(v + 1))
+        var k = from
+        while (k < until) { votes(k) = label(g.src(k)); k += 1 }
+        java.util.Arrays.sort(votes, from, until)
+        // the first of the longest runs in ascending label order
+        var best = votes(from); var bestRun = 0
+        k = from
+        while (k < until) {
+          var end = k + 1
+          while (end < until && votes(end) == votes(k)) end += 1
+          if (end - k > bestRun) { best = votes(k); bestRun = end - k }
+          k = end
+        }
+        best
+      }
+    }
+    (g.dstIds, labels)
   }
 
   /** One synchronous-LPA superstep — [[communitiesLpaOf]]'s loop body,
@@ -1369,18 +1480,18 @@ object GraphOps {
   private[graft] def driverBfs(edges: Array[(Long, Long)],
       maxIters: Int): Map[Long, Int] = {
     if (edges.isEmpty) return Map.empty
-    val adj = adjacency(edges)
-    val src = adj.keysIterator.min
-    val dist = scala.collection.mutable.Map(src -> 0)
-    var frontier = List(src)
+    val g = undirectedArcs(edges)
+    val dist = Array.fill(g.dstIds.length)(-1)
+    dist(0) = 0 // the source: index 0 is the smallest id
+    var frontier = Array(0)
     var d = 0
     while (frontier.nonEmpty && d < maxIters) {
       d += 1
-      frontier = frontier.flatMap(adj(_)).filter { n =>
-        if (dist.contains(n)) false else { dist(n) = d; true }
+      frontier = frontier.flatMap(g.sources).filter { n =>
+        if (dist(n) >= 0) false else { dist(n) = d; true }
       }
     }
-    dist.toMap
+    g.dstIds.indices.collect { case v if dist(v) >= 0 => g.dstIds(v) -> dist(v) }.toMap
   }
 
   /** q9e: k-core of the co-purchase graph — iterative peeling: drop every
@@ -1440,16 +1551,15 @@ object GraphOps {
     * total. Returns surviving vertex → within-core degree. */
   private[graft] def driverKCore(edges: Array[(Long, Long)],
       k: Int): Map[Long, Long] = {
-    val adj = adjacency(edges)
-    val deg = scala.collection.mutable.Map.empty[Long, Long]
-    adj.foreach { case (vx, ns) => deg(vx) = ns.size.toLong }
-    val removed = scala.collection.mutable.Set.empty[Long]
-    var queue = deg.iterator.collect { case (vx, d) if d < k => vx }.toList
+    val g = undirectedArcs(edges)
+    val deg = g.outDegrees.map(_.toLong)
+    val removed = new Array[Boolean](deg.length)
+    var queue = deg.indices.filter(deg(_) < k).toList
     while (queue.nonEmpty) {
-      val vx = queue.head; queue = queue.tail
-      if (!removed(vx)) {
-        removed += vx
-        adj(vx).foreach { n =>
+      val v = queue.head; queue = queue.tail
+      if (!removed(v)) {
+        removed(v) = true
+        g.sources(v).foreach { n =>
           if (!removed(n)) {
             deg(n) -= 1
             if (deg(n) < k) queue ::= n
@@ -1457,21 +1567,86 @@ object GraphOps {
         }
       }
     }
-    deg.iterator.collect {
-      case (vx, d) if !removed(vx) => vx -> d
-    }.toMap
+    g.dstIds.indices.collect { case v if !removed(v) => g.dstIds(v) -> deg(v) }.toMap
   }
 
-  /** Undirected adjacency lists of an edge list, for the driver tiers
-    * ([[driverBfs]], [[driverKCore]]). */
-  private def adjacency(
-      edges: Array[(Long, Long)]): mutable.Map[Long, mutable.ArrayBuffer[Long]] = {
-    val adj = mutable.Map.empty[Long, mutable.ArrayBuffer[Long]]
-    edges.foreach { case (u, v) =>
-      adj.getOrElseUpdate(u, mutable.ArrayBuffer.empty) += v
-      adj.getOrElseUpdate(v, mutable.ArrayBuffer.empty) += u
+  /** The sorted, distinct `ids`: a driver tier's vertex index, where
+    * vertex `ids(i)` has the dense index i. */
+  private def sortedIds(ids: Array[Long]): Array[Long] = {
+    val a = ids.clone()
+    java.util.Arrays.sort(a)
+    var k = 0
+    var i = 0
+    while (i < a.length) {
+      if (k == 0 || a(i) != a(k - 1)) { a(k) = a(i); k += 1 }
+      i += 1
     }
-    adj
+    java.util.Arrays.copyOf(a, k)
+  }
+
+  /** The arcs of a driver-tier graph on primitive arrays, as a CSR of
+    * INCOMING arcs sorted by (dst, src): the arcs into dst index j come
+    * from the src indices `src(offsets(j) until offsets(j + 1))`,
+    * ascending. Indices are positions in the vertex indexes `srcIds` and
+    * `dstIds` ([[sortedIds]]; one array for a one-mode graph, customers
+    * and parts for HITS). A duplicate arc stays two arcs. */
+  private final class InArcs(val srcIds: Array[Long], val dstIds: Array[Long],
+      val offsets: Array[Int], val src: Array[Int]) {
+
+    /** The src indices of the arcs into `v`, ascending: v's neighbors,
+      * for the arcs of an undirected graph ([[undirectedArcs]]). */
+    def sources(v: Int): Array[Int] =
+      java.util.Arrays.copyOfRange(src, offsets(v), offsets(v + 1))
+
+    /** Arcs leaving each src index. */
+    def outDegrees: Array[Int] = {
+      val deg = new Array[Int](srcIds.length)
+      src.foreach(u => deg(u) += 1)
+      deg
+    }
+
+    /** Σ x(u) over the arcs u → v, from 0.0 like Spark's `sum`, in
+      * ascending source-id order: the sum, and so the driver tier's
+      * result, does not depend on the order the edges arrived in. */
+    def inSum(v: Int, x: Array[Double]): Double = {
+      var s = 0.0
+      var k = offsets(v)
+      while (k < offsets(v + 1)) { s += x(src(k)); k += 1 }
+      s
+    }
+  }
+
+  /** [[InArcs]] of the arcs from(k) → to(k). */
+  private def inArcs(from: Array[Long], to: Array[Long], srcIds: Array[Long],
+      dstIds: Array[Long]): InArcs = {
+    def index(ids: Array[Long], id: Long): Int = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      require(i >= 0, s"vertex $id is missing from the vertex index")
+      i
+    }
+    val dst = to.map(index(dstIds, _))
+    val offsets = new Array[Int](dstIds.length + 1)
+    dst.foreach(v => offsets(v + 1) += 1)
+    for (v <- dstIds.indices) offsets(v + 1) += offsets(v)
+    val cursor = offsets.clone()
+    val src = new Array[Int](from.length)
+    for (k <- from.indices) {
+      src(cursor(dst(k))) = index(srcIds, from(k))
+      cursor(dst(k)) += 1
+    }
+    for (v <- dstIds.indices) java.util.Arrays.sort(src, offsets(v), offsets(v + 1))
+    new InArcs(srcIds, dstIds, offsets, src)
+  }
+
+  /** Both directions of an undirected edge list ([[bothWays]]) as
+    * [[InArcs]] over every endpoint: a self-loop is two arcs into its
+    * vertex, so it counts twice in that vertex's degree. The fixed-count
+    * kernels' driver tiers, [[driverBfs]] and [[driverKCore]] all run on
+    * it. */
+  private def undirectedArcs(edges: Array[(Long, Long)]): InArcs = {
+    val (u, v) = (edges.map(_._1), edges.map(_._2))
+    val ids = sortedIds(u ++ v)
+    inArcs(u ++ v, v ++ u, ids, ids)
   }
 
   /** q9n: HITS hubs & authorities over the BIPARTITE customer–part
@@ -1490,14 +1665,61 @@ object GraphOps {
     * only past ~1e15 max-degree products over 10 rounds. The oracle
     * unrolls all 10 rounds as MATERIALIZED CTEs (normalizing per round,
     * which lands on the same direction), rounded at 8 dp — far above the
-    * engines' summation-order/scaling drift. */
+    * engines' summation-order/scaling drift. The joins are the tier above
+    * `driverEdgeLimit` incidence rows; at or below it the same half-steps
+    * run on the driver ([[hitsOf]]). */
   def hits(spark: SparkSession, dir: String, iters: Int = 10): DataFrame =
     hitsOf(incidence(spark, dir), iters)
 
-  /** [[hits]] over an explicit bipartite (c, p) incidence relation. */
-  private[graft] def hitsOf(inc: DataFrame, iters: Int): DataFrame = {
+  /** [[hits]] over an explicit bipartite (c, p) incidence relation. Tiered
+    * like [[pageRankOf]], on incidence rows: the incidence enters
+    * [[byTier]] as (u = c, v = p), and at most `driverEdgeLimit` rows run
+    * [[driverHits]]. */
+  private[graft] def hitsOf(inc: DataFrame, iters: Int,
+      driverEdgeLimit: Long = 5000000L): DataFrame = {
     require(iters >= 1, s"HITS needs iters >= 1 (the authority vector is " +
       s"the last round's), got $iters")
+    val spark = inc.sparkSession
+    import spark.implicits._
+    byTier(inc.select(col("c").as("u"), col("p").as("v")), driverEdgeLimit) { rows =>
+      val ((cs, hub), (ps, auth)) = driverHits(rows, iters)
+      def unit(role: String, ids: Array[Long], x: Array[Double]) = {
+        var n2 = 0.0
+        x.foreach(s => n2 += s * s)
+        val nrm = math.sqrt(n2)
+        ids.indices.map(i => (role, ids(i), x(i) / nrm))
+      }
+      spark.createDataset(unit("hub", cs, hub) ++ unit("authority", ps, auth))
+        .toDF("role", "id", "score")
+        .select(col("role"), col("id"), round(col("score"), 8).as("score"))
+        .orderBy("role", "id")
+    } { (e, m) =>
+      distributedHits(e.select(col("u").as("c"), col("v").as("p")), m, iters)
+    }
+  }
+
+  /** [[hitsOf]]'s driver tier: (customer ids ascending, hub scores) and
+    * (part ids ascending, authority scores), unnormalized — the
+    * distributed half-steps a(p) = Σ h(c) and h(c) = Σ a(p), each sum in
+    * ascending id order. A duplicate (c, p) row counts twice. */
+  private[operators] def driverHits(inc: Array[(Long, Long)], iters: Int):
+      ((Array[Long], Array[Double]), (Array[Long], Array[Double])) = {
+    val (c, p) = (inc.map(_._1), inc.map(_._2))
+    val (cIds, pIds) = (sortedIds(c), sortedIds(p))
+    val toP = inArcs(c, p, cIds, pIds)
+    val toC = inArcs(p, c, pIds, cIds)
+    val (hub, auth) = (1 to iters).foldLeft(
+        (Array.fill(cIds.length)(1.0), Array.empty[Double])) { case ((hub, _), _) =>
+      val auth = Array.tabulate(pIds.length)(toP.inSum(_, hub))
+      (Array.tabulate(cIds.length)(toC.inSum(_, auth)), auth)
+    }
+    ((cIds, hub), (pIds, auth))
+  }
+
+  /** [[hitsOf]]'s distributed tier over the cached incidence `inc` of
+    * `incRows` rows. */
+  private def distributedHits(inc: DataFrame, incRows: Long,
+      iters: Int): DataFrame = {
     // The static incidence is joined on c and on p EVERY round — shuffling
     // it 2×iters times is the dominant cost. Pre-partition it once per
     // key (two cached copies, see keyedStatic): each round's joins then
@@ -1505,7 +1727,6 @@ object GraphOps {
     // preserve hash partitioning), so the only exchanges left are the two
     // per-round TRANSPOSES (groupBy p after a c-join and vice versa), which
     // no layout can avoid.
-    val incRows = inc.count()
     val incC = keyedStatic(inc, incRows, "c")
     val incP = keyedStatic(inc, incRows, "p")
     val hub0 = incC.select(col("c")).distinct()

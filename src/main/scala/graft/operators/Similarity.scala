@@ -61,10 +61,14 @@ object Similarity {
       .withColumn("norm", sqrt(cdot(col("v"), col("v"))))
   }
 
-  /** [[normalized]], cached for one ANN call whose returned (lazy)
-    * relation reads it several times — a [[graft.SharedViews]] transient. */
+  /** [[normalized]], cached: the ANN faces (q47, q4a, qbe, q59, qbf, q8h,
+    * qbh, qbj) each read it several times through their lazy results, so it
+    * is one keyed [[graft.SharedViews]] view per (session, dir) — a cache
+    * per call would re-cache the plan the first call cached. */
   private def normalizedCached(spark: SparkSession, dir: String): DataFrame =
-    SharedViews.transient(normalized(spark, dir).cache())
+    SharedViews.view("similarity.normalized", spark, dir) {
+      normalized(spark, dir).cache()
+    }
 
   /** Exact cosine top-k: for each query vector (vec_id < nQueries), the k
     * nearest corpus vectors. Query side broadcasts; ties broken by

@@ -18,6 +18,9 @@ import graft.operators.GraphOps
   * exactly what the table-replication fixtures produce, minus the pair
   * join) and runs each kernel through the same `...Of` entry points the
   * faces delegate to: pageRankOf / pprOf / communitiesLpaOf / ssspOf.
+  * PageRank, PPR and LPA keep their default `driverEdgeLimit` (5M edges),
+  * so a decade at or below it times their driver tiers; SSSP is forced
+  * onto its distributed tier.
   *
   * Run: sbt "runMain graft.tools.GraphScale <edgesParquet> [reps] [k1,k2]"
   * Output: TimeOne's `[time] <kernel> repN <sec> s (<rows> rows)` lines,

@@ -347,7 +347,12 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
         "componentsAuto" -> (GraphOps.componentsAuto(spark, _, limit)),
         "betweennessAuto" -> (GraphOps.betweennessAuto(spark, _, limit, 1.0)),
         "ssspOf" -> (GraphOps.ssspOf(_, 50, limit)),
-        "kCoreOf" -> (GraphOps.kCoreOf(_, 2, 30, limit)))
+        "kCoreOf" -> (GraphOps.kCoreOf(_, 2, 30, limit)),
+        "pageRankOf" -> (GraphOps.pageRankOf(_, 3, 0.85, limit)),
+        "pprOf" -> (GraphOps.pprOf(_, 3, 0.85, limit)),
+        "communitiesLpaOf" -> (GraphOps.communitiesLpaOf(_, 3, limit)),
+        // HITS reads a (c, p) incidence: the edges as customer→part rows
+        "hitsOf" -> (df => GraphOps.hitsOf(df.toDF("c", "p"), 3, limit)))
       kernels.foreach { case (name, kernel) =>
         val callers = edges.toDF("u", "v").cache()
         callers.count()
@@ -427,20 +432,78 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
         assert(math.abs(got(k) - x) < 1e-8, s"$what at $k: got ${got(k)}, want $x")
       }
     }
-    for (iters <- 1 to 3) {
-      close(ranks(GraphOps.pageRankOf(edgeDf, iters, d)), pageRank(iters),
-        s"pageRankOf iters=$iters")
-      close(ranks(GraphOps.pprOf(edgeDf, iters, d)), ppr(iters), s"pprOf iters=$iters")
-      assert(GraphOps.communitiesLpaOf(edgeDf, iters).collect()
+    // both tiers: the driver iteration (default limit) and the superstep
+    // joins (driverEdgeLimit = 0)
+    for (limit <- Seq(5000000L, 0L); iters <- 1 to 3) {
+      val at = s"iters=$iters driverEdgeLimit=$limit"
+      close(ranks(GraphOps.pageRankOf(edgeDf, iters, d, limit)), pageRank(iters),
+        s"pageRankOf $at")
+      close(ranks(GraphOps.pprOf(edgeDf, iters, d, limit)), ppr(iters), s"pprOf $at")
+      assert(GraphOps.communitiesLpaOf(edgeDf, iters, limit).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap == lpa(iters),
-        s"communitiesLpaOf iters=$iters")
-      close(GraphOps.hitsOf(inc.toDF("c", "p"), iters).collect()
+        s"communitiesLpaOf $at")
+      close(GraphOps.hitsOf(inc.toDF("c", "p"), iters, limit).collect()
           .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap,
-        hits(iters), s"hitsOf iters=$iters")
+        hits(iters), s"hitsOf $at")
     }
     // the references themselves tell the three iteration counts apart
     Seq[Int => Any](pageRank, ppr, lpa, hits).foreach { ref =>
       assert((1 to 3).map(ref).distinct.size == 3)
     }
+  }
+
+  test("fixed-count kernels: the driver tier equals the distributed tier and ignores input order") {
+    import spark.implicits._
+    // a duplicate edge (2, 3), self-loops on the seed and on 5, a pendant
+    // vertex 9; HITS gets a duplicate (c, p) row
+    val edges = Seq((1L, 2L), (2L, 3L), (2L, 3L), (1L, 1L), (3L, 4L), (4L, 5L),
+      (5L, 5L), (5L, 6L), (2L, 7L), (7L, 8L), (3L, 8L), (8L, 9L), (6L, 4L))
+    val inc = Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 10L), (3L, 11L),
+      (3L, 12L), (4L, 12L), (4L, 13L), (5L, 13L), (5L, 10L))
+    def tiers(what: String, run: Long => DataFrame): Unit = {
+      val driver = run(5000000L).collect().toSeq
+      assert(driver.nonEmpty, what)
+      assert(driver == run(0L).collect().toSeq, s"$what: driver tier != distributed tier")
+    }
+    for (iters <- Seq(1, 2, 10)) {
+      val e = edges.toDF("u", "v")
+      tiers(s"pageRankOf iters=$iters", GraphOps.pageRankOf(e, iters, 0.85, _))
+      tiers(s"pprOf iters=$iters", GraphOps.pprOf(e, iters, 0.85, _))
+      tiers(s"communitiesLpaOf iters=$iters", GraphOps.communitiesLpaOf(e, iters, _))
+      tiers(s"hitsOf iters=$iters", GraphOps.hitsOf(inc.toDF("c", "p"), iters, _))
+    }
+
+    // input order: the unrounded driver vectors are bit-identical under a
+    // shuffle, on a random multigraph large enough for sum order to show
+    val rnd = new scala.util.Random(7)
+    val big = Array.fill(3000)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
+    def sameBits(a: (Array[Long], Array[Double]), b: (Array[Long], Array[Double])) =
+      a._1.sameElements(b._1) && a._2.map(java.lang.Double.doubleToRawLongBits)
+        .sameElements(b._2.map(java.lang.Double.doubleToRawLongBits))
+    Seq(11, 12, 13).foreach { s =>
+      val shuffled = new scala.util.Random(s).shuffle(big.toSeq).toArray
+      val pageRank = sameBits(GraphOps.driverPageRank(shuffled, 10, 0.85),
+        GraphOps.driverPageRank(big, 10, 0.85))
+      assert(pageRank, s"driverPageRank, shuffle $s")
+      val ppr = sameBits(GraphOps.driverPpr(shuffled, 10, 0.85),
+        GraphOps.driverPpr(big, 10, 0.85))
+      assert(ppr, s"driverPpr, shuffle $s")
+      val (sl, bl) = (GraphOps.driverLpa(shuffled, 10), GraphOps.driverLpa(big, 10))
+      val lpa = sl._1.sameElements(bl._1) && sl._2.sameElements(bl._2)
+      assert(lpa, s"driverLpa, shuffle $s")
+      val (sh, bh) = (GraphOps.driverHits(shuffled, 10), GraphOps.driverHits(big, 10))
+      val hits = sameBits(sh._1, bh._1) && sameBits(sh._2, bh._2)
+      assert(hits, s"driverHits, shuffle $s")
+    }
+    val shuffledRows = new scala.util.Random(5).shuffle(big.toSeq).toDF("u", "v")
+    assert(GraphOps.pageRankOf(shuffledRows, 10, 0.85).collect().toSeq ==
+      GraphOps.pageRankOf(big.toSeq.toDF("u", "v"), 10, 0.85).collect().toSeq)
+
+    // the fixture faces' kernels: q88, qa7, q8j and q9n
+    val fx = GraphOps.coPurchaseEdges(spark, sfDir).select("u", "v")
+    tiers("q88 pageRankOf", GraphOps.pageRankOf(fx, 10, 0.85, _))
+    tiers("qa7 pprOf", GraphOps.pprOf(fx, 10, 0.85, _))
+    tiers("q8j communitiesLpaOf", GraphOps.communitiesLpaOf(fx, 10, _))
+    tiers("q9n hitsOf", GraphOps.hitsOf(GraphOps.incidence(spark, sfDir), 10, _))
   }
 }
