@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.{SharedViews, Tables}
@@ -124,8 +125,9 @@ object GraphOps {
     * component=min member id). */
   def componentsAuto(spark: SparkSession, edgeDf: DataFrame,
       driverEdgeLimit: Long = 5000000L): DataFrame =
-    byTier(edgeDf, driverEdgeLimit) { edges =>
+    byTier(edgeDf, driverEdgeLimit) { cols =>
       import spark.implicits._
+      val edges = cols.pairs
       val vertices = edges.iterator.flatMap(x => Iterator(x._1, x._2)).toArray.distinct
       spark.createDataset(unionFind(vertices, edges).toSeq)
         .toDF("vertex", "component").orderBy("vertex")
@@ -179,24 +181,78 @@ object GraphOps {
     * [[betweennessAuto]], [[betweennessSampled]], [[ssspOf]],
     * [[kCoreOf]], and the fixed-count [[pageRankOf]], [[pprOf]],
     * [[communitiesLpaOf]] and [[hitsOf]], whose driver tiers iterate on
-    * [[InArcs]]): count the (u, v) relation, and at most
-    * `driverEdgeLimit` edges run `driver` on the collected edge list —
-    * the collect itself is the driver OOM at 100× edge counts, so above
-    * the limit `distributed` runs on the relation, which never leaves the
-    * executors, and gets its edge count so it need not count again. The
-    * relation is cached for the count and the tier's read
-    * and released on return ([[withCache]]): both tiers consume it
-    * eagerly (collect, localCheckpoint, or a static side of their own). */
+    * [[InArcs]]). The (u, v) relation is evaluated once: each partition
+    * is packed on the executors into two long columns ([[packColumns]])
+    * and persisted, and the edge count `m` is the sum of their lengths
+    * (job 1). At most `driverEdgeLimit` edges run `driver` on the
+    * concatenated columns ([[EdgeCols]], 16 B per edge; job 2 reads the
+    * persisted blocks, and no row object reaches the driver). Above the
+    * limit the packed blocks are dropped and `distributed` runs exactly as
+    * before, on the relation cached for it ([[withCache]]; both tiers
+    * consume it eagerly), with `m` so it need not count again: the edges
+    * never leave the executors, and the one extra cost is job 1's scan.
+    * The columns are read as `as[(Long, Long)]` reads them: integral
+    * columns are up-cast to long, any other type fails analysis, and a
+    * null endpoint fails the job. */
   private def byTier(edgeDf: DataFrame, driverEdgeLimit: Long)(
-      driver: Array[(Long, Long)] => DataFrame)(
-      distributed: (DataFrame, Long) => DataFrame): DataFrame =
-    withCache(edgeDf.select("u", "v")) { e =>
-      val spark = e.sparkSession
-      import spark.implicits._
-      val m = e.count()
-      if (m <= driverEdgeLimit) driver(e.as[(Long, Long)].collect())
-      else distributed(e, m)
+      driver: EdgeCols => DataFrame)(
+      distributed: (DataFrame, Long) => DataFrame): DataFrame = {
+    val e = edgeDf.select("u", "v")
+    val spark = e.sparkSession
+    import spark.implicits._
+    e.as[(Long, Long)] // binds the encoder: the analysis check of the typed read
+    val packed = e.select(col("u").cast("long"), col("v").cast("long"))
+      .queryExecution.toRdd.mapPartitions(packColumns)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val fetched = try {
+      val m = packed.map(_._1.length.toLong).fold(0L)(_ + _)
+      if (m <= driverEdgeLimit) Right(packed.collect()) else Left(m)
+    } finally packed.unpersist()
+    fetched match {
+      case Right(parts) => driver(EdgeCols.concat(parts))
+      case Left(m) => withCache(e)(distributed(_, m))
     }
+  }
+
+  /** One partition of [[byTier]]'s (u, v) rows as two long columns. A
+    * null endpoint fails here: `getLong` would read it as vertex 0. */
+  private def packColumns(rows: Iterator[InternalRow]): Iterator[(Array[Long], Array[Long])] = {
+    val (u, v) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+    rows.foreach { r =>
+      if (r.isNullAt(0) || r.isNullAt(1))
+        throw new IllegalArgumentException("graph edge column '" +
+          (if (r.isNullAt(0)) "u" else "v") + "' holds a null endpoint")
+      u += r.getLong(0); v += r.getLong(1)
+    }
+    Iterator.single((u.result(), v.result()))
+  }
+
+  /** A driver tier's edge list as two primitive columns: edge k is
+    * (u(k), v(k)), in the order the relation's partitions held them. */
+  private[operators] final class EdgeCols(val u: Array[Long], val v: Array[Long]) {
+    require(u.length == v.length, s"edge columns of ${u.length} and ${v.length} rows")
+    def length: Int = u.length
+
+    /** The edges as (u, v) pairs, for the drivers built on [[Csr]]. */
+    def pairs: Array[(Long, Long)] = Array.tabulate(length)(k => (u(k), v(k)))
+
+    /** The edges that are not self-loops, in order. */
+    def withoutLoops: EdgeCols = {
+      val (ku, kv) = (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)
+      var k = 0
+      while (k < length) { if (u(k) != v(k)) { ku += u(k); kv += v(k) }; k += 1 }
+      new EdgeCols(ku.result(), kv.result())
+    }
+  }
+
+  private[operators] object EdgeCols {
+    def of(edges: Array[(Long, Long)]): EdgeCols =
+      new EdgeCols(edges.map(_._1), edges.map(_._2))
+
+    /** The packed partitions of [[byTier]], concatenated in order. */
+    def concat(parts: Array[(Array[Long], Array[Long])]): EdgeCols =
+      new EdgeCols(Array.concat(parts.map(_._1): _*), Array.concat(parts.map(_._2): _*))
+  }
 
   /** `body` over `df` cached, where this call owns only the cache entry it
     * made: when the caller already cached `df`'s plan, `df.cache()` IS the
@@ -343,7 +399,7 @@ object GraphOps {
     * (exact under the limit). */
   def betweennessAuto(spark: SparkSession, edgeDf: DataFrame,
       driverEdgeLimit: Long = 5000000L, fraction: Double = 0.05): DataFrame =
-    byTier(edgeDf, driverEdgeLimit)(betweennessOfEdges(spark, _))(
+    byTier(edgeDf, driverEdgeLimit)(e => betweennessOfEdges(spark, e.pairs))(
       (e, _) => betweennessDistributed(spark, e, fraction))
 
   /** Brandes with NO driver-side edge materialization: BFS state lives in
@@ -481,7 +537,7 @@ object GraphOps {
     val edgeDf = coPurchaseEdges(spark, dir, minShared).select("u", "v")
     byTier(edgeDf, driverEdgeLimit) { edges =>
       import spark.implicits._
-      val g = buildCsr(edges)
+      val g = buildCsr(edges.pairs)
       val bc = spark.sparkContext.broadcast(g)
       val n = g.verts.length
       // Source selection is keyed by vertex ID through the SAME expression
@@ -1057,12 +1113,16 @@ object GraphOps {
 
   /** [[pageRankOf]]'s driver tier: (vertex ids ascending, their ranks
     * unrounded), restart (1-d)/n everywhere ([[driverWalk]]). */
-  private[operators] def driverPageRank(edges: Array[(Long, Long)], iters: Int,
+  private[operators] def driverPageRank(edges: EdgeCols, iters: Int,
       damping: Double): (Array[Long], Array[Double]) = {
     val g = undirectedArcs(edges)
     val n = g.dstIds.length
     (g.dstIds, driverWalk(g, Array.fill(n)(1.0 / n), iters, damping)(_ => (1.0 - damping) / n))
   }
+
+  private[operators] def driverPageRank(edges: Array[(Long, Long)], iters: Int,
+      damping: Double): (Array[Long], Array[Double]) =
+    driverPageRank(EdgeCols.of(edges), iters, damping)
 
   /** The driver tiers' random walk, [[rankWeights]]' superstep on
     * [[InArcs]]: `iters` rounds of restart(v) + d·Σ r(u)·(1/deg(u)), the
@@ -1132,13 +1192,17 @@ object GraphOps {
     * and adding its 0.0 term leaves a sum unchanged, so both evaluate
     * (1-d)·[v = seed] + d·Σ r(u)·(1/deg(u)) to the same value
     * ([[driverWalk]]). */
-  private[operators] def driverPpr(edges: Array[(Long, Long)], iters: Int,
+  private[operators] def driverPpr(edges: EdgeCols, iters: Int,
       damping: Double): (Array[Long], Array[Double]) = {
-    val g = undirectedArcs(edges.filter(e => e._1 != e._2))
+    val g = undirectedArcs(edges.withoutLoops)
     def seed(v: Int) = if (v == 0) 1.0 else 0.0
     val pr0 = Array.tabulate(g.dstIds.length)(seed)
     (g.dstIds, driverWalk(g, pr0, iters, damping)(v => (1.0 - damping) * seed(v)))
   }
+
+  private[operators] def driverPpr(edges: Array[(Long, Long)], iters: Int,
+      damping: Double): (Array[Long], Array[Double]) =
+    driverPpr(EdgeCols.of(edges), iters, damping)
 
   /** [[pprOf]]'s distributed tier over the cached (u, v) relation `e0` of
     * `m` edges. */
@@ -1248,7 +1312,7 @@ object GraphOps {
     * labels). Each round a vertex takes its neighbors' most frequent label,
     * ties to the smallest — [[lpaStep]]'s rule; an arc counts once per
     * copy, so a self-loop votes twice for the vertex's own label. */
-  private[operators] def driverLpa(edges: Array[(Long, Long)],
+  private[operators] def driverLpa(edges: EdgeCols,
       iters: Int): (Array[Long], Array[Long]) = {
     val g = undirectedArcs(edges)
     val n = g.dstIds.length
@@ -1273,6 +1337,10 @@ object GraphOps {
     }
     (g.dstIds, labels)
   }
+
+  private[operators] def driverLpa(edges: Array[(Long, Long)],
+      iters: Int): (Array[Long], Array[Long]) =
+    driverLpa(EdgeCols.of(edges), iters)
 
   /** One synchronous-LPA superstep — [[communitiesLpaOf]]'s loop body,
     * factored for [[superstepPlans]]. */
@@ -1477,9 +1545,8 @@ object GraphOps {
   /** Exact in-memory BFS from the minimum vertex id; hop distances of the
     * reachable component, capped at `maxIters` (mirrors the distributed
     * tier's superstep cap). */
-  private[graft] def driverBfs(edges: Array[(Long, Long)],
-      maxIters: Int): Map[Long, Int] = {
-    if (edges.isEmpty) return Map.empty
+  private[graft] def driverBfs(edges: EdgeCols, maxIters: Int): Map[Long, Int] = {
+    if (edges.length == 0) return Map.empty
     val g = undirectedArcs(edges)
     val dist = Array.fill(g.dstIds.length)(-1)
     dist(0) = 0 // the source: index 0 is the smallest id
@@ -1493,6 +1560,9 @@ object GraphOps {
     }
     g.dstIds.indices.collect { case v if dist(v) >= 0 => g.dstIds(v) -> dist(v) }.toMap
   }
+
+  private[graft] def driverBfs(edges: Array[(Long, Long)], maxIters: Int): Map[Long, Int] =
+    driverBfs(EdgeCols.of(edges), maxIters)
 
   /** q9e: k-core of the co-purchase graph — iterative peeling: drop every
     * vertex with degree < k (and its edges), recompute, repeat to
@@ -1537,7 +1607,7 @@ object GraphOps {
           .select("u", "v")
           .localCheckpoint()
         prev = cur
-        cur = e.count()
+        cur = e.rdd.count() // one job; a Dataset count is two under AQE
         rounds += 1
       }
       e.select(explode(array(col("u"), col("v"))).as("vertex"))
@@ -1549,8 +1619,7 @@ object GraphOps {
   /** Exact in-memory peel: remove vertices with degree < k until stable,
     * worklist-driven (each removal only re-examines its neighbors) — O(E)
     * total. Returns surviving vertex → within-core degree. */
-  private[graft] def driverKCore(edges: Array[(Long, Long)],
-      k: Int): Map[Long, Long] = {
+  private[graft] def driverKCore(edges: EdgeCols, k: Int): Map[Long, Long] = {
     val g = undirectedArcs(edges)
     val deg = g.outDegrees.map(_.toLong)
     val removed = new Array[Boolean](deg.length)
@@ -1570,27 +1639,89 @@ object GraphOps {
     g.dstIds.indices.collect { case v if !removed(v) => g.dstIds(v) -> deg(v) }.toMap
   }
 
-  /** The sorted, distinct `ids`: a driver tier's vertex index, where
-    * vertex `ids(i)` has the dense index i. */
-  private def sortedIds(ids: Array[Long]): Array[Long] = {
-    val a = ids.clone()
-    java.util.Arrays.sort(a)
-    var k = 0
-    var i = 0
-    while (i < a.length) {
-      if (k == 0 || a(i) != a(k - 1)) { a(k) = a(i); k += 1 }
-      i += 1
+  private[graft] def driverKCore(edges: Array[(Long, Long)], k: Int): Map[Long, Long] =
+    driverKCore(EdgeCols.of(edges), k)
+
+  /** A driver tier's vertex index: the sorted distinct ids of some id
+    * columns, where vertex `ids(i)` has the dense index i. Ids map to
+    * indices through a primitive open-addressing table (linear probing, a
+    * power-of-two size at most half full, murmur3's 64-bit finalizer as
+    * the hash, so runs of consecutive ids and multiples of 2^32 spread);
+    * only the distinct ids are sorted. */
+  private[operators] final class VertexIndex(cols: Array[Long]*) {
+    private var keys = new Array[Long](1024)
+    private var slots = Array.fill(1024)(-1) // -1: empty, else a dense index
+    private var size = 0
+
+    private def slotOf(id: Long): Int = {
+      var h = id
+      h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
+      h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
+      h ^= h >>> 33
+      var s = h.toInt & (keys.length - 1)
+      while (slots(s) >= 0 && keys(s) != id) s = (s + 1) & (keys.length - 1)
+      s
     }
-    java.util.Arrays.copyOf(a, k)
+
+    private def insert(id: Long): Unit = {
+      val s = slotOf(id)
+      if (slots(s) < 0) {
+        keys(s) = id; slots(s) = size; size += 1
+        if (2 * size > keys.length) grow()
+      }
+    }
+
+    private def grow(): Unit = {
+      val (oldKeys, oldSlots) = (keys, slots)
+      keys = new Array[Long](2 * oldKeys.length)
+      slots = Array.fill(2 * oldSlots.length)(-1)
+      var i = 0
+      while (i < oldKeys.length) {
+        if (oldSlots(i) >= 0) {
+          val s = slotOf(oldKeys(i))
+          keys(s) = oldKeys(i); slots(s) = oldSlots(i)
+        }
+        i += 1
+      }
+    }
+
+    cols.foreach { col =>
+      var k = 0
+      while (k < col.length) { insert(col(k)); k += 1 }
+    }
+
+    /** The distinct ids, ascending. */
+    val ids: Array[Long] = {
+      val distinct = new Array[Long](size)
+      var i = 0
+      while (i < keys.length) { if (slots(i) >= 0) distinct(slots(i)) = keys(i); i += 1 }
+      java.util.Arrays.sort(distinct)
+      i = 0
+      while (i < distinct.length) { slots(slotOf(distinct(i))) = i; i += 1 }
+      distinct
+    }
+
+    /** The dense index of every id in `col`. */
+    def indicesOf(col: Array[Long]): Array[Int] = {
+      val out = new Array[Int](col.length)
+      var k = 0
+      while (k < col.length) {
+        val s = slotOf(col(k))
+        require(slots(s) >= 0, s"vertex ${col(k)} is missing from the vertex index")
+        out(k) = slots(s)
+        k += 1
+      }
+      out
+    }
   }
 
   /** The arcs of a driver-tier graph on primitive arrays, as a CSR of
     * INCOMING arcs sorted by (dst, src): the arcs into dst index j come
     * from the src indices `src(offsets(j) until offsets(j + 1))`,
     * ascending. Indices are positions in the vertex indexes `srcIds` and
-    * `dstIds` ([[sortedIds]]; one array for a one-mode graph, customers
+    * `dstIds` ([[VertexIndex]]; one index for a one-mode graph, customers
     * and parts for HITS). A duplicate arc stays two arcs. */
-  private final class InArcs(val srcIds: Array[Long], val dstIds: Array[Long],
+  private[operators] final class InArcs(val srcIds: Array[Long], val dstIds: Array[Long],
       val offsets: Array[Int], val src: Array[Int]) {
 
     /** The src indices of the arcs into `v`, ascending: v's neighbors,
@@ -1616,26 +1747,39 @@ object GraphOps {
     }
   }
 
-  /** [[InArcs]] of the arcs from(k) → to(k). */
-  private def inArcs(from: Array[Long], to: Array[Long], srcIds: Array[Long],
+  /** [[InArcs]] of the arcs from(k) → to(k), given as indices into
+    * `srcIds` and `dstIds`, with no comparison sort: a stable counting
+    * sort groups the arcs by src, and scattering them in ascending src
+    * order into their dst segments leaves every segment ascending — the
+    * (dst, src) order of a full sort, element for element. */
+  private def inArcs(from: Array[Int], to: Array[Int], srcIds: Array[Long],
       dstIds: Array[Long]): InArcs = {
-    def index(ids: Array[Long], id: Long): Int = {
-      val i = java.util.Arrays.binarySearch(ids, id)
-      require(i >= 0, s"vertex $id is missing from the vertex index")
-      i
-    }
-    val dst = to.map(index(dstIds, _))
-    val offsets = new Array[Int](dstIds.length + 1)
-    dst.foreach(v => offsets(v + 1) += 1)
-    for (v <- dstIds.indices) offsets(v + 1) += offsets(v)
-    val cursor = offsets.clone()
+    val bySrc = segmentStarts(from, srcIds.length)
+    val dstBySrc = new Array[Int](from.length)
+    val next = bySrc.clone()
+    var k = 0
+    while (k < from.length) { dstBySrc(next(from(k))) = to(k); next(from(k)) += 1; k += 1 }
+    val offsets = segmentStarts(to, dstIds.length)
+    val fill = offsets.clone()
     val src = new Array[Int](from.length)
-    for (k <- from.indices) {
-      src(cursor(dst(k))) = index(srcIds, from(k))
-      cursor(dst(k)) += 1
+    var u = 0
+    while (u < srcIds.length) {
+      k = bySrc(u)
+      while (k < bySrc(u + 1)) { val v = dstBySrc(k); src(fill(v)) = u; fill(v) += 1; k += 1 }
+      u += 1
     }
-    for (v <- dstIds.indices) java.util.Arrays.sort(src, offsets(v), offsets(v + 1))
     new InArcs(srcIds, dstIds, offsets, src)
+  }
+
+  /** Where a counting sort of `keys` in [0, n) puts each key: the keys
+    * equal to j fill positions offsets(j) until offsets(j + 1). */
+  private def segmentStarts(keys: Array[Int], n: Int): Array[Int] = {
+    val offsets = new Array[Int](n + 1)
+    var k = 0
+    while (k < keys.length) { offsets(keys(k) + 1) += 1; k += 1 }
+    var j = 0
+    while (j < n) { offsets(j + 1) += offsets(j); j += 1 }
+    offsets
   }
 
   /** Both directions of an undirected edge list ([[bothWays]]) as
@@ -1643,10 +1787,18 @@ object GraphOps {
     * vertex, so it counts twice in that vertex's degree. The fixed-count
     * kernels' driver tiers, [[driverBfs]] and [[driverKCore]] all run on
     * it. */
-  private def undirectedArcs(edges: Array[(Long, Long)]): InArcs = {
-    val (u, v) = (edges.map(_._1), edges.map(_._2))
-    val ids = sortedIds(u ++ v)
-    inArcs(u ++ v, v ++ u, ids, ids)
+  private[operators] def undirectedArcs(edges: EdgeCols): InArcs = {
+    val index = new VertexIndex(edges.u, edges.v)
+    val (u, v) = (index.indicesOf(edges.u), index.indicesOf(edges.v))
+    inArcs(u ++ v, v ++ u, index.ids, index.ids)
+  }
+
+  /** A bipartite (c, p) incidence as [[InArcs]] both ways, (c → p, p → c),
+    * over the customer and part indexes: [[driverHits]]' two half-steps. */
+  private[operators] def incidenceArcs(inc: EdgeCols): (InArcs, InArcs) = {
+    val (cIndex, pIndex) = (new VertexIndex(inc.u), new VertexIndex(inc.v))
+    val (c, p) = (cIndex.indicesOf(inc.u), pIndex.indicesOf(inc.v))
+    (inArcs(c, p, cIndex.ids, pIndex.ids), inArcs(p, c, pIndex.ids, cIndex.ids))
   }
 
   /** q9n: HITS hubs & authorities over the BIPARTITE customer–part
@@ -1702,12 +1854,10 @@ object GraphOps {
     * (part ids ascending, authority scores), unnormalized — the
     * distributed half-steps a(p) = Σ h(c) and h(c) = Σ a(p), each sum in
     * ascending id order. A duplicate (c, p) row counts twice. */
-  private[operators] def driverHits(inc: Array[(Long, Long)], iters: Int):
+  private[operators] def driverHits(inc: EdgeCols, iters: Int):
       ((Array[Long], Array[Double]), (Array[Long], Array[Double])) = {
-    val (c, p) = (inc.map(_._1), inc.map(_._2))
-    val (cIds, pIds) = (sortedIds(c), sortedIds(p))
-    val toP = inArcs(c, p, cIds, pIds)
-    val toC = inArcs(p, c, pIds, cIds)
+    val (toP, toC) = incidenceArcs(inc)
+    val (cIds, pIds) = (toP.srcIds, toP.dstIds)
     val (hub, auth) = (1 to iters).foldLeft(
         (Array.fill(cIds.length)(1.0), Array.empty[Double])) { case ((hub, _), _) =>
       val auth = Array.tabulate(pIds.length)(toP.inSum(_, hub))
@@ -1715,6 +1865,10 @@ object GraphOps {
     }
     ((cIds, hub), (pIds, auth))
   }
+
+  private[operators] def driverHits(inc: Array[(Long, Long)], iters: Int):
+      ((Array[Long], Array[Double]), (Array[Long], Array[Double])) =
+    driverHits(EdgeCols.of(inc), iters)
 
   /** [[hitsOf]]'s distributed tier over the cached incidence `inc` of
     * `incRows` rows. */

@@ -335,4 +335,66 @@ object GraftProperties extends Properties("graft") {
         GraphOps.driverBfs(edges, maxIters = 100) == dist.toMap
       }
     }
+
+  // ---- the driver tiers' InArcs build vs a plain sort-based reference ----
+
+  /** Vertex ids that stress a hash table: small ids and 0, negatives, the
+    * extremes, multiples of 2^32 and long runs of consecutive ids. */
+  private val genIds: Gen[Array[Long]] = for {
+    small <- Gen.listOf(Gen.choose(-5L, 5L))
+    extremes <- Gen.someOf(Long.MinValue, Long.MaxValue, 0L, -1L, Long.MinValue + 1)
+    shifted <- Gen.listOf(Gen.choose(-40L, 40L).map(_ << 32))
+    runStart <- Gen.choose(-3000L, 3000L)
+    runLength <- Gen.choose(0, 1500)
+  } yield (small ++ extremes ++ shifted ++ (runStart until runStart + runLength)).toArray
+
+  /** Up to 3,000 random arcs from `from` to `to`: duplicates included, and
+    * self-loops where the two share ids. */
+  private def genArcs(from: Array[Long], to: Array[Long]): Gen[GraphOps.EdgeCols] =
+    Gen.choose(0, 3000).flatMap(n => Gen.listOfN(n,
+      for (a <- Gen.oneOf(from.toSeq); b <- Gen.oneOf(to.toSeq)) yield (a, b)))
+      .map(arcs => GraphOps.EdgeCols.of(arcs.toArray))
+
+  private val genMultigraph: Gen[GraphOps.EdgeCols] =
+    genIds.suchThat(_.nonEmpty).flatMap(ids => genArcs(ids, ids))
+
+  /** The arcs from(k) → to(k) sorted by (dst, src) index with binary
+    * searches into the sorted distinct ids: (offsets, src). */
+  private def sortedArcs(from: Array[Long], to: Array[Long], srcIds: Array[Long],
+      dstIds: Array[Long]): (Seq[Int], Seq[Int]) = {
+    val arcs = from.indices.map(k => (java.util.Arrays.binarySearch(dstIds, to(k)),
+      java.util.Arrays.binarySearch(srcIds, from(k)))).sorted
+    val perDst = arcs.groupBy(_._1).view.mapValues(_.size).toMap
+    val offsets = dstIds.indices.scanLeft(0)((at, j) => at + perDst.getOrElse(j, 0))
+    (offsets, arcs.map(_._2))
+  }
+
+  private def sameArcs(g: GraphOps.InArcs, from: Array[Long], to: Array[Long]): Boolean = {
+    val (srcIds, dstIds) = (from.distinct.sorted, to.distinct.sorted)
+    val (offsets, src) = sortedArcs(from, to, srcIds, dstIds)
+    g.srcIds.toSeq == srcIds.toSeq && g.dstIds.toSeq == dstIds.toSeq &&
+      g.offsets.toSeq == offsets && g.src.toSeq == src
+  }
+
+  property("undirectedArcs == sorted (dst, src) arcs of both directions") =
+    forAll(genMultigraph) { e =>
+      sameArcs(GraphOps.undirectedArcs(e), e.u ++ e.v, e.v ++ e.u)
+    }
+
+  property("incidenceArcs == sorted (dst, src) arcs of a bipartite incidence") =
+    forAll(genIds.suchThat(_.nonEmpty), genIds.suchThat(_.nonEmpty)) { (cs, ps) =>
+      forAll(genArcs(cs, ps)) { inc =>
+        val (toP, toC) = GraphOps.incidenceArcs(inc)
+        sameArcs(toP, inc.u, inc.v) && sameArcs(toC, inc.v, inc.u)
+      }
+    }
+
+  property("an endpoint missing from the vertex index fails the require") =
+    forAll(genIds.suchThat(_.nonEmpty)) { ids =>
+      val index = new GraphOps.VertexIndex(ids.tail.filter(_ != ids.head))
+      scala.util.Try(index.indicesOf(Array(ids.head))).failed.toOption.exists {
+        case e: IllegalArgumentException => e.getMessage.contains("missing from the vertex index")
+        case _ => false
+      }
+    }
 }

@@ -506,4 +506,111 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
     tiers("q8j communitiesLpaOf", GraphOps.communitiesLpaOf(fx, 10, _))
     tiers("q9n hitsOf", GraphOps.hitsOf(GraphOps.incidence(spark, sfDir), 10, _))
   }
+
+  // ---- byTier: the tier gate and the packed edge fetch ----
+
+  /** The eight tiered kernels over a (u, v) relation at `limit`; HITS reads
+    * the edges as (c, p) incidence rows. */
+  private def tieredKernels(limit: Long): Seq[(String, DataFrame => DataFrame)] = Seq(
+    "componentsAuto" -> (GraphOps.componentsAuto(spark, _, limit)),
+    "betweennessAuto" -> (GraphOps.betweennessAuto(spark, _, limit, 1.0)),
+    "ssspOf" -> (GraphOps.ssspOf(_, 50, limit)),
+    "kCoreOf" -> (GraphOps.kCoreOf(_, 2, 30, limit)),
+    "pageRankOf" -> (GraphOps.pageRankOf(_, 3, 0.85, limit)),
+    "pprOf" -> (GraphOps.pprOf(_, 3, 0.85, limit)),
+    "communitiesLpaOf" -> (GraphOps.communitiesLpaOf(_, 3, limit)),
+    "hitsOf" -> (df => GraphOps.hitsOf(df.toDF("c", "p"), 3, limit)))
+
+  private val tierEdges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+    (2L, 7L), (7L, 8L), (3L, 8L), (8L, 9L))
+
+  /** The jobs `body` runs, counted as the jobs of one job group. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graphspec-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** The jobs of a driver tier (the kernel's rows collected), pinned: a
+    * change to one of these counts must be explained in CHANGES.md. */
+  private val driverTierJobs = Map(
+    ("pageRankOf", false) -> 5, ("pageRankOf", true) -> 5,
+    ("pprOf", false) -> 5, ("pprOf", true) -> 5,
+    ("communitiesLpaOf", false) -> 5, ("communitiesLpaOf", true) -> 5,
+    ("hitsOf", false) -> 5, ("hitsOf", true) -> 5)
+
+  test("byTier: the driver tier evaluates its input exactly once") {
+    import spark.implicits._
+    tieredKernels(5000000L).foreach { case (name, kernel) =>
+      val rows = spark.sparkContext.longAccumulator(s"$name input rows")
+      val bump = udf { (u: Long) => rows.add(1L); u }.asNondeterministic()
+      kernel(tierEdges.toDF("u", "v").select(bump(col("u")).as("u"), col("v"))).collect()
+      assert(rows.sum == tierEdges.size, s"$name evaluated ${rows.sum} input rows")
+    }
+  }
+
+  test("byTier: driverEdgeLimit = m runs the driver tier and m - 1 the distributed tier") {
+    import spark.implicits._
+    val m = tierEdges.size.toLong
+    val e = tierEdges.toDF("u", "v")
+    val atM = jobsOf(GraphOps.pageRankOf(e, 3, 0.85, m).collect())
+    val belowM = jobsOf(GraphOps.pageRankOf(e, 3, 0.85, m - 1).collect())
+    assert(atM == driverTierJobs(("pageRankOf", false)), s"limit m: $atM jobs")
+    assert(belowM > atM, s"limit m - 1: $belowM jobs, limit m: $atM")
+  }
+
+  test("byTier: a null endpoint fails and names its column") {
+    import spark.implicits._
+    val edges = Seq((Option(1L), Option(2L)), (Option(2L), Option(3L)))
+    Seq("u" -> Seq((None, Option(3L))), "v" -> Seq((Option(3L), None))).foreach {
+      case (column, bad) =>
+        for (limit <- Seq(5000000L, 0L)) {
+          val e = (edges ++ bad).toDF("u", "v")
+          val err = intercept[Exception](GraphOps.pageRankOf(e, 3, 0.85, limit).collect())
+          val messages = Iterator.iterate[Throwable](err)(_.getCause)
+            .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+          assert(messages.exists(_.contains(s"graph edge column '$column' holds a null endpoint")),
+            s"null in $column, driverEdgeLimit $limit: $err")
+        }
+    }
+  }
+
+  test("byTier: int (u, v) columns give the rows of long ones; a string column fails analysis") {
+    import spark.implicits._
+    val asInt = tierEdges.map { case (u, v) => (u.toInt, v.toInt) }.toDF("u", "v")
+    tieredKernels(5000000L).foreach { case (name, kernel) =>
+      assert(kernel(asInt).collect().toSeq == kernel(tierEdges.toDF("u", "v")).collect().toSeq,
+        name)
+    }
+    val strings = tierEdges.map { case (u, v) => (u.toString, v.toString) }.toDF("u", "v")
+    intercept[org.apache.spark.sql.AnalysisException](GraphOps.pageRankOf(strings, 3, 0.85))
+  }
+
+  test("byTier: an empty relation gives 0 rows from every tiered kernel at both limits") {
+    import spark.implicits._
+    for (limit <- Seq(5000000L, 0L); (name, kernel) <- tieredKernels(limit))
+      assert(kernel(Seq.empty[(Long, Long)].toDF("u", "v")).collect().isEmpty,
+        s"$name (driverEdgeLimit $limit)")
+  }
+
+  test("driver tiers of the fixed-count kernels run a pinned number of jobs") {
+    import spark.implicits._
+    val inc = tierEdges.map { case (u, v) => (u, 100L + v) }.toDF("c", "p")
+    val e = tierEdges.toDF("u", "v")
+    val kernels: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
+      ("pageRankOf", e, GraphOps.pageRankOf(_, 3, 0.85)),
+      ("pprOf", e, GraphOps.pprOf(_, 3, 0.85)),
+      ("communitiesLpaOf", e, GraphOps.communitiesLpaOf(_, 3)),
+      ("hitsOf", inc, GraphOps.hitsOf(_, 3)))
+    val jobs = for ((name, df, kernel) <- kernels; cached <- Seq(false, true)) yield {
+      if (cached) { df.cache(); df.count() }
+      try (name, cached) -> jobsOf(kernel(df).collect()) finally df.unpersist()
+    }
+    assert(jobs.toMap == driverTierJobs,
+      s"jobs per (kernel, cached input): ${jobs.mkString(", ")}, pinned at " +
+        s"$driverTierJobs; a change to these counts must be explained in CHANGES.md")
+  }
 }
