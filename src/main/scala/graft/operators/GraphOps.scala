@@ -1,6 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -55,10 +56,17 @@ object GraphOps {
     * join+aggregate per query; `.cache()` is lazy, so the first consumer
     * pays the build and the rest read the in-memory copy. The relation is
     * tiny relative to its inputs (edges ≪ lineitem), so pinning it is safe
-    * even at large scale — it's the classic materialized-view shape. */
+    * even at large scale — it's the classic materialized-view shape.
+    *
+    * Stored in (u, v) order: the build ends in one range sort. Once the
+    * cache is materialized, adaptive execution sees its range
+    * partitioning and ordering and drops the exchange and sort of a
+    * reader's own `orderBy("u", "v")` ([[edgesQuery]]): one scan job. The
+    * tiered kernels' driver tiers therefore also receive the edges in one
+    * fixed order, whatever the partitioning. */
   def coPurchaseEdges(spark: SparkSession, dir: String, minShared: Int = 3): DataFrame =
     SharedViews.view("graph.edges", spark, dir, minShared) {
-      buildCoPurchaseEdges(spark, dir, minShared).cache()
+      buildCoPurchaseEdges(spark, dir, minShared).orderBy("u", "v").cache()
     }
 
   private def buildCoPurchaseEdges(spark: SparkSession, dir: String, minShared: Int): DataFrame = {
@@ -70,7 +78,8 @@ object GraphOps {
       .where(col("shared") >= minShared)
   }
 
-  /** Sorted edge list query (oracle-able). */
+  /** Sorted edge list query (oracle-able); one scan of the (u, v)-ordered
+    * [[coPurchaseEdges]] view. */
   def edgesQuery(spark: SparkSession, dir: String): DataFrame =
     coPurchaseEdges(spark, dir).orderBy("u", "v")
 
@@ -122,15 +131,17 @@ object GraphOps {
     * the driver wins outright (a 15k-edge CC is milliseconds there, while
     * every distributed round costs shuffles); above it, the O(log diameter)
     * pointer-jumping propagation. Same contract either way: (vertex,
-    * component=min member id). */
+    * component=min member id), ordered by vertex. The driver tier's rows
+    * are a local relation built in vertex order, so collecting them runs
+    * no job ([[rankRows]]). */
   def componentsAuto(spark: SparkSession, edgeDf: DataFrame,
       driverEdgeLimit: Long = 5000000L): DataFrame =
     byTier(edgeDf, driverEdgeLimit) { cols =>
       import spark.implicits._
       val edges = cols.pairs
       val vertices = edges.iterator.flatMap(x => Iterator(x._1, x._2)).toArray.distinct
-      spark.createDataset(unionFind(vertices, edges).toSeq)
-        .toDF("vertex", "component").orderBy("vertex")
+      spark.createDataset(unionFind(vertices, edges).toSeq.sortBy(_._1))
+        .toDF("vertex", "component")
     }(componentsOf)
 
   /** Min-label propagation with pointer jumping over an arbitrary (u, v)
@@ -141,7 +152,7 @@ object GraphOps {
     * diameter) rounds. `localCheckpoint` truncates the per-round lineage so
     * round N+1 doesn't re-execute rounds 1..N. */
   def componentsOfEdges(edgeDf: DataFrame): DataFrame =
-    withCache(edgeDf.select("u", "v"))(e => componentsOf(e, e.count()))
+    withCache(edgeDf.select("u", "v"))(componentsOf)
 
   /** [[componentsOfEdges]] over the cached (u, v) relation `e` of `m` edges. */
   private def componentsOf(e: DataFrame, m: Long): DataFrame = {
@@ -187,10 +198,10 @@ object GraphOps {
     * (job 1). At most `driverEdgeLimit` edges run `driver` on the
     * concatenated columns ([[EdgeCols]], 16 B per edge; job 2 reads the
     * persisted blocks, and no row object reaches the driver). Above the
-    * limit the packed blocks are dropped and `distributed` runs exactly as
-    * before, on the relation cached for it ([[withCache]]; both tiers
-    * consume it eagerly), with `m` so it need not count again: the edges
-    * never leave the executors, and the one extra cost is job 1's scan.
+    * limit the packed blocks are dropped and `distributed` runs on the
+    * relation cached and filled for it ([[withCache]]; both tiers consume
+    * it eagerly), with `m` so it need not count again: the edges never
+    * leave the executors.
     * The columns are read as `as[(Long, Long)]` reads them: integral
     * columns are up-cast to long, any other type fails analysis, and a
     * null endpoint fails the job. */
@@ -210,7 +221,7 @@ object GraphOps {
     } finally packed.unpersist()
     fetched match {
       case Right(parts) => driver(EdgeCols.concat(parts))
-      case Left(m) => withCache(e)(distributed(_, m))
+      case Left(m) => withCache(e)((cached, _) => distributed(cached, m))
     }
   }
 
@@ -254,13 +265,17 @@ object GraphOps {
       new EdgeCols(Array.concat(parts.map(_._1): _*), Array.concat(parts.map(_._2): _*))
   }
 
-  /** `body` over `df` cached, where this call owns only the cache entry it
-    * made: when the caller already cached `df`'s plan, `df.cache()` IS the
-    * caller's entry, and unpersisting it would drop the caller's cache. */
-  private def withCache(df: DataFrame)(body: DataFrame => DataFrame): DataFrame = {
+  /** `body` over `df` cached and its row count, where this call owns only
+    * the cache entry it made: when the caller already cached `df`'s plan,
+    * `df.cache()` IS the caller's entry, and unpersisting it would drop the
+    * caller's cache. The count is one scan job that fills every partition
+    * of the cache before `body` runs; a cache left for `body`'s stages to
+    * fill is filled inside them, where two concurrent stages can compute
+    * the same partition. */
+  private def withCache(df: DataFrame)(body: (DataFrame, Long) => DataFrame): DataFrame = {
     val owned = df.storageLevel == StorageLevel.NONE
     if (owned) df.cache()
-    try body(df) finally if (owned) df.unpersist()
+    try body(df, df.rdd.count()) finally if (owned) df.unpersist()
   }
 
   // ---------------------------------------------------------------- Brandes
@@ -373,12 +388,22 @@ object GraphOps {
     * computes it once and reuses it, `Community.scala:56`); a keyed
     * [[graft.SharedViews]] view like [[coPurchaseEdges]], so the O(V·E)
     * Brandes pass runs once per (session, dir, minShared), not once per
-    * consumer. */
+    * consumer.
+    *
+    * Stored in q33's and q35's order, [[btwRank]] then (u, v), so their
+    * own `orderBy` of that key reads the view with one scan job, as for
+    * [[coPurchaseEdges]]. q34 ([[communities]]) ranks by the raw `btw`
+    * and sorts explicitly. */
   def betweenness(spark: SparkSession, dir: String, minShared: Int = 3): DataFrame =
     SharedViews.view("graph.betweenness", spark, dir, minShared) {
       betweennessAuto(spark, coPurchaseEdges(spark, dir, minShared).select("u", "v"))
-        .cache()
+        .orderBy(btwRank, col("u"), col("v")).cache()
     }
+
+  /** The removal rank of q33 and q35: betweenness quantized to 1e-9,
+    * descending, so edges whose true values differ by less than that tie
+    * and fall to the (u, v) tiebreak (see [[modularityCurve]]). */
+  private def btwRank: Column = expr("rint(btw * 1e9)").desc
 
   /** q33's oracle-able face: values rounded to 6 dp (the engine-wide float
     * discipline — an independent recomputation's per-edge sums differ at
@@ -386,7 +411,7 @@ object GraphOps {
     * boundaries). The cached raw relation stays untouched for q34/q35. */
   def betweennessQuery(spark: SparkSession, dir: String): DataFrame =
     betweenness(spark, dir)
-      .orderBy(expr("rint(btw * 1e9)").desc, col("u"), col("v"))
+      .orderBy(btwRank, col("u"), col("v"))
       .select(col("u"), col("v"), round(col("btw"), 6).as("btw"))
 
   /** Guarded betweenness entry, mirroring [[componentsAuto]]: count the
@@ -498,11 +523,15 @@ object GraphOps {
     * 6 dp values like [[betweennessQuery]]. This face exists so the
     * 100 TB tier — the one [[betweennessAuto]] routes to when the edge
     * list outgrows the driver — is itself oracle-checked end-to-end, not
-    * just spec-equal to the collect tier on hand graphs. */
+    * just spec-equal to the collect tier on hand graphs. Ordered by
+    * q33's [[btwRank]]: the raw sums of equal true values differ in the
+    * last bits with the partition layout, so a raw-btw order would put
+    * such ties in an order that moves with the physical configuration. */
   def betweennessDistributedQuery(spark: SparkSession, dir: String,
       minShared: Int = 5): DataFrame =
     betweennessDistributed(spark,
         coPurchaseEdges(spark, dir, minShared).select("u", "v"), fraction = 1.0)
+      .orderBy(btwRank, col("u"), col("v"))
       .select(col("u"), col("v"), round(col("btw"), 6).as("btw"))
 
   /** Source-sampling key in [0, 1e6): pmod of the PORTABLE md5-quadword
@@ -538,8 +567,6 @@ object GraphOps {
     byTier(edgeDf, driverEdgeLimit) { edges =>
       import spark.implicits._
       val g = buildCsr(edges.pairs)
-      val bc = spark.sparkContext.broadcast(g)
-      val n = g.verts.length
       // Source selection is keyed by vertex ID through the SAME expression
       // as the distributed tier ([[portableSourceKey]] < f·1e6) — a fraction
       // must pick the identical source set on both sides of the
@@ -553,27 +580,7 @@ object GraphOps {
         g.verts.map(keepIds.contains)
       }
       val bcKeep = spark.sparkContext.broadcast(keepByIdx)
-      val keep = (s: Int) => bcKeep.value(s)
-      val credits = spark.sparkContext.parallelize(0 until n, 32)
-        .mapPartitions { sources =>
-          val csr = bc.value
-          val m = csr.edges.length
-          val nn = csr.verts.length
-          val acc = new Array[Double](m)
-          val dist = Array.fill(nn)(-1)
-          val sigma = new Array[Double](nn)
-          val delta = new Array[Double](nn)
-          val order = new Array[Int](nn)
-          val sink = new DenseCredits(acc)
-          sources.filter(keep)
-            .foreach(s => brandesOneSource(csr, s, sink, dist, sigma, delta, order))
-          Iterator.single(acc)
-        }
-        .treeReduce { (a, b) =>
-          var i = 0
-          while (i < a.length) { a(i) += b(i); i += 1 }
-          a
-        }
+      val credits = denseCredits(spark, g, s => bcKeep.value(s))
       spark.createDataset(
           g.edges.indices.map(e =>
             (g.edges(e)._1, g.edges(e)._2, credits(e) / 2.0 / fraction)))
@@ -586,41 +593,73 @@ object GraphOps {
 
   /** Distributed Brandes over an explicit undirected edge list. Tiered:
     * below `sparseEdgeThreshold` each task accumulates into one dense
-    * `double[E]` and a 32-array treeReduce sums them (fastest; E ≲ 2·10⁷ ⇒
-    * ≤ 160 MB per task); above it, the dense array would blow the task
-    * heap, so [[betweennessOfEdgesSparse]] shuffle-sums (edgeId, credit)
-    * instead. */
+    * `double[E]` and the 32 arrays are summed in a fixed order
+    * ([[denseCredits]]; fastest; E ≲ 2·10⁷ ⇒ ≤ 160 MB per task); above it,
+    * the dense array would blow the task heap, so
+    * [[betweennessOfEdgesSparse]] shuffle-sums (edgeId, credit) instead.
+    * Rows are sorted by raw btw desc, (u, v) ([[betweenness]] re-sorts
+    * them by its rank). */
   def betweennessOfEdges(spark: SparkSession, edges: Array[(Long, Long)],
       sparseEdgeThreshold: Int = 20000000): DataFrame = {
     import spark.implicits._
     if (edges.length > sparseEdgeThreshold)
       return betweennessOfEdgesSparse(spark, edges)
     val g = buildCsr(edges)
+    val credits = denseCredits(spark, g, _ => true)
+    spark.createDataset(
+        g.edges.indices.map(e => (g.edges(e)._1, g.edges(e)._2, credits(e) / 2.0)))
+      .toDF("u", "v", "btw")
+      .orderBy(col("btw").desc, col("u"), col("v"))
+  }
+
+  /** Σ of the Brandes credit of the sources `keep` selects, per edge id of
+    * `g`: the sources are spread over 32 partitions, each task folds its
+    * sources into one dense `double[E]`, and the 32 arrays are summed in
+    * partition order, so the doubles do not depend on which task finishes
+    * first. The arrays are persisted to disk (job 1 runs the BFS tasks),
+    * then one task reads them back in order and sums them (job 2): the
+    * driver receives one array. */
+  private def denseCredits(spark: SparkSession, g: Csr,
+      keep: Int => Boolean): Array[Double] = {
     val bc = spark.sparkContext.broadcast(g)
-    val n = g.verts.length
-    val credits = spark.sparkContext.parallelize(0 until n, 32)
+    val partials = spark.sparkContext.parallelize(0 until g.verts.length, 32)
       .mapPartitions { sources =>
         val csr = bc.value
-        val m = csr.edges.length
         val nn = csr.verts.length
-        val acc = new Array[Double](m)
+        val acc = new Array[Double](csr.edges.length)
         val dist = Array.fill(nn)(-1)
         val sigma = new Array[Double](nn)
         val delta = new Array[Double](nn)
         val order = new Array[Int](nn)
         val sink = new DenseCredits(acc)
-        sources.foreach(s => brandesOneSource(csr, s, sink, dist, sigma, delta, order))
+        sources.filter(keep)
+          .foreach(s => brandesOneSource(csr, s, sink, dist, sigma, delta, order))
         Iterator.single(acc)
       }
-      .treeReduce { (a, b) =>
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      }
-    spark.createDataset(
-        g.edges.indices.map(e => (g.edges(e)._1, g.edges(e)._2, credits(e) / 2.0)))
-      .toDF("u", "v", "btw")
-      .orderBy(col("btw").desc, col("u"), col("v"))
+      .persist(StorageLevel.DISK_ONLY)
+    try {
+      partials.count()
+      val m = g.edges.length // not `g`: the closure would ship the CSR
+      partials.coalesce(1, shuffle = false, Some(InPartitionOrder))
+        .mapPartitions { accs =>
+          val sum = new Array[Double](m)
+          accs.foreach { a =>
+            var i = 0
+            while (i < a.length) { sum(i) += a(i); i += 1 }
+          }
+          Iterator.single(sum)
+        }
+        .collect().head
+    } finally partials.unpersist()
+  }
+
+  /** One partition of all of a parent's partitions, in index order. */
+  private object InPartitionOrder extends PartitionCoalescer with Serializable {
+    override def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val all = new PartitionGroup()
+      all.partitions ++= parent.partitions
+      Array(all)
+    }
   }
 
   /** Sparse betweenness tier: each task accumulates only the edges its
@@ -730,11 +769,15 @@ object GraphOps {
     * then zoom ÷5, stopping when the community-count jump ≤ 1).
     * Output: one row per community at the modularity peak:
     * (community = min member id, size, members csv sorted).
+    * The removal order is raw betweenness descending, then (u, v) (a
+    * total order: (u, v) is unique), sorted here explicitly: the
+    * [[betweenness]] view is stored in q33's quantized rank order.
     */
   def communities(spark: SparkSession, dir: String, minShared: Int = 3,
       driverEdgeLimit: Long = 5000000L): DataFrame = {
     import spark.implicits._
-    val rankedDf = betweenness(spark, dir, minShared).select("u", "v")
+    val rankedDf = betweenness(spark, dir, minShared)
+      .orderBy(col("btw").desc, col("u"), col("v")).select("u", "v")
     // GN's search is driver-coordinated BY REFERENCE SEMANTICS (union-find
     // over the residual edge list per candidate k, `Community.scala:67-148`)
     // — above the limit that collect is a driver OOM, so fail fast and name
@@ -745,7 +788,7 @@ object GraphOps {
     require(rankedDf.count() <= driverEdgeLimit,
       s"Girvan-Newman is driver-coordinated (reference semantics); above " +
         s"$driverEdgeLimit edges use GraphOps.communitiesLpa (distributed LPA) instead")
-    val ranked = rankedDf.as[(Long, Long)].collect() // already sorted btw desc
+    val ranked = rankedDf.as[(Long, Long)].collect()
     val prober = new GnProber(ranked)
     def qAfterRemoving(k: Int): Double = prober.modularityAt(k)
     // Coarse pass: step until modularity drops (Community.scala:67-109).
@@ -1136,13 +1179,19 @@ object GraphOps {
     }
   }
 
-  /** A driver tier's (vertex ids, ranks) as the distributed tiers' rows:
-    * (v, rank), rounded by Spark's `round` to 8 dp, ordered by v. */
+  /** A driver tier's (vertex ids ascending, ranks) as the distributed
+    * tiers' rows: (v, rank), rounded by Spark's `round` to 8 dp, ordered
+    * by v. The rows are stored in that order, with no `orderBy`: the
+    * projection over the local relation is folded into it by the
+    * optimizer (`ConvertToLocalRelation`, evaluating Spark's own `round`),
+    * so collecting the result runs no job. A reader that needs the order
+    * after a further transformation sorts explicitly. The other driver
+    * tiers build their rows the same way. */
   private def rankRows(spark: SparkSession,
       ranks: (Array[Long], Array[Double])): DataFrame = {
     import spark.implicits._
     spark.createDataset(ranks._1.toSeq.zip(ranks._2)).toDF("v", "r")
-      .select(col("v"), round(col("r"), 8).as("rank")).orderBy("v")
+      .select(col("v"), round(col("r"), 8).as("rank"))
   }
 
   /** One PageRank superstep — the loop body of [[pageRank]], factored out
@@ -1292,9 +1341,8 @@ object GraphOps {
     val spark = e0.sparkSession
     import spark.implicits._
     byTier(e0, driverEdgeLimit) { edges =>
-      val (ids, labels) = driverLpa(edges, iters)
+      val (ids, labels) = driverLpa(edges, iters) // ids ascending (rankRows)
       spark.createDataset(ids.toSeq.zip(labels)).toDF("vertex", "community")
-        .orderBy("vertex")
     } { (e, m) =>
       // lpaStep joins nbrs(v) = labels(vertex) every round (see keyedStatic)
       val nbrs = keyedStatic(bothWays(e), 2 * m, "v")
@@ -1506,10 +1554,10 @@ object GraphOps {
     val spark = e0.sparkSession
     import spark.implicits._
     byTier(e0, driverEdgeLimit) { edges =>
-      spark.createDataset(driverBfs(edges, maxIters).toSeq)
+      // stored in vertex order (rankRows)
+      spark.createDataset(driverBfs(edges, maxIters).toSeq.sortBy(_._1))
         .toDF("vertex", "dist")
         .select(col("vertex"), col("dist").cast("int").as("dist"))
-        .orderBy("vertex")
     } { (e, m) =>
       // ssspStep joins frontier(vertex) = nbrs(u) every round (see
       // keyedStatic)
@@ -1591,8 +1639,9 @@ object GraphOps {
     val spark = e0.sparkSession
     import spark.implicits._
     byTier(e0, driverEdgeLimit) { edges =>
-      spark.createDataset(driverKCore(edges, k).toSeq)
-        .toDF("vertex", "core_degree").orderBy("vertex")
+      // stored in vertex order (rankRows)
+      spark.createDataset(driverKCore(edges, k).toSeq.sortBy(_._1))
+        .toDF("vertex", "core_degree")
     } { (cached, m) =>
       var e = cached.localCheckpoint()
       var prev = -1L
@@ -1841,10 +1890,11 @@ object GraphOps {
         val nrm = math.sqrt(n2)
         ids.indices.map(i => (role, ids(i), x(i) / nrm))
       }
-      spark.createDataset(unit("hub", cs, hub) ++ unit("authority", ps, auth))
+      // stored in (role, id) order (rankRows): authority rows, then hub
+      // rows, ids ascending within each
+      spark.createDataset(unit("authority", ps, auth) ++ unit("hub", cs, hub))
         .toDF("role", "id", "score")
         .select(col("role"), col("id"), round(col("score"), 8).as("score"))
-        .orderBy("role", "id")
     } { (e, m) =>
       distributedHits(e.select(col("u").as("c"), col("v").as("p")), m, iters)
     }
@@ -1977,9 +2027,7 @@ object GraphOps {
     // id on BOTH sides, and the oracle's SQL Brandes replays the exact
     // same removal prefixes. (q34's GN search keeps the raw order — its
     // golden parity is against the reference's own run, not an oracle.)
-    val rankedDf = betweenness(spark, dir, minShared)
-      .orderBy(expr("rint(btw * 1e9)").desc, col("u"), col("v"))
-      .select("u", "v")
+    val rankedDf = rankedEdges(spark, dir, minShared)
     require(rankedDf.count() <= driverEdgeLimit,
       s"modularity curve walks the GN residual graph on the driver; above " +
         s"$driverEdgeLimit edges use GraphOps.communitiesLpa instead")
@@ -1993,4 +2041,12 @@ object GraphOps {
     }
     spark.createDataset(rows).toDF("removed", "n_communities", "modularity")
   }
+
+  /** q35's removal order: the (u, v) of [[betweenness]] by [[btwRank]],
+    * then (u, v) — the view's stored order, read with one scan. */
+  private[operators] def rankedEdges(spark: SparkSession, dir: String,
+      minShared: Int = 3): DataFrame =
+    betweenness(spark, dir, minShared)
+      .orderBy(btwRank, col("u"), col("v"))
+      .select("u", "v")
 }

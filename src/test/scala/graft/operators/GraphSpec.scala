@@ -537,10 +537,13 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
   /** The jobs of a driver tier (the kernel's rows collected), pinned: a
     * change to one of these counts must be explained in CHANGES.md. */
   private val driverTierJobs = Map(
-    ("pageRankOf", false) -> 5, ("pageRankOf", true) -> 5,
-    ("pprOf", false) -> 5, ("pprOf", true) -> 5,
-    ("communitiesLpaOf", false) -> 5, ("communitiesLpaOf", true) -> 5,
-    ("hitsOf", false) -> 5, ("hitsOf", true) -> 5)
+    ("pageRankOf", false) -> 2, ("pageRankOf", true) -> 2,
+    ("pprOf", false) -> 2, ("pprOf", true) -> 2,
+    ("communitiesLpaOf", false) -> 2, ("communitiesLpaOf", true) -> 2,
+    ("hitsOf", false) -> 2, ("hitsOf", true) -> 2,
+    ("ssspOf", false) -> 2, ("ssspOf", true) -> 2,
+    ("kCoreOf", false) -> 2, ("kCoreOf", true) -> 2,
+    ("componentsAuto", false) -> 2, ("componentsAuto", true) -> 2)
 
   test("byTier: the driver tier evaluates its input exactly once") {
     import spark.implicits._
@@ -596,21 +599,105 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
         s"$name (driverEdgeLimit $limit)")
   }
 
-  test("driver tiers of the fixed-count kernels run a pinned number of jobs") {
-    import spark.implicits._
-    val inc = tierEdges.map { case (u, v) => (u, 100L + v) }.toDF("c", "p")
-    val e = tierEdges.toDF("u", "v")
-    val kernels: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
-      ("pageRankOf", e, GraphOps.pageRankOf(_, 3, 0.85)),
-      ("pprOf", e, GraphOps.pprOf(_, 3, 0.85)),
-      ("communitiesLpaOf", e, GraphOps.communitiesLpaOf(_, 3)),
-      ("hitsOf", inc, GraphOps.hitsOf(_, 3)))
+  /** Asserts [[driverTierJobs]] for `kernels` (name, input, kernel), each
+    * run with its rows collected on an uncached and on a cached input. */
+  private def assertPinnedJobs(kernels: Seq[(String, DataFrame, DataFrame => DataFrame)]): Unit = {
     val jobs = for ((name, df, kernel) <- kernels; cached <- Seq(false, true)) yield {
       if (cached) { df.cache(); df.count() }
       try (name, cached) -> jobsOf(kernel(df).collect()) finally df.unpersist()
     }
-    assert(jobs.toMap == driverTierJobs,
+    val pinned = driverTierJobs.filter { case ((name, _), _) => kernels.exists(_._1 == name) }
+    assert(jobs.toMap == pinned,
       s"jobs per (kernel, cached input): ${jobs.mkString(", ")}, pinned at " +
-        s"$driverTierJobs; a change to these counts must be explained in CHANGES.md")
+        s"$pinned; a change to these counts must be explained in CHANGES.md")
+  }
+
+  test("driver tiers of the fixed-count kernels run a pinned number of jobs") {
+    import spark.implicits._
+    val inc = tierEdges.map { case (u, v) => (u, 100L + v) }.toDF("c", "p")
+    val e = tierEdges.toDF("u", "v")
+    assertPinnedJobs(Seq(
+      ("pageRankOf", e, GraphOps.pageRankOf(_, 3, 0.85)),
+      ("pprOf", e, GraphOps.pprOf(_, 3, 0.85)),
+      ("communitiesLpaOf", e, GraphOps.communitiesLpaOf(_, 3)),
+      ("hitsOf", inc, GraphOps.hitsOf(_, 3))))
+  }
+
+  test("driver tiers of sssp, k-core and components run a pinned number of jobs") {
+    import spark.implicits._
+    val e = tierEdges.toDF("u", "v")
+    assertPinnedJobs(Seq(
+      ("ssspOf", e, GraphOps.ssspOf(_, 50)),
+      ("kCoreOf", e, GraphOps.kCoreOf(_, 2, 30)),
+      ("componentsAuto", e, GraphOps.componentsAuto(spark, _))))
+  }
+
+  test("driver tiers store their rows in key order, under a shuffled input too") {
+    import spark.implicits._
+    val keys = Map("componentsAuto" -> Seq("vertex"), "ssspOf" -> Seq("vertex"),
+      "kCoreOf" -> Seq("vertex"), "pageRankOf" -> Seq("v"), "pprOf" -> Seq("v"),
+      "communitiesLpaOf" -> Seq("vertex"), "hitsOf" -> Seq("role", "id"))
+    // a random multigraph: several components, duplicate edges, self-loops
+    val rnd = new scala.util.Random(17)
+    val edges = Seq.fill(400)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+    val inputs = Seq("as drawn" -> edges,
+      "shuffled" -> new scala.util.Random(3).shuffle(edges),
+      "sorted descending" -> edges.sorted.reverse)
+    // betweennessAuto keeps its sort: it feeds the sorted betweenness view
+    for ((name, kernel) <- tieredKernels(5000000L) if keys.contains(name);
+        (order, es) <- inputs) {
+      val rows = kernel(es.toDF("u", "v"))
+      val got = rows.collect().toSeq
+      assert(got.size > 1, s"$name, input $order")
+      assert(got == rows.orderBy(keys(name).map(col): _*).collect().toSeq,
+        s"$name, input $order: rows not in ${keys(name).mkString(", ")} order")
+    }
+  }
+
+  test("sorted graph views: q30, q33 and q35 read their order with one job each") {
+    GraphOps.betweennessQuery(spark, sfDir).collect() // builds both views
+    // the same ordered reads over a local copy of each view: a real sort
+    def copyOf(df: DataFrame) = spark.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val rank = expr("rint(btw * 1e9)").desc
+    val btw = copyOf(GraphOps.betweenness(spark, sfDir))
+    val reads: Seq[(String, () => DataFrame, DataFrame)] = Seq(
+      ("q30", () => GraphOps.edgesQuery(spark, sfDir),
+        copyOf(GraphOps.coPurchaseEdges(spark, sfDir)).orderBy("u", "v")),
+      ("q33", () => GraphOps.betweennessQuery(spark, sfDir),
+        btw.orderBy(rank, col("u"), col("v"))
+          .select(col("u"), col("v"), round(col("btw"), 6).as("btw"))),
+      ("q35 removal order", () => GraphOps.rankedEdges(spark, sfDir),
+        btw.orderBy(rank, col("u"), col("v")).select("u", "v")))
+    reads.foreach { case (name, read, sorted) =>
+      var rows = Seq.empty[org.apache.spark.sql.Row]
+      val jobs = jobsOf { rows = read().collect().toSeq }
+      assert(jobs == 1, s"$name ran $jobs jobs")
+      val want = sorted.collect().toSeq
+      assert(want.size > 100, name)
+      assert(rows == want, s"$name: rows differ from an explicit sort")
+    }
+  }
+
+  test("betweenness view: raw btw bits do not depend on task order or shuffle.partitions") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    def rawBits(partitions: Int): Seq[(Long, Long, Long)] = {
+      spark.conf.set(key, partitions.toString)
+      graft.SharedViews.clearAll()
+      GraphOps.betweenness(spark, sfDir).collect().toSeq.map(r => (r.getLong(0),
+        r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+    }
+    try {
+      val runs = Seq(4, 4, 1, 7).map(p => p -> rawBits(p))
+      val (_, first) = runs.head
+      assert(first.size > 100)
+      runs.tail.foreach { case (p, bits) =>
+        assert(bits == first, s"shuffle.partitions $p: rows or btw bits differ from the first run")
+      }
+    } finally {
+      spark.conf.set(key, saved)
+      graft.SharedViews.clearAll()
+    }
   }
 }
