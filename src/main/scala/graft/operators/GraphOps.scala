@@ -2,9 +2,12 @@ package graft.operators
 
 import scala.collection.mutable
 import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.{SharedViews, Tables}
 
@@ -19,7 +22,9 @@ import graft.{SharedViews, Tables}
   *
   * Spark-first deviations (same semantics, scalable plans):
   *  - Edge construction is an equi-join on partkey + groupBy-count ≥ k, NOT
-  *    the reference's O(n²) constant-key self-join (`Betweenness.scala:27-29`).
+  *    the reference's O(n²) constant-key self-join (`Betweenness.scala:27-29`);
+  *    at or below the driver limit, the same count runs on the driver as a
+  *    row-wise sparse product over the incidence ([[coPurchaseEdgesOf]]).
   *  - Connected components is an iterative DataFrame min-label propagation
   *    (large-graph path), not a driver adjacency walk.
   *  - Betweenness distributes one Brandes BFS per source over executors with
@@ -35,6 +40,10 @@ import graft.{SharedViews, Tables}
   *    quirk) without enumerating V² pairs.
   */
 object GraphOps {
+
+  /** The default edge count at or below which a tiered kernel runs on the
+    * driver ([[byTier]]). */
+  private[graft] val DriverEdgeLimit = 5000000L
 
   /** Distinct customer–part incidence (c, p) — the shared base relation of
     * the co-purchase graph AND item-item CF ([[Recommend]]); a keyed
@@ -53,29 +62,118 @@ object GraphOps {
     * whole graph family (degrees, components, betweenness, communities,
     * modularity) consumes this one relation, so it is a keyed
     * [[graft.SharedViews]] view per (session, dir, minShared) instead of a
-    * join+aggregate per query; `.cache()` is lazy, so the first consumer
-    * pays the build and the rest read the in-memory copy. The relation is
-    * tiny relative to its inputs (edges ≪ lineitem), so pinning it is safe
-    * even at large scale — it's the classic materialized-view shape.
+    * join+aggregate per query: the first consumer pays the build and the
+    * rest read the stored copy. The relation is tiny relative to its
+    * inputs (edges ≪ lineitem), so pinning it is safe even at large
+    * scale — it's the classic materialized-view shape.
     *
-    * Stored in (u, v) order: the build ends in one range sort. Once the
-    * cache is materialized, adaptive execution sees its range
-    * partitioning and ordering and drops the exchange and sort of a
-    * reader's own `orderBy("u", "v")` ([[edgesQuery]]): one scan job. The
-    * tiered kernels' driver tiers therefore also receive the edges in one
-    * fixed order, whatever the partitioning. */
+    * Stored in (u, v) order, range-partitioned on it, in one of two tiers
+    * ([[coPurchaseEdgesOf]]): at most [[DriverEdgeLimit]] incidence rows
+    * are counted on the driver and stored as a relation whose order the
+    * plan carries ([[Bridge.presorted]], no Spark sort); above it, the
+    * pair join is cached after one range sort. Either way a reader's own
+    * `orderBy("u", "v")` ([[edgesQuery]]) plans with no exchange and no
+    * sort (on the join tier, once its cache is materialized): one scan
+    * job. The tiered kernels' driver tiers therefore also receive the
+    * edges in one fixed order, whatever the partitioning. */
   def coPurchaseEdges(spark: SparkSession, dir: String, minShared: Int = 3): DataFrame =
     SharedViews.view("graph.edges", spark, dir, minShared) {
-      buildCoPurchaseEdges(spark, dir, minShared).orderBy("u", "v").cache()
+      coPurchaseEdgesOf(incidence(spark, dir), minShared)
     }
 
-  private def buildCoPurchaseEdges(spark: SparkSession, dir: String, minShared: Int): DataFrame = {
-    val cp = incidence(spark, dir)
+  /** The co-purchase edges of a (c, p) incidence, in (u, v) order. The
+    * incidence enters [[fetchEdges]] as (u = c, v = p). At most
+    * `driverEdgeLimit` rows are counted on the driver
+    * ([[countCoPurchases]]), unless a hot part makes the candidate pairs
+    * exceed [[PairsPerEdge]] × `driverEdgeLimit`; otherwise, and above the
+    * limit, the pair join ([[coPurchaseJoin]]) is sorted and cached. Both
+    * tiers give the join's rows and column types. */
+  private[operators] def coPurchaseEdgesOf(inc: DataFrame, minShared: Int,
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
+    def joined = coPurchaseJoin(inc, minShared).orderBy("u", "v").cache()
+    fetchEdges(inc.select(col("c").as("u"), col("p").as("v")), driverEdgeLimit) match {
+      case Right(cols) =>
+        countCoPurchases(cols, minShared, PairsPerEdge * driverEdgeLimit).fold(joined) { rows =>
+          val spark = inc.sparkSession
+          val c = inc.schema("c")
+          val schema = StructType(Seq(StructField("u", LongType, c.nullable),
+            StructField("v", LongType, c.nullable),
+            StructField("shared", LongType, nullable = false)))
+          Bridge.presorted(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+            .select(col("u").cast(c.dataType), col("v").cast(c.dataType), col("shared")),
+            col("u"), col("v"))
+        }
+      case Left(_) => joined
+    }
+  }
+
+  /** The candidate pairs a driver co-purchase count may visit, per
+    * incidence row the driver tier admits: 10^8 pairs at
+    * [[DriverEdgeLimit]]. [[countCoPurchases]] visits about 2·10^7
+    * pairs/s on one core (sf0.1's 8,978,844 pairs in 0.48–0.63 s on a
+    * 4-core host), so the bound caps the driver count near 5 s; the pair
+    * join it replaces moved about 7·10^5 pairs/s on all four cores of
+    * that host (sf0.1: 13.5–15.0 s). */
+  private val PairsPerEdge = 20L
+
+  /** Undirected co-purchase pairs u < v with at least `minShared` shared
+    * parts — the reference's co-rating edge rule as an equi-join on the
+    * part plus a group count. */
+  private def coPurchaseJoin(cp: DataFrame, minShared: Int): DataFrame = {
     val a = cp.as("a"); val b = cp.as("b")
     a.join(b, col("a.p") === col("b.p") && col("a.c") < col("b.c"))
       .groupBy(col("a.c").as("u"), col("b.c").as("v"))
       .agg(count(lit(1)).as("shared"))
       .where(col("shared") >= minShared)
+  }
+
+  /** [[coPurchaseJoin]] on the driver over the (u = c, v = p) incidence
+    * columns, as (u, v, shared) rows in (u, v) order; None when the
+    * candidate pairs Σ_p C(H_p, 2) (H_p = buyers of part p) exceed
+    * `maxPairs`. A row-wise sparse product (Gustavson, ACM TOMS 1978):
+    * for each customer u in ascending order, every co-buyer v > u of each
+    * of u's parts bumps a dense counter, and the touched v are emitted in
+    * ascending order and reset. O(Σ_p H_p²) time, O(customers) scratch,
+    * and no pair is stored. A duplicate incidence row counts as the join
+    * counts it. */
+  private[operators] def countCoPurchases(inc: EdgeCols, minShared: Int,
+      maxPairs: Long): Option[Array[Row]] = {
+    val (buyers, parts) = incidenceArcs(inc)
+    val candidates = (0 until buyers.dstIds.length).iterator.map { p =>
+      val h = (buyers.offsets(p + 1) - buyers.offsets(p)).toLong
+      h * (h - 1) / 2
+    }.sum
+    if (candidates > maxPairs) return None
+    val ids = parts.dstIds
+    val shared = new Array[Int](ids.length)
+    val touched = new Array[Int](ids.length)
+    val rows = Array.newBuilder[Row]
+    var u = 0
+    while (u < ids.length) {
+      var t = 0
+      var k = parts.offsets(u)
+      while (k < parts.offsets(u + 1)) {
+        val p = parts.src(k)
+        var j = buyers.offsets(p + 1) - 1 // buyers ascending: walk down to u
+        while (j >= buyers.offsets(p) && buyers.src(j) > u) {
+          val v = buyers.src(j)
+          if (shared(v) == 0) { touched(t) = v; t += 1 }
+          shared(v) += 1
+          j -= 1
+        }
+        k += 1
+      }
+      java.util.Arrays.sort(touched, 0, t)
+      var i = 0
+      while (i < t) {
+        val v = touched(i)
+        if (shared(v) >= minShared) rows += Row(ids(u), ids(v), shared(v).toLong)
+        shared(v) = 0
+        i += 1
+      }
+      u += 1
+    }
+    Some(rows.result())
   }
 
   /** Sorted edge list query (oracle-able); one scan of the (u, v)-ordered
@@ -98,13 +196,7 @@ object GraphOps {
     val cp = incidence(spark, dir)
     val keep = cp.groupBy("p").agg(count(lit(1)).as("n_buyers"))
       .where(col("n_buyers") <= hotItemCap).select("p")
-    val capped = cp.join(keep, Seq("p"), "left_semi")
-    val a = capped.as("a"); val b = capped.as("b")
-    a.join(b, col("a.p") === col("b.p") && col("a.c") < col("b.c"))
-      .groupBy(col("a.c").as("u"), col("b.c").as("v"))
-      .agg(count(lit(1)).as("shared"))
-      .where(col("shared") >= minShared)
-      .orderBy("u", "v")
+    coPurchaseJoin(cp.join(keep, Seq("p"), "left_semi"), minShared).orderBy("u", "v")
   }
 
   /** Vertex degrees over the co-purchase graph (oracle-able). One pass:
@@ -135,7 +227,7 @@ object GraphOps {
     * are a local relation built in vertex order, so collecting them runs
     * no job ([[rankRows]]). */
   def componentsAuto(spark: SparkSession, edgeDf: DataFrame,
-      driverEdgeLimit: Long = 5000000L): DataFrame =
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame =
     byTier(edgeDf, driverEdgeLimit) { cols =>
       import spark.implicits._
       val edges = cols.pairs
@@ -207,7 +299,15 @@ object GraphOps {
     * null endpoint fails the job. */
   private def byTier(edgeDf: DataFrame, driverEdgeLimit: Long)(
       driver: EdgeCols => DataFrame)(
-      distributed: (DataFrame, Long) => DataFrame): DataFrame = {
+      distributed: (DataFrame, Long) => DataFrame): DataFrame =
+    fetchEdges(edgeDf, driverEdgeLimit) match {
+      case Right(cols) => driver(cols)
+      case Left(m) => withCache(edgeDf.select("u", "v"))((cached, _) => distributed(cached, m))
+    }
+
+  /** [[byTier]]'s gate: the (u, v) columns of `edgeDf` when it has at
+    * most `driverEdgeLimit` rows, else its row count (jobs 1 and 2). */
+  private def fetchEdges(edgeDf: DataFrame, driverEdgeLimit: Long): Either[Long, EdgeCols] = {
     val e = edgeDf.select("u", "v")
     val spark = e.sparkSession
     import spark.implicits._
@@ -215,14 +315,10 @@ object GraphOps {
     val packed = e.select(col("u").cast("long"), col("v").cast("long"))
       .queryExecution.toRdd.mapPartitions(packColumns)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val fetched = try {
+    try {
       val m = packed.map(_._1.length.toLong).fold(0L)(_ + _)
-      if (m <= driverEdgeLimit) Right(packed.collect()) else Left(m)
+      if (m <= driverEdgeLimit) Right(EdgeCols.concat(packed.collect())) else Left(m)
     } finally packed.unpersist()
-    fetched match {
-      case Right(parts) => driver(EdgeCols.concat(parts))
-      case Left(m) => withCache(e)((cached, _) => distributed(cached, m))
-    }
   }
 
   /** One partition of [[byTier]]'s (u, v) rows as two long columns. A
@@ -392,12 +488,25 @@ object GraphOps {
     *
     * Stored in q33's and q35's order, [[btwRank]] then (u, v), so their
     * own `orderBy` of that key reads the view with one scan job, as for
-    * [[coPurchaseEdges]]. q34 ([[communities]]) ranks by the raw `btw`
-    * and sorts explicitly. */
+    * [[coPurchaseEdges]]. Tiered like [[betweennessAuto]]: at most
+    * [[DriverEdgeLimit]] edges run the exact Brandes pass, whose rows are
+    * sorted on the driver and stored as a relation whose order the plan
+    * carries ([[Bridge.presorted]], no Spark sort); above it, the sampled
+    * distributed tier is sorted and cached. q34 ([[communities]]) ranks
+    * by the raw `btw` and sorts explicitly. */
   def betweenness(spark: SparkSession, dir: String, minShared: Int = 3): DataFrame =
     SharedViews.view("graph.betweenness", spark, dir, minShared) {
-      betweennessAuto(spark, coPurchaseEdges(spark, dir, minShared).select("u", "v"))
-        .orderBy(btwRank, col("u"), col("v")).cache()
+      val rank = Seq(btwRank, col("u"), col("v"))
+      byTier(coPurchaseEdges(spark, dir, minShared), DriverEdgeLimit) { e =>
+        import spark.implicits._
+        val rows = btwRows(spark, e.pairs).sortWith { (a, b) =>
+          val byRank = SQLOrderingUtil.compareDoubles(math.rint(b._3 * 1e9), math.rint(a._3 * 1e9))
+          if (byRank != 0) byRank < 0 else if (a._1 != b._1) a._1 < b._1 else a._2 < b._2
+        }
+        Bridge.presorted(spark.createDataset(rows).toDF("u", "v", "btw"), rank: _*)
+      } { (e, _) =>
+        betweennessDistributed(spark, e, SampledFraction).orderBy(rank: _*).cache()
+      }
     }
 
   /** The removal rank of q33 and q35: betweenness quantized to 1e-9,
@@ -423,9 +532,12 @@ object GraphOps {
     * DataFrame joins. `fraction` applies only to the over-limit tier
     * (exact under the limit). */
   def betweennessAuto(spark: SparkSession, edgeDf: DataFrame,
-      driverEdgeLimit: Long = 5000000L, fraction: Double = 0.05): DataFrame =
+      driverEdgeLimit: Long = DriverEdgeLimit, fraction: Double = SampledFraction): DataFrame =
     byTier(edgeDf, driverEdgeLimit)(e => betweennessOfEdges(spark, e.pairs))(
       (e, _) => betweennessDistributed(spark, e, fraction))
+
+  /** The source fraction of the sampled betweenness tier above the limit. */
+  private val SampledFraction = 0.05
 
   /** Brandes with NO driver-side edge materialization: BFS state lives in
     * (src, v)-keyed relations, partitioned across executors by key — the
@@ -562,7 +674,7 @@ object GraphOps {
     * collected — the distributed tier runs at the same fraction. */
   def betweennessSampled(spark: SparkSession, dir: String,
       fraction: Double, minShared: Int = 3,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     val edgeDf = coPurchaseEdges(spark, dir, minShared).select("u", "v")
     byTier(edgeDf, driverEdgeLimit) { edges =>
       import spark.implicits._
@@ -604,12 +716,18 @@ object GraphOps {
     import spark.implicits._
     if (edges.length > sparseEdgeThreshold)
       return betweennessOfEdgesSparse(spark, edges)
-    val g = buildCsr(edges)
-    val credits = denseCredits(spark, g, _ => true)
-    spark.createDataset(
-        g.edges.indices.map(e => (g.edges(e)._1, g.edges(e)._2, credits(e) / 2.0)))
+    spark.createDataset(btwRows(spark, edges))
       .toDF("u", "v", "btw")
       .orderBy(col("btw").desc, col("u"), col("v"))
+  }
+
+  /** The exact (u, v, btw) of every canonical edge of `edges`
+    * ([[denseCredits]] over all sources, halved), in [[buildCsr]]'s edge
+    * order. */
+  private def btwRows(spark: SparkSession, edges: Array[(Long, Long)]): Array[(Long, Long, Double)] = {
+    val g = buildCsr(edges)
+    val credits = denseCredits(spark, g, _ => true)
+    Array.tabulate(g.edges.length)(e => (g.edges(e)._1, g.edges(e)._2, credits(e) / 2.0))
   }
 
   /** Σ of the Brandes credit of the sources `keep` selects, per edge id of
@@ -774,7 +892,7 @@ object GraphOps {
     * [[betweenness]] view is stored in q33's quantized rank order.
     */
   def communities(spark: SparkSession, dir: String, minShared: Int = 3,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     import spark.implicits._
     val rankedDf = betweenness(spark, dir, minShared)
       .orderBy(col("btw").desc, col("u"), col("v")).select("u", "v")
@@ -785,7 +903,7 @@ object GraphOps {
     // a >5M-edge graph is not a thing any engine does; community detection
     // at that scale is [[lpaCommunities]] (O(iters) edge shuffles, zero
     // driver state).
-    require(rankedDf.count() <= driverEdgeLimit,
+    require(viewRows(betweenness(spark, dir, minShared)) <= driverEdgeLimit,
       s"Girvan-Newman is driver-coordinated (reference semantics); above " +
         s"$driverEdgeLimit edges use GraphOps.communitiesLpa (distributed LPA) instead")
     val ranked = rankedDf.as[(Long, Long)].collect()
@@ -1137,7 +1255,7 @@ object GraphOps {
     * `driverEdgeLimit` edges run the whole iteration on the driver
     * ([[driverPageRank]]); above it, the superstep join loop. */
   private[graft] def pageRankOf(e0: DataFrame, iters: Int, damping: Double,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     byTier(e0, driverEdgeLimit) { edges =>
       rankRows(e0.sparkSession, driverPageRank(edges, iters, damping))
     } { (e, m) =>
@@ -1229,7 +1347,7 @@ object GraphOps {
     * next to the injected restart row. Tiered like [[pageRankOf]]: at
     * most `driverEdgeLimit` edges (loops included) run [[driverPpr]]. */
   private[graft] def pprOf(e0: DataFrame, iters: Int, damping: Double,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     byTier(e0, driverEdgeLimit) { edges =>
       rankRows(e0.sparkSession, driverPpr(edges, iters, damping))
     }(distributedPpr(_, _, iters, damping))
@@ -1337,7 +1455,7 @@ object GraphOps {
   /** [[communitiesLpa]] over an explicit undirected edge list. Tiered like
     * [[pageRankOf]]: at most `driverEdgeLimit` edges run [[driverLpa]]. */
   private[graft] def communitiesLpaOf(e0: DataFrame, iters: Int,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
     byTier(e0, driverEdgeLimit) { edges =>
@@ -1550,7 +1668,7 @@ object GraphOps {
     * the O(V+E) array BFS on the driver wins outright; above it, the
     * frontier-join propagation (GraphSpec asserts tier equality). */
   private[graft] def ssspOf(e0: DataFrame, maxIters: Int,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
     byTier(e0, driverEdgeLimit) { edges =>
@@ -1635,7 +1753,7 @@ object GraphOps {
     * driver wins outright; above it, the per-round semi-join propagation.
     * Same contract either way (GraphSpec asserts tier equality). */
   private[graft] def kCoreOf(e0: DataFrame, k: Int, maxRounds: Int,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
     byTier(e0, driverEdgeLimit) { edges =>
@@ -1877,7 +1995,7 @@ object GraphOps {
     * [[byTier]] as (u = c, v = p), and at most `driverEdgeLimit` rows run
     * [[driverHits]]. */
   private[graft] def hitsOf(inc: DataFrame, iters: Int,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     require(iters >= 1, s"HITS needs iters >= 1 (the authority vector is " +
       s"the last round's), got $iters")
     val spark = inc.sparkSession
@@ -1933,6 +2051,9 @@ object GraphOps {
     // no layout can avoid.
     val incC = keyedStatic(inc, incRows, "c")
     val incP = keyedStatic(inc, incRows, "p")
+    // filled once here: a cache left to the supersteps is filled inside
+    // them, where two concurrent stages can compute the same partition
+    incC.rdd.count(); incP.rdd.count()
     val hub0 = incC.select(col("c")).distinct()
       .withColumn("h", lit(1.0)).localCheckpoint()
     // A broadcast tier for the rank vector was measured and REJECTED —
@@ -2017,7 +2138,7 @@ object GraphOps {
   /** Modularity search trace: Q at each coarse removal step — exposes G5 as
     * a queryable result (deterministic; rows-only check). */
   def modularityCurve(spark: SparkSession, dir: String, minShared: Int = 3,
-      driverEdgeLimit: Long = 5000000L): DataFrame = {
+      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
     import spark.implicits._
     // FP-robust removal ranking: ties in TRUE betweenness can come out of
     // the per-edge double sums in either order depending on summation
@@ -2028,7 +2149,7 @@ object GraphOps {
     // same removal prefixes. (q34's GN search keeps the raw order — its
     // golden parity is against the reference's own run, not an oracle.)
     val rankedDf = rankedEdges(spark, dir, minShared)
-    require(rankedDf.count() <= driverEdgeLimit,
+    require(viewRows(betweenness(spark, dir, minShared)) <= driverEdgeLimit,
       s"modularity curve walks the GN residual graph on the driver; above " +
         s"$driverEdgeLimit edges use GraphOps.communitiesLpa instead")
     val ranked = rankedDf.as[(Long, Long)].collect()
@@ -2041,6 +2162,10 @@ object GraphOps {
     }
     spark.createDataset(rows).toDF("removed", "n_communities", "modularity")
   }
+
+  /** The rows of a stored view, counted with one scan job: `Dataset.count`
+    * is an aggregate, two jobs under adaptive execution. */
+  private def viewRows(view: DataFrame): Long = view.rdd.count()
 
   /** q35's removal order: the (u, v) of [[betweenness]] by [[btwRank]],
     * then (u, v) — the view's stored order, read with one scan. */

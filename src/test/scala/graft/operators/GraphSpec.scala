@@ -700,4 +700,135 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
       graft.SharedViews.clearAll()
     }
   }
+
+  // ---- driver-built graph views ----
+
+  /** Which tier stored a co-purchase edge relation: the join tier caches. */
+  private def joinTier(edges: DataFrame): Boolean = edges.storageLevel != StorageLevel.NONE
+
+  /** Asserts that the driver tier at the default limit gives the join
+    * tier's rows, row order and column types. */
+  private def sameEdgeTiers(what: String, driver: DataFrame, join: DataFrame): Unit =
+    try {
+      assert(!joinTier(driver) && joinTier(join), s"$what: tiers")
+      assert(driver.schema == join.schema, s"$what: ${driver.schema} vs ${join.schema}")
+      val rows = driver.collect().toSeq
+      assert(rows == join.collect().toSeq, s"$what: rows differ")
+    } finally join.unpersist()
+
+  test("co-purchase edges: the driver count gives the pair join's rows and types") {
+    val inc = GraphOps.incidence(spark, sfDir)
+    for (k <- Seq(1, 3, 5)) {
+      val driver = GraphOps.coPurchaseEdgesOf(inc, k)
+      assert(driver.count() > 100, s"minShared $k")
+      sameEdgeTiers(s"sf0.001, minShared $k", driver, GraphOps.coPurchaseEdgesOf(inc, k, 0L))
+    }
+  }
+
+  test("co-purchase edges: a hot part trips the pair bound; a customer with no partner has no edge") {
+    import spark.implicits._
+    // int ids: the tiers must keep the incidence's column type
+    val hot = (1 to 60).map(c => (c, 1000))
+    val shared = for (c <- 1 to 5; p <- 2001 to 2003) yield (c, p)
+    val inc = (hot ++ shared :+ (99, 3000)).toDF("c", "p")
+    val m = inc.count()
+    val pairs = 60L * 59 / 2 + 3 * (5L * 4 / 2)
+    val cols = GraphOps.EdgeCols.of(inc.as[(Int, Int)].collect().map(r => (r._1.toLong, r._2.toLong)))
+    assert(GraphOps.countCoPurchases(cols, 1, pairs - 1).isEmpty)
+    assert(GraphOps.countCoPurchases(cols, 1, pairs).isDefined)
+    assert(pairs > 20 * m, "the hand-built incidence must trip the bound at driverEdgeLimit = m")
+    for (k <- Seq(1, 3)) {
+      val driver = GraphOps.coPurchaseEdgesOf(inc, k)
+      val guarded = GraphOps.coPurchaseEdgesOf(inc, k, m)
+      assert(joinTier(guarded), s"minShared $k: the hot part did not trip the bound")
+      try {
+        assert(guarded.collect().toSeq == driver.collect().toSeq, s"minShared $k")
+        assert(guarded.schema == driver.schema)
+      } finally guarded.unpersist()
+      sameEdgeTiers(s"hot part, minShared $k", driver, GraphOps.coPurchaseEdgesOf(inc, k, 0L))
+      val rows = driver.as[(Int, Int, Long)].collect()
+      assert(driver.schema("u").dataType == org.apache.spark.sql.types.IntegerType)
+      assert(rows.length == (if (k == 1) 60 * 59 / 2 else 10), s"minShared $k")
+      assert(!rows.exists(r => r._1 == 99 || r._2 == 99), "customer 99 has no partner")
+    }
+  }
+
+  test("presorted: keeps strictly ordered rows, rejects out-of-order or duplicate keys") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftbridge.Bridge.presorted
+    val rows = Seq((1L, 5L), (1L, 7L), (2L, 1L), (3L, 0L))
+    assert(presorted(rows.toDF("a", "b"), col("a"), col("b")).as[(Long, Long)].collect().toSeq ==
+      rows)
+    assert(presorted(rows.reverse.toDF("a", "b"), col("a").desc, col("b").desc)
+      .as[(Long, Long)].collect().toSeq == rows.reverse)
+    val outOfOrder = intercept[IllegalArgumentException](
+      presorted(Seq((1L, 5L), (2L, 1L), (1L, 9L)).toDF("a", "b"), col("a"), col("b")))
+    assert(outOfOrder.getMessage.contains("row 2 (1, 9) does not follow row 1 (2, 1)"),
+      outOfOrder.getMessage)
+    val duplicate = intercept[IllegalArgumentException](
+      presorted(Seq((1L, 5L), (1L, 5L)).toDF("a", "b"), col("a"), col("b")))
+    assert(duplicate.getMessage.contains("row 1 (1, 5) does not follow row 0 (1, 5)"),
+      duplicate.getMessage)
+    assert(presorted(Seq.empty[(Long, Long)].toDF("a", "b"), col("a")).collect().isEmpty)
+  }
+
+  test("sorted graph views: the initial plans of q30, q33 and q35 hold no sort or exchange") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    GraphOps.betweennessQuery(spark, sfDir).collect() // builds both views
+    Seq("q30" -> GraphOps.edgesQuery(spark, sfDir),
+        "q33" -> GraphOps.betweennessQuery(spark, sfDir),
+        "q35 removal order" -> GraphOps.rankedEdges(spark, sfDir)).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val moved = plan.collect { case s: SortExec => s; case e: Exchange => e }
+      assert(moved.isEmpty, s"$name plans a sort or exchange:\n$plan")
+    }
+  }
+
+  /** The jobs of the graph faces, pinned: a change to one of these
+    * counts must be explained in CHANGES.md. Cold: on emptied views, the
+    * edge view's build plus q30's read, then the betweenness view's build
+    * plus q33's read; q35 and q34 run with both views built. */
+  private val viewJobs = Map("q30 cold" -> 8, "q33 cold" -> 5, "q35" -> 2, "q34" -> 4)
+
+  test("graph views: cold builds and the GN faces run a pinned number of jobs") {
+    graft.SharedViews.clearAll()
+    val jobs = Seq(
+      "q30 cold" -> jobsOf(GraphOps.edgesQuery(spark, sfDir).collect()),
+      "q33 cold" -> jobsOf(GraphOps.betweennessQuery(spark, sfDir).collect()),
+      "q35" -> jobsOf(GraphOps.modularityCurve(spark, sfDir).collect()),
+      "q34" -> jobsOf(GraphOps.communities(spark, sfDir).collect()))
+    assert(jobs.toMap == viewJobs, s"jobs ${jobs.mkString(", ")}, pinned at $viewJobs; " +
+      "a change to these counts must be explained in CHANGES.md")
+  }
+
+  /** What `body` returns, and the "Block ... already exists" warnings the
+    * BlockManager logs while it runs: a cached partition computed twice. */
+  private def withBlockWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graphspec-blocks", null, null, true, null) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.storage.BlockManager").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    val result = try body finally { logger.removeAppender(appender); appender.stop() }
+    (result, seen.toArray(Array.empty[String]).toSeq.filter(_.contains("already exists")))
+  }
+
+  test("hitsOf's distributed tier fills its static caches once: same jobs every call") {
+    import spark.implicits._
+    val inc = tierEdges.map { case (u, v) => (u, 100L + v) }.toDF("c", "p")
+    val (jobs, warnings) =
+      withBlockWarnings((1 to 5).map(_ => jobsOf(GraphOps.hitsOf(inc, 3, 0L).collect())))
+    assert(jobs.distinct.size == 1, s"jobs per call: ${jobs.mkString(", ")}")
+    assert(warnings.isEmpty, warnings.mkString("\n"))
+  }
 }
