@@ -11,9 +11,9 @@ import java.util.concurrent.ConcurrentHashMap
   *    first use in a JVM, memoized afterwards: re-runs overwrite instead of
   *    accumulating a fresh copy of the table per invocation, and a second
   *    query sharing the same staged relation reuses it for free.
-  *  - [[fresh]] — a unique dir per call, for streaming sources whose
-  *    contents evolve during the run (data files + drain sentinels) and so
-  *    must never be reused.
+  *  - [[fresh]] — a unique dir per call, for streaming sources (data
+  *    files + drain sentinels), sinks and checkpoints, which must never be
+  *    reused.
   *
   * Every dir from either path is registered and deleted recursively by a
   * JVM shutdown hook, so bench/verify runs leave nothing behind (the

@@ -50,6 +50,7 @@ object CdcStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.write.mode("overwrite").parquet(outDir)
       }
+      .option("checkpointLocation", graft.sources.Staging.fresh("q9c-ckpt"))
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
 

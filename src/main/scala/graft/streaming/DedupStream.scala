@@ -42,6 +42,7 @@ object DedupStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.write.mode("overwrite").parquet(outDir)
       }
+      .option("checkpointLocation", graft.sources.Staging.fresh("q58-ckpt"))
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
 
@@ -131,6 +132,7 @@ object DedupStream {
           .where(col("jaccard") >= minJaccard)
         verified.write.mode("append").parquet(outDir)
       }
+      .option("checkpointLocation", graft.sources.Staging.fresh("qbb-ckpt"))
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
 

@@ -91,6 +91,25 @@ object EventStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(touch)
   }
 
+  /** The fixture's max-ts row moved 30 days past the fixture max, IN THE
+    * RAW PHYSICAL TYPE (nanos-long or timestamp), so a sentinel file's
+    * schema byte-matches the staged fixture; the caller re-keys it. */
+  private def sentinelOf(raw: DataFrame): DataFrame =
+    raw.orderBy(col("ts").desc).limit(1)
+      .withColumn("ts", graft.Tables.sentinelTsPlus30d(raw.schema("ts").dataType))
+
+  /** Writes `rows` as one parquet file into the watch directory `stage`,
+    * next to the staged fixture, before the stream starts. */
+  private def stageSentinel(rows: DataFrame, stage: java.nio.file.Path,
+      tag: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val dir = Paths.get(graft.sources.Staging.fresh(s"$tag-sentinel"))
+    rows.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    val part = Files.list(dir).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get()
+    Files.copy(part, stage.resolve("zz_sentinel.parquet"))
+  }
+
   /** Stream-stream INTERVAL join — the streaming twin of the batch range
     * join (q68): two event streams (errors, clicks) off the same file
     * source, left-outer joined on the event-time range condition
@@ -101,15 +120,26 @@ object EventStream {
     * errors are emitted with nulls once the watermark passes their window
     * end. The drained output is aggregated batch-side to q68's exact
     * shape, so the streaming join shares the batch query's DuckDB
-    * inequality-join oracle. Sentinel dance: as in [[sessionizeFromFiles]]
-    * — a far-future event advances both watermarks to flush the tail. */
+    * inequality-join oracle. Sentinel: as in [[sessionizeFromFiles]], a
+    * far-future event advances both watermarks to flush the tail. Both
+    * per-side sentinels are staged with the fixture before `start()`, so
+    * one drain runs 2 micro-batches: batch 0 joins every event (the
+    * sentinels only match each other, 30 days past any real click), and
+    * the no-data batch at the sentinel watermark emits every unmatched
+    * error. The rows equal a two-drain run's: batch 0 held every event
+    * there too, at the same initial watermark. */
   def clicksAfterErrorsStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val stage = Paths.get(graft.sources.Staging.fresh("q69-src"))
     Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
     val raw = spark.read.parquet(s"$dir/events.parquet") // ts: raw layout
+    // one sentinel PER SIDE: each stream's watermark only advances on rows
+    // that survive its own event_type filter
+    val base = sentinelOf(raw).withColumn("event_id", lit(-1L))
+    stageSentinel(base.withColumn("event_type", lit("error"))
+      .unionAll(base.withColumn("event_type", lit("click"))), stage, "q69")
     // interval-join state is keyed by (bin, side): a month of fixture time
     // is ~720 hot keys, and each store instance carries 4 state stores
     // (two per join side) with per-batch commit overhead — fewer, fatter
@@ -157,25 +187,7 @@ object EventStream {
     val q = joined.writeStream.format("parquet")
       .option("path", sinkDir).option("checkpointLocation", ckptDir)
       .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val sentinelDir = Paths.get(graft.sources.Staging.fresh("q69-sentinel"))
-      // one sentinel PER SIDE: each stream's watermark only advances on
-      // rows that survive its own event_type filter. Built from the max-ts
-      // row + 30 days IN THE RAW PHYSICAL TYPE so the sentinel file's
-      // schema byte-matches the staged fixture (nanos-long or timestamp).
-      val base = raw.orderBy(col("ts").desc).limit(1)
-        .withColumn("event_id", lit(-1L))
-        .withColumn("ts", graft.Tables.sentinelTsPlus30d(raw.schema("ts").dataType))
-      base.withColumn("event_type", lit("error"))
-        .unionAll(base.withColumn("event_type", lit("click")))
-        .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-      val part = Files.list(sentinelDir).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.copy(part, stage.resolve("zz_sentinel.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-      q.processAllAvailable()
-    } finally q.stop()
+    try q.processAllAvailable() finally q.stop()
 
     spark.read.parquet(sinkDir)
       .where(col("event_id") =!= -1L)
@@ -190,11 +202,17 @@ object EventStream {
     * fixture, returning the same shape as the batch `Events.sessionize`
     * (q62) so the driver's DuckDB oracle covers the streaming path too.
     *
-    * The fixture is one static parquet file, so the run is staged: copy the
-    * file into a watch directory, drain it, then drop in a sentinel file
-    * (one far-future event for user −1) — advancing the watermark past
-    * every open session's `last + gap` timeout flushes them, which is
-    * exactly how a production stream's tail sessions close. `session_seq`
+    * The fixture is one static parquet file, so the run is staged: the
+    * file and a sentinel file (one far-future event for user −1) go into a
+    * watch directory before `start()`, and one drain runs 2 micro-batches.
+    * Batch 0 reads the events and the sentinel together; its watermark
+    * (sentinel − 1 h) passes every open session's `last + gap` timeout, so
+    * the no-data batch that follows flushes them, which is exactly how a
+    * production stream's tail sessions close. The rows equal those of a
+    * run that drains the events first and the sentinel second: batch 0
+    * held every event there too, `touch` sorts each user's events within
+    * a batch, nothing is late at the initial watermark, and a timeout
+    * emits the same closed session whichever batch fires it. `session_seq`
     * is a presentation step on the emitted sessions (row_number by start
     * time), matching the batch face's chronological numbering. Output
     * goes through a parquet FILE sink (sessions are data-sized; a memory
@@ -203,12 +221,13 @@ object EventStream {
   def sessionizeFromFiles(spark: SparkSession, dir: String,
       gapSec: Long = 1800): DataFrame = {
     import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val stage = Paths.get(graft.sources.Staging.fresh("q65-src"))
     Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
     val raw = spark.read.parquet(s"$dir/events.parquet") // ts: raw layout
+    stageSentinel(sentinelOf(raw).withColumn("user_id", lit(-1L)), stage, "q65")
     // State-store partition count is baked into the query at start; each
     // partition owns an HDFS-backed store instance with per-batch commit +
     // maintenance overhead, so a harness run sizes it to the state (one
@@ -227,21 +246,7 @@ object EventStream {
     val q = sessionize(stream, gapSec).writeStream.format("parquet")
       .option("path", sinkDir).option("checkpointLocation", ckptDir)
       .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // sentinel: same physical schema as the staged file, ts 30 days past
-      // the fixture max — watermark sails past every open timeout
-      val sentinelDir = Paths.get(graft.sources.Staging.fresh("q65-sentinel"))
-      raw.orderBy(col("ts").desc).limit(1)
-        .withColumn("user_id", lit(-1L))
-        .withColumn("ts", graft.Tables.sentinelTsPlus30d(raw.schema("ts").dataType))
-        .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-      val part = Files.list(sentinelDir).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.copy(part, stage.resolve("zz_sentinel.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-      q.processAllAvailable()
-    } finally q.stop()
+    try q.processAllAvailable() finally q.stop()
 
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("start_s", "end_s")
@@ -282,6 +287,7 @@ object EventStream {
       .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"))
     val sink = "q9w_enrich_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = agg.writeStream.format("memory").queryName(sink)
+      .option("checkpointLocation", graft.sources.Staging.fresh("q9w-ckpt"))
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
     // the memory sink registers its table in the stream's session

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkSuite, Tables}
@@ -12,6 +14,37 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
   // offset keeps test events above the initial watermark (epoch 0)
   private val Base = 1440L
   private def ts(min: Long): Timestamp = new Timestamp((Base + min) * 60000L)
+
+  /** `body`'s result and the micro-batches it ran: the distinct
+    * (run, batch) ids of the `QueryProgressEvent`s that the context-wide
+    * bus delivers (as `onOtherEvent`; the faces stream on child
+    * sessions). */
+  private def withBatches[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(java.util.UUID, Long)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case q: QueryProgressEvent => seen.add((q.progress.runId, q.progress.batchId))
+        case _ =>
+      }
+    }
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      (out, seen.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The `graft-<tag>*` dirs `Staging.fresh` has made so far. */
+  private def stagedDirs(tag: String): Set[java.nio.file.Path] = {
+    val s = java.nio.file.Files.list(
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    try s.filter(_.getFileName.toString.startsWith(s"graft-$tag"))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path]).toSet
+    finally s.close()
+  }
 
   test("streaming hourly counts equal the batch aggregation once drained") {
     import spark.implicits._
@@ -159,5 +192,57 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(streamed.nonEmpty && streamed.sameElements(batch),
       s"streamed ${streamed.length} pairs vs batch ${batch.length}")
+  }
+
+  test("q65: the file-source sessionizer equals batch sessionize row for row in 2 micro-batches") {
+    // the sentinel is staged with the events: batch 0 reads both, and the
+    // no-data batch at its watermark times out every open session
+    val (rows, batches) = withBatches(
+      EventStream.sessionizeFromFiles(spark, sfDir).collect())
+    val batch = graft.operators.Events.sessionize(spark, sfDir).collect()
+    assert(rows.nonEmpty)
+    assert(rows.head.schema.fieldNames.toSeq == batch.head.schema.fieldNames.toSeq)
+    def bits(r: org.apache.spark.sql.Row) = r.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }
+    assert(rows.map(bits).toSeq == batch.map(bits).toSeq)
+    assert(batches == 2, s"q65 ran $batches micro-batches")
+  }
+
+  test("q69: the interval-join stream drains in 2 micro-batches") {
+    val (rows, batches) = withBatches(
+      EventStream.clicksAfterErrorsStream(spark, sfDir).collect())
+    assert(rows.nonEmpty)
+    assert(batches == 2, s"q69 ran $batches micro-batches")
+  }
+
+  test("stream child session: fork-free checkpoint manager, checksums on, parent untouched") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val checksum = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    val parentBefore = (spark.conf.getOption(key), spark.conf.getOption(checksum))
+    val ss = StreamSessions.withShuffle(spark, 3)
+    assert(ss.conf.get(key) == StreamSessions.FsCheckpointManager)
+    assert(ss.conf.get("spark.sql.shuffle.partitions") == "3")
+    assert(ss.conf.getOption(checksum).forall(_ == "true"))
+    assert((spark.conf.getOption(key), spark.conf.getOption(checksum)) == parentBefore)
+    assert(!spark.conf.getOption(key).contains(StreamSessions.FsCheckpointManager))
+  }
+
+  test("q65: every state delta file has its checksum sidecar") {
+    val before = stagedDirs("q65-ckpt")
+    EventStream.sessionizeFromFiles(spark, sfDir).collect()
+    val ckpt = stagedDirs("q65-ckpt") -- before
+    assert(ckpt.size == 1, s"new q65 checkpoints: $ckpt")
+    val files = {
+      val s = java.nio.file.Files.walk(ckpt.head.resolve("state"))
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq finally s.close()
+    }
+    val names = files.map(_.toString).toSet
+    val deltas = files.filter(_.getFileName.toString.endsWith(".delta"))
+    assert(deltas.nonEmpty)
+    val bare = deltas.filterNot(d => names(d.toString + ".crc"))
+    assert(bare.isEmpty,
+      s"${bare.size} of ${deltas.size} delta files have no checksum sidecar, e.g. ${bare.take(3)}")
   }
 }
