@@ -36,12 +36,16 @@ object FaceRunner {
 
   /** `reps` rounds over `faces`, each face's row count timed and printed as
     * `[time] <name> rep<N> <sec> s (<rows> rows)`, the line
-    * tools/assemble_scale.py parses. */
-  def timeReps[A](faces: Seq[(String, A)], reps: Int)(rows: A => Long): Unit =
-    for (r <- 1 to reps; (name, face) <- faces)
+    * tools/assemble_scale.py parses. `after("<name> rep<N>")` runs after
+    * each attempt, outside the timed part. */
+  def timeReps[A](faces: Seq[(String, A)], reps: Int,
+      after: String => Unit = _ => ())(rows: A => Long): Unit =
+    for (r <- 1 to reps; (name, face) <- faces) {
       timed("time", s"$name rep$r")(rows(face)).foreach { case (sec, n) =>
         println(f"[time] $name rep$r $sec%.3f s ($n rows)")
       }
+      after(s"$name rep$r")
+    }
 
   /** JSON string literal: escapes backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in an oracle SQL string or an exception

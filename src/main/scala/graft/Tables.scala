@@ -1,9 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType,
-  TimestampNTZType, TimestampType}
+  StructType, TimestampNTZType, TimestampType}
+
+import graft.sources.Staging
 
 /** Fixture-table loader. Every query resolves inputs through here so the
   * physical layout (one parquet per table under the sf dir) lives in one
@@ -15,20 +19,71 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      // events.ts has shipped as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
-      // parquet. NANOS is only readable via the nanosAsLong legacy knob
-      // (column resolves as LongType, epoch nanos); MICROS resolves as
-      // TIMESTAMP_NTZ. Dispatch on the resolved type and normalize to one
-      // session-TZ TimestampType so every downstream operator sees the same
-      // type regardless of which writer produced the file (session TZ is
-      // UTC, so the NTZ→LTZ cast preserves the instant).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventsTs(spark.read.parquet(s"$dir/$name.parquet"))
-    } else if (name == "embeddings") {
-      normalizeEmbedding(spark.read.parquet(s"$dir/$name.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+  /** events.ts has shipped as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
+    * parquet. NANOS is only readable via this legacy conf (the column
+    * resolves as LongType, epoch nanos); MICROS resolves as TIMESTAMP_NTZ.
+    * [[parquet]] sets it on every session it reads with, and
+    * [[normalizeEventsTs]] dispatches on the resolved type. */
+  val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val df = parquet(spark, s"$dir/$name.parquet")
+    if (name == "events") normalizeEventsTs(df)
+    else if (name == "embeddings") normalizeEmbedding(df)
+    else df
+  }
+
+  /** The session confs that change the schema Spark infers for a parquet
+    * file, so part of a memo key; `mergeSchema` changes which footers it
+    * reads. */
+  private val InferenceConfs = Seq(NanosAsLong,
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema")
+
+  private final case class SchemaKey(path: String, fingerprint: String,
+      mergeSchema: Boolean, confs: Seq[String])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** The one parquet reader of the engine: `spark.read.parquet(path)`
+    * without its schema-inference job on every call after the first.
+    * Inference is a Spark job per read (footers are read on executors),
+    * and the faces re-read the same fixture files on every call. The first
+    * read of a (path, files, confs) keeps the StructType Spark inferred;
+    * a later one reads with `spark.read.schema(s)`, which runs no job.
+    * The key holds the path, its size+mtime fingerprint
+    * ([[Staging.fingerprintOf]]), so a file rewritten in place is inferred
+    * again, and the values of the [[InferenceConfs]]. A path that is not
+    * on the local file system has no fingerprint and is always inferred.
+    * The schema is always one Spark inferred; nothing parses footers here.
+    *
+    * [[NanosAsLong]] is set first, on every read: the events fixture
+    * needs it, and a conf that flipped at the first events read would key
+    * the tables read before it apart from those read after. */
+  def parquet(spark: SparkSession, path: String,
+      mergeSchema: Boolean = false): DataFrame = {
+    if (!spark.conf.get(NanosAsLong).toBoolean) spark.conf.set(NanosAsLong, "true")
+    inferredOnce(spark, path, mergeSchema)
+  }
+
+  /** [[parquet]] under the session's confs as they stand. */
+  private[graft] def inferredOnce(spark: SparkSession, path: String,
+      mergeSchema: Boolean = false): DataFrame = {
+    val reader = if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
+    val fingerprint = Staging.fingerprintOf(path)
+    if (fingerprint == "absent") reader.parquet(path)
+    else {
+      val key = SchemaKey(path, fingerprint, mergeSchema,
+        InferenceConfs.map(spark.conf.get))
+      Option(schemas.get(key)) match {
+        case Some(s) => spark.read.schema(s).parquet(path)
+        case None =>
+          val df = reader.parquet(path)
+          schemas.putIfAbsent(key, df.schema)
+          df
+      }
+    }
+  }
 
   /** Normalize an events-shaped relation's `ts` column to session-TZ
     * TimestampType, dispatching on how the parquet layout resolved (see

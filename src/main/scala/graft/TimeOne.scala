@@ -1,9 +1,16 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 /** Dev harness: time individual queries by name-prefix without running the
   * whole Bench suite. `runMain graft.TimeOne <sfDir> <prefix>[,<prefix>...]
   * [reps]` — prints per-query seconds for each rep (first rep includes
-  * footer/codegen warm-up; read the later reps).
+  * footer/codegen warm-up; read the later reps), each `[time]` line
+  * followed by `[jobs] <name> rep<N> <count>`: the Spark jobs the rep
+  * started, counted by a listener after the bus has drained.
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
@@ -11,7 +18,19 @@ object TimeOne {
     val faces = FaceRunner.select(SparkEntry.queries, FaceRunner.prefixes(Some(args(1))))
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = GraftSession.local()
-    FaceRunner.timeReps(faces, reps)(_(spark, sfDir).count())
+    val sc = spark.sparkContext
+    val jobs = new AtomicLong()
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    })
+    ListenerBus.drain(sc)
+    var seen = jobs.get()
+    FaceRunner.timeReps(faces, reps, label => {
+      ListenerBus.drain(sc)
+      val now = jobs.get()
+      println(s"[jobs] $label ${now - seen}")
+      seen = now
+    })(_(spark, sfDir).count())
     spark.stop()
   }
 }

@@ -45,14 +45,6 @@ object Dedup {
   private[operators] def shingleHashes(tokens: Column, k: Int): Column =
     call_function("shingle_hashes", tokens, lit(k))
 
-  /** The pre-codegen HOF formulation — kept as the window-rule witness for
-    * the spec (same window positions/clamping; hash values differ by
-    * design), never on the query path. */
-  private[operators] def shingleHashesLambda(tokens: Column, k: Int): Column =
-    sort_array(array_distinct(transform(
-      sequence(lit(0), greatest(size(tokens) - k, lit(0))),
-      i => xxhash64(concat_ws(" ", slice(tokens, i + 1, lit(k)))))))
-
   /** MinHash signature: sig[i] = min over shingles of xxhash64(h, i), as
     * one codegen'd loop ([[graft.functions.MinHashSignature]]). The
     * aggregate+least HOF fold it replaces computed the identical values
@@ -120,7 +112,7 @@ object Dedup {
             shingleHashes(tokensCol(col("text")), 3).as("sh"))
           .write.mode("overwrite").parquet(s"$out/shingles")
       }
-      viewCache(spark.read.parquet(s"$staged/shingles"))
+      viewCache(Tables.parquet(spark, s"$staged/shingles"))
     }
   }
 
@@ -743,7 +735,9 @@ object Dedup {
     * cached blocks mid-rep, an unstaged build re-runs the whole
     * aggregation — the mechanism behind qb2's 61→272 s same-plan warm
     * swings at sf10p. Staged, an evicted partition re-reads a columnar
-    * scan instead. */
+    * scan instead. The cache is filled by one scan job at build:
+    * [[prefixJaccardJoin]] self-joins it, and a cache left for the join's
+    * two concurrent stages to fill has both compute the same partition. */
   private def prefixOrder(spark: SparkSession, dir: String): DataFrame =
     SharedViews.view("dedup.prefixOrder", spark, dir) {
       val src = s"$dir/documents.parquet"
@@ -757,7 +751,9 @@ object Dedup {
           .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("o"))
           .write.mode("overwrite").parquet(s"$out/prefix_order")
       }
-      viewCache(spark.read.parquet(s"$staged/prefix_order"))
+      val view = viewCache(Tables.parquet(spark, s"$staged/prefix_order"))
+      view.rdd.count()
+      view
     }
 
   /** Filter-threshold slack: the verify rounds to 6 dp (oracle parity),

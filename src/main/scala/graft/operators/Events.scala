@@ -608,7 +608,7 @@ object Events {
       partials(ev.where(col("ts") < cutTs))
         .write.mode("overwrite").parquet(out)
     }
-    spark.read.parquet(stage)
+    Tables.parquet(spark, stage)
       .unionByName(partials(ev.where(col("ts") >= cutTs)))
       .groupBy("hour_s", "event_type")
       .agg(sum("n").as("n"), sum("sv").as("sv"))

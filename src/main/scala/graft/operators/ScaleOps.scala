@@ -95,7 +95,7 @@ object ScaleOps {
         spark.sparkContext.hadoopConfiguration)
       .getContentSummary(new org.apache.hadoop.fs.Path(inPath)).getLength
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    spark.read.parquet(inPath)
+    graft.Tables.parquet(spark, inPath)
       .repartition(nFiles.toInt)
       .write.mode("overwrite").parquet(outPath)
     nFiles
@@ -151,7 +151,7 @@ object ScaleOps {
       eventType: String = "click"): DataFrame = {
     val stage = graft.sources.Staging.once("q83-part", dir)(
       writePartitioned(graft.Tables(spark, dir, "events"), _, Seq("event_type")))
-    spark.read.parquet(stage)
+    graft.Tables.parquet(spark, stage)
       .where(col("event_type") === eventType)
       .groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("hour_s"),
         col("event_type"))
@@ -210,7 +210,7 @@ object ScaleOps {
           (length(col("text")) % 100).as("quality"))
         .write.parquet(out + "/batch=2")
     }
-    spark.read.option("mergeSchema", "true").parquet(stage)
+    graft.Tables.parquet(spark, stage, mergeSchema = true)
       .groupBy("lang")
       .agg(count(lit(1)).as("n"),
         sum(when(col("quality").isNull, 1L).otherwise(0L)).as("n_legacy"),
@@ -259,7 +259,7 @@ object ScaleOps {
         .drop("z")
         .write.mode("overwrite").parquet(out)
     }
-    spark.read.parquet(stage)
+    graft.Tables.parquet(spark, stage)
       .where(col("l_partkey").between(1, 50) &&
         col("l_suppkey").between(1, 5))
       .groupBy("l_suppkey")

@@ -102,7 +102,7 @@ private[sources] class ManifestScan(manifest: String, targetSliceBytes: Long,
   override def planInputPartitions(): Array[InputPartition] = {
     import org.apache.spark.sql.functions._
     val spark = org.apache.spark.sql.SparkSession.active
-    spark.read.parquet(manifest)
+    graft.Tables.parquet(spark, manifest)
       .groupBy(col("path"), floor(col("offset") / targetSliceBytes).as("bucket"))
       .agg(min("offset").as("start"),
         max(col("offset") + lit(12L) + col("length")).as("end"))
@@ -233,7 +233,7 @@ object ManifestDocs {
     val staged = stage(spark, dir, nPacks)
     // `length` is a builtin-function name in SQL engines — a column named
     // that breaks any bare-identifier replay, so the face exposes nbytes
-    spark.read.parquet(s"$staged/manifest")
+    graft.Tables.parquet(spark, s"$staged/manifest")
       .select(col("doc_id"),
         regexp_extract(col("path"), "pack-(\\d+)\\.bin$", 1)
           .cast("long").as("pack"),

@@ -10,10 +10,14 @@ import java.util.concurrent.ConcurrentHashMap
   *  - [[once]] — a FIXED path per (tag, key), emptied and rewritten on the
   *    first use in a JVM, memoized afterwards: re-runs overwrite instead of
   *    accumulating a fresh copy of the table per invocation, and a second
-  *    query sharing the same staged relation reuses it for free.
-  *  - [[fresh]] — a unique dir per call, for streaming sources (data
-  *    files + drain sentinels), sinks and checkpoints, which must never be
-  *    reused.
+  *    query sharing the same staged relation reuses it for free. A
+  *    streaming SOURCE directory that is complete before `start()` (data
+  *    files plus drain sentinels) is immutable, so it is staged here too,
+  *    under a key that carries its input's [[fingerprintOf]]: each query
+  *    has its own fresh checkpoint, so its file source lists every staged
+  *    file in batch 0, however many queries read the directory before it.
+  *  - [[fresh]] — a unique dir per call, for what a query writes: sinks,
+  *    checkpoints, and any source a face appends to after `start()`.
   *
   * Every dir from either path is registered and deleted recursively by a
   * JVM shutdown hook, so bench/verify runs leave nothing behind (the
@@ -24,7 +28,7 @@ object Staging {
 
   private val registered = java.util.Collections.newSetFromMap(
     new ConcurrentHashMap[Path, java.lang.Boolean]())
-  private val stagedOnce = new ConcurrentHashMap[(String, String), String]()
+  private val stagedOnce = new ConcurrentHashMap[(String, String), (String, Any)]()
 
   sys.addShutdownHook {
     registered.forEach(deleteRecursively(_))
@@ -63,14 +67,19 @@ object Staging {
   /** Stage once per JVM per (tag, key): the first call materializes via
     * `write` into the fixed dir; later calls reuse the staged copy. */
   def once(tag: String, key: String)(write: String => Unit): String =
+    onceWith(tag, key)(write)._1
+
+  /** [[once]] for a stage whose write also yields a value later calls
+    * need (a width sized on the staged rows): the dir and that value,
+    * both kept from the first call. */
+  def onceWith[A](tag: String, key: String)(write: String => A): (String, A) =
     stagedOnce.computeIfAbsent((tag, key), _ => {
       val d = fixedDir(tag, key).toString
-      write(d)
-      d
-    })
+      (d, write(d))
+    }).asInstanceOf[(String, A)]
 
-  /** A unique single-use dir (streaming sources/sentinels), cleaned at
-    * JVM exit like everything else. */
+  /** A unique single-use dir (sinks, checkpoints, a sentinel's scratch
+    * write), cleaned at JVM exit like everything else. */
   def fresh(tag: String): String =
     register(Files.createTempDirectory(s"graft-$tag")).toString
 
@@ -117,11 +126,16 @@ object Staging {
             }
         }
       }
-      dest.toString
-    })
+      (dest.toString, ())
+    })._1
+
+  /** The [[once]] key of a stage derived from the file `src`: its path
+    * and [[fingerprintOf]], so a rewritten input is staged again. */
+  def keyOf(src: String): String = s"$src@${fingerprintOf(src)}"
 
   /** Size+mtime fingerprint of a fixture file or directory tree — the
-    * staleness key for [[persistent]]. */
+    * staleness key for [[persistent]], for the streaming sources staged
+    * through [[once]], and for `Tables.parquet`'s schema memo. */
   def fingerprintOf(path: String): String = {
     val p = Paths.get(path)
     if (!Files.exists(p)) return "absent"

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Staging
 
 /** Streaming face of MERGE/upsert ([[graft.operators.Mutations.upsert]]):
   * change-data-capture apply. Snapshot rows and change rows land as
@@ -20,17 +21,19 @@ object CdcStream {
     * stream them through the latest-wins aggregation, drain, and return
     * the merged snapshot (same fingerprinted shape as q72). */
   def upsertFromFiles(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables(spark, dir, "documents")
-    val snapshot = docs
-      .select(col("doc_id"), col("lang"), col("text"), lit(0).as("pri"))
-    val changes = docs.where(col("doc_id") % 10 === 0)
-      .select(col("doc_id"), col("lang"), upper(col("text")).as("text"),
-        lit(1).as("pri"))
-    val stage = graft.sources.Staging.fresh("cdcstream-src")
-    snapshot.write.mode("overwrite").parquet(stage)
-    changes.write.mode("append").parquet(stage)
+    val src = s"$dir/documents.parquet"
+    // snapshot + changes, staged once per fixture
+    val stage = Staging.once("cdcstream-src", Staging.keyOf(src)) { d =>
+      val docs = graft.Tables(spark, dir, "documents")
+      docs.select(col("doc_id"), col("lang"), col("text"), lit(0).as("pri"))
+        .write.mode("overwrite").parquet(d)
+      docs.where(col("doc_id") % 10 === 0)
+        .select(col("doc_id"), col("lang"), upper(col("text")).as("text"),
+          lit(1).as("pri"))
+        .write.mode("append").parquet(d)
+    }
 
-    val schema = spark.read.parquet(stage).schema
+    val schema = graft.Tables.parquet(spark, stage).schema
     // state-store sizing scoped to this query via a child session
     val ss = StreamSessions.withShuffle(spark, 8)
     val stream = ss.readStream.schema(schema).parquet(stage)
@@ -39,21 +42,22 @@ object CdcStream {
     // append, so the standard complete-mode pattern applies: foreachBatch
     // overwrites a parquet snapshot per micro-batch — a DISTRIBUTED write;
     // the last snapshot is the drained state.
-    val outDir = graft.sources.Staging.fresh("q9c-sink")
-    val q = stream
+    val merged = stream
       .select(col("doc_id"), col("pri"), col("lang"),
         md5(col("text").cast("binary")).as("h"))
       .groupBy("doc_id")
       .agg(max(struct(col("pri"), col("lang"), col("h"))).as("w"))
       .select(col("doc_id"), col("w.lang").as("lang"), col("w.h").as("h"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    val outDir = Staging.fresh("q9c-sink")
+    val q = merged.writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         batch.write.mode("overwrite").parquet(outDir)
       }
-      .option("checkpointLocation", graft.sources.Staging.fresh("q9c-ckpt"))
+      .option("checkpointLocation", Staging.fresh("q9c-ckpt"))
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
 
-    spark.read.parquet(outDir).orderBy("doc_id")
+    // read back with the writer's schema (StreamSessions)
+    spark.read.schema(merged.schema).parquet(outDir).orderBy("doc_id")
   }
 }

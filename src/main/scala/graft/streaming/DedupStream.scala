@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Staging
 
 /** Streaming face of exact corpus dedup (`operators.Dedup.exact`): documents
   * arrive as files on a directory stream (the "landing bucket" shape of a
@@ -19,34 +22,36 @@ import org.apache.spark.sql.functions._
 object DedupStream {
 
   /** Run the file-source stream to completion over `dir`'s documents table
-    * and return the final dedup state, sorted by keeper. */
+    * and return the final dedup state, sorted by keeper. The watch
+    * directory, a copy of the fixture file, is staged once per fixture. */
   def dedupExactFromFiles(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
-    val stage = Paths.get(graft.sources.Staging.fresh("dedupstream-src"))
-    java.nio.file.Files.copy(Paths.get(s"$dir/documents.parquet"),
-      stage.resolve("documents.parquet"))
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val src = s"$dir/documents.parquet"
+    val stage = Staging.once("dedupstream-src", Staging.keyOf(src)) { d =>
+      Files.copy(Paths.get(src), Paths.get(d).resolve("documents.parquet"))
+    }
+    val schema = graft.Tables.parquet(spark, src).schema
     // state-store partition sizing: see EventStream.sessionizeFromFiles;
     // the child session scopes it to this query (StreamSessions)
     val ss = StreamSessions.withShuffle(spark, 8)
-    val stream = ss.readStream.schema(schema).parquet(stage.toString)
+    val stream = ss.readStream.schema(schema).parquet(stage)
 
     // one row per DISTINCT CONTENT — corpus-sized in the worst case, so no
     // memory sink (driver collect); complete mode snapshots distributed
     // via foreachBatch overwrite (see CdcStream)
-    val outDir = graft.sources.Staging.fresh("q58-sink")
-    val q = stream
+    val counts = stream
       .groupBy(md5(col("text").cast("binary")).as("content_hash"))
       .agg(min("doc_id").as("keeper"), count(lit(1)).as("n_copies"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    val outDir = Staging.fresh("q58-sink")
+    val q = counts.writeStream
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         batch.write.mode("overwrite").parquet(outDir)
       }
-      .option("checkpointLocation", graft.sources.Staging.fresh("q58-ckpt"))
+      .option("checkpointLocation", Staging.fresh("q58-ckpt"))
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
 
-    spark.read.parquet(outDir).orderBy("keeper")
+    // read back with the writer's schema (StreamSessions)
+    spark.read.schema(counts.schema).parquet(outDir).orderBy("keeper")
   }
 
   /** Streaming NEAR-dup detection — the LSH ingest twin of
@@ -67,10 +72,14 @@ object DedupStream {
   def minhashPairsFromStream(spark: SparkSession, dir: String,
       deltaFrom: Long = -1L, minJaccard: Double = 0.5): DataFrame = {
     import graft.operators.Dedup
-    val cut = if (deltaFrom >= 0) deltaFrom else Dedup.autoDeltaFrom(spark, dir)
-    val stage = graft.sources.Staging.fresh("lshstream-src")
+    // the delta at the cut, staged once per (fixture, cut): the automatic
+    // cut's max(doc_id) runs only in the first call
     val docs = graft.Tables(spark, dir, "documents")
-    docs.where(col("doc_id") >= cut).write.mode("overwrite").parquet(stage)
+    val src = s"$dir/documents.parquet"
+    val stage = Staging.once("lshstream-src", s"${Staging.keyOf(src)}@$deltaFrom") { d =>
+      val cut = if (deltaFrom >= 0) deltaFrom else Dedup.autoDeltaFrom(spark, dir)
+      docs.where(col("doc_id") >= cut).write.mode("overwrite").parquet(d)
+    }
     val schema = docs.schema
     // the whole stream pipeline (source + join) builds on a child session
     // so the state-store partition sizing never leaks into concurrently-
@@ -100,47 +109,51 @@ object DedupStream {
     val corpusIndex = Dedup.corpusBandIndex(spark, dir)
     val corpusSh = Dedup.corpusShingles(spark, dir)
 
-    val outDir = graft.sources.Staging.fresh("lshstream-sink")
+    // per-RECORD signature pipeline over a delta batch — arrival data has
+    // no corpus-wide content groups, so each delta doc bands
+    // individually; sh computed once per doc and reused for bands
+    // (candidate probe) and the verify join below
+    // skey = hash of the shingle set itself, so the verify below is
+    // keyed to the EXACT shingle set whose bands produced the
+    // collision: a re-delivered doc_id carrying different text in the
+    // same micro-batch verifies each version against its own sh
+    // (dedup on bare sdoc picked an arbitrary one), while the
+    // candidate distinct still moves only three longs per row
+    def verify(batch: DataFrame): DataFrame = {
+      val bands = Dedup.withBands(batch)
+        .withColumn("skey", xxhash64(col("sh")))
+      val deltaSh = bands.select(col("doc_id").as("sdoc"), col("skey"),
+          col("sh").as("sh_x"))
+        .dropDuplicates("sdoc", "skey")
+      val candidates = bands.as("x")
+        .join(corpusIndex.as("y"),
+          xxhash64(col("x.band"), col("x.bh")) === col("y.kb"))
+        .select(col("x.doc_id").as("sdoc"), col("x.skey").as("skey"),
+          col("y.cid").as("cid"))
+        .distinct()
+      candidates
+        .join(deltaSh, Seq("sdoc", "skey"))
+        .join(corpusSh.select(col("cid"), col("sh").as("sh_y")), Seq("cid"))
+        .select(col("sdoc"), col("cid"),
+          Dedup.jaccardOf(col("sh_x"), col("sh_y")).as("jaccard"))
+        .where(col("jaccard") >= minJaccard)
+    }
+
+    val outDir = Staging.fresh("lshstream-sink")
     val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // per-RECORD signature pipeline over the delta — arrival data has
-        // no corpus-wide content groups, so each delta doc bands
-        // individually; sh computed once per doc and reused for bands
-        // (candidate probe) and the verify join below
-        // skey = hash of the shingle set itself, so the verify below is
-        // keyed to the EXACT shingle set whose bands produced the
-        // collision: a re-delivered doc_id carrying different text in the
-        // same micro-batch verifies each version against its own sh
-        // (dedup on bare sdoc picked an arbitrary one), while the
-        // candidate distinct still moves only three longs per row
-        val bands = Dedup.withBands(batch.toDF())
-          .withColumn("skey", xxhash64(col("sh")))
-        val deltaSh = bands.select(col("doc_id").as("sdoc"), col("skey"),
-            col("sh").as("sh_x"))
-          .dropDuplicates("sdoc", "skey")
-        val candidates = bands.as("x")
-          .join(corpusIndex.as("y"),
-            xxhash64(col("x.band"), col("x.bh")) === col("y.kb"))
-          .select(col("x.doc_id").as("sdoc"), col("x.skey").as("skey"),
-            col("y.cid").as("cid"))
-          .distinct()
-        val verified = candidates
-          .join(deltaSh, Seq("sdoc", "skey"))
-          .join(corpusSh.select(col("cid"), col("sh").as("sh_y")), Seq("cid"))
-          .select(col("sdoc"), col("cid"),
-            Dedup.jaccardOf(col("sh_x"), col("sh_y")).as("jaccard"))
-          .where(col("jaccard") >= minJaccard)
-        verified.write.mode("append").parquet(outDir)
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        verify(batch.toDF()).write.mode("append").parquet(outDir)
       }
-      .option("checkpointLocation", graft.sources.Staging.fresh("qbb-ckpt"))
+      .option("checkpointLocation", Staging.fresh("qbb-ckpt"))
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
 
     // drain-side expansion (batch plan on the caller's session): contents
     // re-expand to their member records, the probing doc excluded; a pair
     // seen from both directions (both endpoints in the delta) and band
-    // re-collisions collapse in the same distinct the face always ran
-    spark.read.parquet(outDir).distinct()
+    // re-collisions collapse in the same distinct the face always ran.
+    // The sink is read back with its writer's schema (StreamSessions).
+    spark.read.schema(verify(stream).schema).parquet(outDir).distinct()
       .join(Dedup.contentMembers(spark, dir), Seq("cid"))
       .select(col("sdoc"), explode(col("members")).as("m"), col("jaccard"))
       .where(col("sdoc") =!= col("m"))

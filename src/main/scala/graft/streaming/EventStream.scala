@@ -1,9 +1,11 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.sources.Staging
 
 /** Structured Streaming faces of the event analytics (SURVEY.md §7 M5 —
   * extension surface; the reference has no streaming, §2.10).
@@ -100,14 +102,26 @@ object EventStream {
 
   /** Writes `rows` as one parquet file into the watch directory `stage`,
     * next to the staged fixture, before the stream starts. */
-  private def stageSentinel(rows: DataFrame, stage: java.nio.file.Path,
-      tag: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val dir = Paths.get(graft.sources.Staging.fresh(s"$tag-sentinel"))
+  private def stageSentinel(rows: DataFrame, stage: Path, tag: String): Unit = {
+    val dir = Paths.get(Staging.fresh(s"$tag-sentinel"))
     rows.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     val part = Files.list(dir).filter(_.toString.endsWith(".parquet"))
       .findFirst().get()
     Files.copy(part, stage.resolve("zz_sentinel.parquet"))
+  }
+
+  /** The watch directory of an events face: a copy of the fixture file
+    * plus whatever `more` writes next to it (sentinels), staged once per
+    * fixture ([[Staging.once]]) with the value `more` returns. Nothing
+    * writes to it after `start()`, and each query checkpoints afresh, so
+    * every call's batch 0 reads all of it. */
+  private def stagedEvents[A](dir: String, tag: String)(more: Path => A): (String, A) = {
+    val src = s"$dir/events.parquet"
+    Staging.onceWith(s"$tag-src", Staging.keyOf(src)) { d =>
+      val stage = Paths.get(d)
+      Files.copy(Paths.get(src), stage.resolve("events.parquet"))
+      more(stage)
+    }
   }
 
   /** Stream-stream INTERVAL join — the streaming twin of the batch range
@@ -127,34 +141,33 @@ object EventStream {
     * sentinels only match each other, 30 days past any real click), and
     * the no-data batch at the sentinel watermark emits every unmatched
     * error. The rows equal a two-drain run's: batch 0 held every event
-    * there too, at the same initial watermark. */
+    * there too, at the same initial watermark. The watch directory and
+    * the state width are staged once per fixture ([[stagedEvents]]). */
   def clicksAfterErrorsStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    val stage = Paths.get(graft.sources.Staging.fresh("q69-src"))
-    Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
-    val raw = spark.read.parquet(s"$dir/events.parquet") // ts: raw layout
-    // one sentinel PER SIDE: each stream's watermark only advances on rows
-    // that survive its own event_type filter
-    val base = sentinelOf(raw).withColumn("event_id", lit(-1L))
-    stageSentinel(base.withColumn("event_type", lit("error"))
-      .unionAll(base.withColumn("event_type", lit("click"))), stage, "q69")
-    // interval-join state is keyed by (bin, side): a month of fixture time
-    // is ~720 hot keys, and each store instance carries 4 state stores
-    // (two per join side) with per-batch commit overhead — fewer, fatter
-    // stores win until ROW volume demands otherwise: the join's per-batch
-    // work (state writes + range probes) parallelizes by store, so a
-    // fixed width of 4 capped the whole 10x run at 4 threads (measured
-    // 32 s at sf1, 9x the sf0.1 time). Width scales with the event count
-    // — 4 up to ~400k events, then one store per 100k, capped at the
-    // session's core budget; count() is a parquet metadata read. Sized on
-    // a child session so it never leaks into the caller's (StreamSessions).
-    val stateParts = math.min(32L, math.max(4L, raw.count() / 100000L)).toInt
+    val raw = graft.Tables.parquet(spark, s"$dir/events.parquet") // ts: raw layout
+    val (stage, stateParts) = stagedEvents(dir, "q69") { stage =>
+      // one sentinel PER SIDE: each stream's watermark only advances on
+      // rows that survive its own event_type filter
+      val base = sentinelOf(raw).withColumn("event_id", lit(-1L))
+      stageSentinel(base.withColumn("event_type", lit("error"))
+        .unionAll(base.withColumn("event_type", lit("click"))), stage, "q69")
+      // interval-join state is keyed by (bin, side): a month of fixture
+      // time is ~720 hot keys, and each store instance carries 4 state
+      // stores (two per join side) with per-batch commit overhead — fewer,
+      // fatter stores win until ROW volume demands otherwise: the join's
+      // per-batch work (state writes + range probes) parallelizes by
+      // store, so a fixed width of 4 capped the whole 10x run at 4 threads
+      // (measured 32 s at sf1, 9x the sf0.1 time). Width scales with the
+      // event count — 4 up to ~400k events, then one store per 100k,
+      // capped at the session's core budget; count() is a parquet
+      // metadata read. Sized on a child session so it never leaks into
+      // the caller's (StreamSessions).
+      math.min(32L, math.max(4L, raw.count() / 100000L)).toInt
+    }
     val ss = StreamSessions.withShuffle(spark, stateParts)
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ss.conf.set(graft.Tables.NanosAsLong, "true")
     def streamOf(tpe: String) = graft.Tables.normalizeEventsTs(
-        ss.readStream.schema(raw.schema).parquet(stage.toString))
+        ss.readStream.schema(raw.schema).parquet(stage))
       .where(col("event_type") === tpe)
     // Spark refuses stream-stream joins without an equality predicate —
     // the batch range join's bin-bucketing (Events.rangeJoin) is exactly
@@ -182,14 +195,14 @@ object EventStream {
     // maxResultSize at sf1). The parquet sink keeps every micro-batch's
     // output distributed on disk; the batch-side aggregation below reads
     // it back like any other relation.
-    val sinkDir = graft.sources.Staging.fresh("q69-sink")
-    val ckptDir = graft.sources.Staging.fresh("q69-ckpt")
+    val sinkDir = Staging.fresh("q69-sink")
+    val ckptDir = Staging.fresh("q69-ckpt")
     val q = joined.writeStream.format("parquet")
       .option("path", sinkDir).option("checkpointLocation", ckptDir)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
 
-    spark.read.parquet(sinkDir)
+    spark.read.schema(joined.schema).parquet(sinkDir) // writer schema (StreamSessions)
       .where(col("event_id") =!= -1L)
       .groupBy("event_id", "e_ts")
       .agg(count(col("c_ts")).as("clicks_1h"))
@@ -217,40 +230,40 @@ object EventStream {
     * time), matching the batch face's chronological numbering. Output
     * goes through a parquet FILE sink (sessions are data-sized; a memory
     * sink would collect them to the driver); a deployment would point the
-    * same sink at real storage and skip the sentinel dance. */
+    * same sink at real storage and skip the sentinel dance. The watch
+    * directory is staged once per fixture ([[stagedEvents]]), and the sink
+    * is read back with the sessions' schema, so a warm call runs no
+    * schema-inference job. */
   def sessionizeFromFiles(spark: SparkSession, dir: String,
       gapSec: Long = 1800): DataFrame = {
     import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    val stage = Paths.get(graft.sources.Staging.fresh("q65-src"))
-    Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
-    val raw = spark.read.parquet(s"$dir/events.parquet") // ts: raw layout
-    stageSentinel(sentinelOf(raw).withColumn("user_id", lit(-1L)), stage, "q65")
+    val raw = graft.Tables.parquet(spark, s"$dir/events.parquet") // ts: raw layout
+    val (stage, _) = stagedEvents(dir, "q65")(
+      stageSentinel(sentinelOf(raw).withColumn("user_id", lit(-1L)), _, "q65"))
     // State-store partition count is baked into the query at start; each
     // partition owns an HDFS-backed store instance with per-batch commit +
     // maintenance overhead, so a harness run sizes it to the state (one
     // Open per user), not to the session's shuffle width. A deployment
     // picks this by active-user count. Child session scopes the sizing.
     val ss = StreamSessions.withShuffle(spark, 8)
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ss.conf.set(graft.Tables.NanosAsLong, "true")
     val stream = graft.Tables.normalizeEventsTs(
-        ss.readStream.schema(raw.schema).parquet(stage.toString))
+        ss.readStream.schema(raw.schema).parquet(stage))
       .select(col("user_id"), col("ts"), col("value")).as[Ev]
 
     // sessions are one row per (user, session) — data-sized, so a FILE
     // sink, not memory (the q69 lesson: memory = driver collect)
-    val sinkDir = graft.sources.Staging.fresh("q65-sink")
-    val ckptDir = graft.sources.Staging.fresh("q65-ckpt")
-    val q = sessionize(stream, gapSec).writeStream.format("parquet")
+    val sessions = sessionize(stream, gapSec)
+    val sinkDir = Staging.fresh("q65-sink")
+    val ckptDir = Staging.fresh("q65-ckpt")
+    val q = sessions.writeStream.format("parquet")
       .option("path", sinkDir).option("checkpointLocation", ckptDir)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
 
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("start_s", "end_s")
-    spark.read.parquet(sinkDir)
+    spark.read.schema(sessions.schema).parquet(sinkDir) // writer schema (StreamSessions)
       .where(col("user_id") =!= -1L)
       .withColumn("session_seq", row_number().over(w).cast("long"))
       .select(col("user_id"), col("session_seq"),
@@ -270,15 +283,12 @@ object EventStream {
     * stream-stream joins need state budgets. Drained end-to-end on the
     * file source; must equal the batch join+aggregate (the oracle). */
   def enrichedNationCounts(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stage = Paths.get(graft.sources.Staging.fresh("q9w-src"))
-    Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = graft.Tables.parquet(spark, s"$dir/events.parquet")
+    val (stage, _) = stagedEvents(dir, "q9w")(_ => ())
     // child session scopes the shuffle sizing to this query (StreamSessions)
     val ss = StreamSessions.withShuffle(spark, 4)
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stream = ss.readStream.schema(raw.schema).parquet(stage.toString)
+    ss.conf.set(graft.Tables.NanosAsLong, "true")
+    val stream = ss.readStream.schema(raw.schema).parquet(stage)
       .select(col("user_id"), col("value"))
     val dim = broadcast(graft.Tables(ss, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey")))
@@ -287,7 +297,7 @@ object EventStream {
       .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"))
     val sink = "q9w_enrich_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = agg.writeStream.format("memory").queryName(sink)
-      .option("checkpointLocation", graft.sources.Staging.fresh("q9w-ckpt"))
+      .option("checkpointLocation", Staging.fresh("q9w-ckpt"))
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
     // the memory sink registers its table in the stream's session

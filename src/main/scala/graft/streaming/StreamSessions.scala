@@ -38,6 +38,12 @@ import org.apache.spark.sql.SparkSession
   * `Staging.fresh` `checkpointLocation` rather than inherit a
   * deployment's `spark.sql.streaming.checkpointLocation`. The parent
   * session is never touched: `Apps` may checkpoint to HDFS on it.
+  *
+  * A drained parquet sink is read back on the parent with the schema of
+  * the DataFrame that wrote it (`spark.read.schema`). A sink is a fresh
+  * directory, so inferring its schema would cost a job on every call, and
+  * a file relation makes any declared schema nullable, which is what
+  * inference over the sink returns.
   */
 private[streaming] object StreamSessions {
 

@@ -40,7 +40,7 @@ object GraphScale {
       "q8z_sssp_kernel" -> (GraphOps.ssspOf(_, 50, driverEdgeLimit = 0L).count())),
       FaceRunner.prefixes(args.lift(2)))
     val spark = GraftSession.local()
-    val edges = spark.read.parquet(path).select(col("u"), col("v")).cache()
+    val edges = graft.Tables.parquet(spark, path).select(col("u"), col("v")).cache()
     val m = edges.count()
     println(s"[graphscale] $path: $m edges")
     FaceRunner.timeReps(kernels, reps)(_(edges))

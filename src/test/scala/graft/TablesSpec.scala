@@ -10,6 +10,8 @@ import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -80,6 +82,19 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
   }
 
+  /** `body`'s result and the Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { val out = body; ListenerBus.drain(sc); (out, n.get) }
+    finally sc.removeSparkListener(listener)
+  }
+
   test("Tables.apply reads NANOS, MICROS-NTZ, and MICROS-LTZ events identically") {
     val base = Files.createTempDirectory("graft-tables").toString
     val nanosDir = s"$base/nanos"; val ntzDir = s"$base/ntz"; val ltzDir = s"$base/ltz"
@@ -139,5 +154,61 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     // and the shipped fixture resolves to the canonical type
     assert(Tables(spark, sfDir, "embeddings")
       .schema("embedding").dataType === ArrayType(FloatType))
+  }
+
+  test("schema memo: after registerViews, every table reads with no Spark job") {
+    Tables.registerViews(spark, sfDir)
+    Tables.names.foreach { t =>
+      val (df, jobs) = jobsOf(Tables(spark, sfDir, t))
+      assert(jobs == 0, s"$t ran $jobs jobs")
+      assert(df.schema == spark.table(t).schema, t)
+    }
+  }
+
+  test("schema memo: a file rewritten at the same path is inferred again") {
+    val dir = Files.createTempDirectory("graft-memo-rewrite").toString
+    val path = s"$dir/events.parquet"
+    writeNanos(dir)
+    val (nanos, first) = jobsOf(Tables.parquet(spark, path))
+    assert(nanos.schema("ts").dataType === LongType)
+    assert(first == 1, s"first read ran $first jobs")
+    assert(jobsOf(Tables.parquet(spark, path))._2 == 0)
+    // the MICROS layout replaces the file at the same path
+    writeMicros(dir, ntz = true)
+    val (micros, again) = jobsOf(Tables.parquet(spark, path))
+    assert(micros.schema("ts").dataType === TimestampNTZType)
+    assert(again == 1, s"the rewritten file's read ran $again jobs")
+    assert(jobsOf(Tables.parquet(spark, path))._2 == 0)
+  }
+
+  test("schema memo: turning nanosAsLong off gives its own entry") {
+    val dir = Files.createTempDirectory("graft-memo-conf").toString
+    val path = s"$dir/events.parquet"
+    writeMicros(dir, ntz = true)
+    Tables.parquet(spark, path)
+    spark.conf.set(Tables.NanosAsLong, "false")
+    val (off, offJobs) = try {
+      val first = jobsOf(Tables.inferredOnce(spark, path))
+      assert(jobsOf(Tables.inferredOnce(spark, path))._2 == 0)
+      first
+    } finally spark.conf.set(Tables.NanosAsLong, "true")
+    assert(offJobs == 1, s"the read with nanosAsLong off ran $offJobs jobs")
+    assert(off.schema == spark.read.parquet(path).schema)
+    assert(jobsOf(Tables.parquet(spark, path))._2 == 0)
+  }
+
+  test("schema memo: a memo read equals an inferred read, schema and rows") {
+    val dir = Files.createTempDirectory("graft-memo-nanos").toString
+    writeNanos(dir)
+    val paths = Tables.names.map(t => s"$sfDir/$t.parquet") :+ s"$dir/events.parquet"
+    paths.foreach { p =>
+      Tables.parquet(spark, p)
+      val (memo, jobs) = jobsOf(Tables.parquet(spark, p))
+      assert(jobs == 0, p)
+      val inferred = spark.read.parquet(p)
+      assert(memo.schema == inferred.schema, p)
+      assert(memo.schema.forall(_.nullable), p)
+      assert(memo.collect().toSeq == inferred.collect().toSeq, p)
+    }
   }
 }

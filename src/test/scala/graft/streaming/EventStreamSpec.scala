@@ -1,7 +1,10 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 import org.apache.spark.sql.functions._
@@ -35,6 +38,19 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
       org.apache.spark.graft.ListenerBus.drain(sc)
       (out, seen.size)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { val out = body; ListenerBus.drain(sc); (out, n.get) }
+    finally sc.removeSparkListener(listener)
   }
 
   /** The `graft-<tag>*` dirs `Staging.fresh` has made so far. */
@@ -244,5 +260,58 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
     val bare = deltas.filterNot(d => names(d.toString + ".crc"))
     assert(bare.isEmpty,
       s"${bare.size} of ${deltas.size} delta files have no checksum sidecar, e.g. ${bare.take(3)}")
+  }
+
+  /** A face's second call: the jobs it runs and the `graft-*` dirs it
+    * adds under the temp dir. */
+  private def secondCall(face: => DataFrame): (Int, Set[String]) = {
+    face.collect()
+    val before = stagedDirs("")
+    val (_, jobs) = jobsOf(face.collect())
+    (jobs, (stagedDirs("") -- before).map(_.getFileName.toString))
+  }
+
+  // Pinned on sf0.001 with 8 shuffle partitions. Each source is staged once
+  // per fixture and read with a remembered or declared schema, so a warm
+  // call runs no schema-inference job, sentinel build or delta write:
+  // before that, the same second calls ran 9 (q65) and 18 (qbb) jobs.
+  private val warmJobs = Map("q65" -> 6, "qbb" -> 12)
+
+  test("q65 and qbb: a second call runs the pinned jobs and stages no new source") {
+    val calls = Seq(
+      ("q65", () => EventStream.sessionizeFromFiles(spark, sfDir), Set("q65-sink", "q65-ckpt")),
+      ("qbb", () => DedupStream.minhashPairsFromStream(spark, sfDir),
+        Set("lshstream-sink", "qbb-ckpt")))
+    val jobs = calls.map { case (name, face, written) =>
+      val (n, added) = secondCall(face())
+      val sinksAndCheckpoints = added.forall(d => written.exists(w => d.startsWith(s"graft-$w")))
+      assert(added.size == written.size && sinksAndCheckpoints, s"$name's second call added $added")
+      name -> n
+    }.toMap
+    assert(jobs == warmJobs, s"jobs $jobs, pinned at $warmJobs; " +
+      "a change to these counts must be explained in CHANGES.md")
+  }
+
+  test("every streaming sink is read back with the schema inference gives it") {
+    val faces = Seq[(String, () => DataFrame)](
+      "q65-sink" -> (() => EventStream.sessionizeFromFiles(spark, sfDir)),
+      "q69-sink" -> (() => EventStream.clicksAfterErrorsStream(spark, sfDir)),
+      "q58-sink" -> (() => DedupStream.dedupExactFromFiles(spark, sfDir)),
+      "q9c-sink" -> (() => CdcStream.upsertFromFiles(spark, sfDir)),
+      "lshstream-sink" -> (() => DedupStream.minhashPairsFromStream(spark, sfDir)))
+    faces.foreach { case (tag, face) =>
+      val before = stagedDirs(tag)
+      val df = face()
+      val sink = stagedDirs(tag) -- before
+      assert(sink.size == 1, s"$tag: new sinks $sink")
+      val name = sink.head.getFileName.toString
+      val read = df.queryExecution.analyzed.collect {
+        case l: LogicalRelation => l.relation
+      }.collect {
+        case h: HadoopFsRelation if h.location.rootPaths.exists(_.getName == name) => h.schema
+      }
+      assert(read.size == 1, s"$tag: ${read.size} reads of $name")
+      assert(read.head == spark.read.parquet(sink.head.toString).schema, tag)
+    }
   }
 }
