@@ -33,12 +33,18 @@ object Tables {
     else df
   }
 
+  /** Whether parquet inference reads a column annotated UNKNOWN as
+    * NullType (on) or as its physical type (off). */
+  private[graft] val RespectUnknownType =
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled"
+
   /** The session confs that change the schema Spark infers for a parquet
     * file, so part of a memo key; `mergeSchema` changes which footers it
     * reads. */
   private val InferenceConfs = Seq(NanosAsLong,
     "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema")
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema",
+    RespectUnknownType)
 
   private final case class SchemaKey(path: String, fingerprint: String,
       mergeSchema: Boolean, confs: Seq[String])

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.graft.ListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Dev harness: time individual queries by name-prefix without running the
@@ -10,7 +11,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * [reps]` — prints per-query seconds for each rep (first rep includes
   * footer/codegen warm-up; read the later reps), each `[time]` line
   * followed by `[jobs] <name> rep<N> <count>`: the Spark jobs the rep
-  * started, counted by a listener after the bus has drained.
+  * started, counted by a listener after the bus has drained, and
+  * `[codegen] <name> rep<N> <count>`: the classes Janino compiled during
+  * the rep, on the driver and on the executors' task threads alike (a
+  * local master runs both in this JVM).
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
@@ -24,12 +28,17 @@ object TimeOne {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     })
     ListenerBus.drain(sc)
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     var seen = jobs.get()
+    var seenCompiled = compiled
     FaceRunner.timeReps(faces, reps, label => {
       ListenerBus.drain(sc)
       val now = jobs.get()
+      val nowCompiled = compiled
       println(s"[jobs] $label ${now - seen}")
+      println(s"[codegen] $label ${nowCompiled - seenCompiled}")
       seen = now
+      seenCompiled = nowCompiled
     })(_(spark, sfDir).count())
     spark.stop()
   }

@@ -167,10 +167,15 @@ object MediaOps {
   /** Decoded features are consumed by BOTH query faces (q70 summary, q71
     * ANN) and twice within the ANN self-join — the PNG decode is the
     * expensive leg, so materialize it once per (session, dir) as a keyed
-    * [[graft.SharedViews]] view, like [[graft.operators.GraphOps]]' edges. */
+    * [[graft.SharedViews]] view, like [[graft.operators.GraphOps]]' edges.
+    * The cache is filled by one job at build: a cache left for the ANN
+    * self-join's two concurrent stages to fill has both compute the same
+    * partition. */
   private def cachedFeatures(spark: SparkSession, dir: String): DataFrame =
     SharedViews.view("media.features", spark, dir) {
-      extractFeatures(mediaTable(spark, dir)).toDF().cache()
+      val view = extractFeatures(mediaTable(spark, dir)).toDF().cache()
+      view.rdd.count()
+      view
     }
 
   /** Media features → similarity search: nearest media by cosine over the

@@ -235,10 +235,15 @@ object Dedup {
     * groups (the bulk of q8n's r8 0.7 → 1.9 s drift at sf0.1: q8n pays
     * the build once for its pair stage and ExplainAudit/verify pay it
     * again per face). Same keyed-materialized-view discipline as
-    * [[shingled]]; dropped by [[graft.SharedViews.clearAll]]. */
+    * [[shingled]]; dropped by [[graft.SharedViews.clearAll]]. The cache
+    * is filled by one job at build: [[minhashPairs]] reads it on both
+    * sides of its band join and in the verify, and a cache left for those
+    * concurrent stages to fill has several compute the same partition. */
   private def groupedDense(spark: SparkSession, dir: String): DataFrame =
     SharedViews.view("dedup.groupedDense", spark, dir) {
-      viewCache(groupedSigs(spark, dir, minhashSigCol))
+      val view = viewCache(groupedSigs(spark, dir, minhashSigCol))
+      view.rdd.count()
+      view
     }
 
   /** The corpus's content-level LSH band index — (cid, kb), two longs

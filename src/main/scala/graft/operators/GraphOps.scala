@@ -2122,6 +2122,9 @@ object GraphOps {
     val incRows = inc.count()
     val incC = static(keyedStatic(inc, incRows, "c"))
     val incP = static(keyedStatic(inc, incRows, "p"))
+    // filled here, as in distributedHits: the half-steps read incC on both
+    // sides of a join, and two concurrent stages would fill one partition
+    incC.rdd.count(); incP.rdd.count()
     val hub0 = incC.select(col("c")).distinct().withColumn("h", lit(1.0))
     Seq(
       "q88_pagerank superstep" -> pageRankStep(w, pr0, 1000L, 0.85),

@@ -57,7 +57,7 @@ object CdcStream {
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
 
-    // read back with the writer's schema (StreamSessions)
-    spark.read.schema(merged.schema).parquet(outDir).orderBy("doc_id")
+    // read back on the child with the writer's schema (StreamSessions)
+    ss.read.schema(merged.schema).parquet(outDir).orderBy("doc_id")
   }
 }

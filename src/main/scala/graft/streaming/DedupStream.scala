@@ -50,8 +50,8 @@ object DedupStream {
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
 
-    // read back with the writer's schema (StreamSessions)
-    spark.read.schema(counts.schema).parquet(outDir).orderBy("keeper")
+    // read back on the child with the writer's schema (StreamSessions)
+    ss.read.schema(counts.schema).parquet(outDir).orderBy("keeper")
   }
 
   /** Streaming NEAR-dup detection — the LSH ingest twin of
@@ -148,12 +148,13 @@ object DedupStream {
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
 
-    // drain-side expansion (batch plan on the caller's session): contents
-    // re-expand to their member records, the probing doc excluded; a pair
-    // seen from both directions (both endpoints in the delta) and band
-    // re-collisions collapse in the same distinct the face always ran.
-    // The sink is read back with its writer's schema (StreamSessions).
-    spark.read.schema(verify(stream).schema).parquet(outDir).distinct()
+    // drain-side expansion: contents re-expand to their member records,
+    // the probing doc excluded; a pair seen from both directions (both
+    // endpoints in the delta) and band re-collisions collapse in the same
+    // distinct the face always ran. The sink is read back on the child
+    // with its writer's schema (StreamSessions); the members come from
+    // the caller's keyed view, whose cached blocks the child reads.
+    ss.read.schema(verify(stream).schema).parquet(outDir).distinct()
       .join(Dedup.contentMembers(spark, dir), Seq("cid"))
       .select(col("sdoc"), explode(col("members")).as("m"), col("jaccard"))
       .where(col("sdoc") =!= col("m"))

@@ -202,7 +202,7 @@ object EventStream {
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
 
-    spark.read.schema(joined.schema).parquet(sinkDir) // writer schema (StreamSessions)
+    ss.read.schema(joined.schema).parquet(sinkDir) // on the child, writer schema (StreamSessions)
       .where(col("event_id") =!= -1L)
       .groupBy("event_id", "e_ts")
       .agg(count(col("c_ts")).as("clicks_1h"))
@@ -263,7 +263,7 @@ object EventStream {
 
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("start_s", "end_s")
-    spark.read.schema(sessions.schema).parquet(sinkDir) // writer schema (StreamSessions)
+    ss.read.schema(sessions.schema).parquet(sinkDir) // on the child, writer schema (StreamSessions)
       .where(col("user_id") =!= -1L)
       .withColumn("session_seq", row_number().over(w).cast("long"))
       .select(col("user_id"), col("session_seq"),

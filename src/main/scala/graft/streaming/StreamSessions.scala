@@ -39,11 +39,34 @@ import org.apache.spark.sql.SparkSession
   * deployment's `spark.sql.streaming.checkpointLocation`. The parent
   * session is never touched: `Apps` may checkpoint to HDFS on it.
   *
-  * A drained parquet sink is read back on the parent with the schema of
-  * the DataFrame that wrote it (`spark.read.schema`). A sink is a fresh
-  * directory, so inferring its schema would cost a job on every call, and
-  * a file relation makes any declared schema nullable, which is what
-  * inference over the sink returns.
+  * One executor class loader. Spark runs each SQL execution's jobs under
+  * its session's artifact state, and with
+  * `spark.sql.artifact.isolation.enabled` at its default (true) that state
+  * is the session's uuid: the executor keeps one isolated session, with
+  * its own `ExecutorClassLoader`, per uuid. A stream runs on a clone of
+  * the session that started it, with a fresh uuid, so every call made a
+  * new loader, and Janino's generated-class cache, which is keyed by
+  * (context class loader, source), missed on code it had compiled in the
+  * call before. The child therefore turns isolation off before its first
+  * execution (the artifact manager reads the conf once, lazily), and the
+  * stream's clone copies the conf. The child's tasks, its stream clones'
+  * and `foreachBatch`'s then run in the executor's default session and
+  * class loader, which every warm call shares.
+  *
+  * Precondition: no artifact (jar, class file, archive) is ever added to a
+  * child or to a stream built on it. With isolation off such an artifact
+  * would reach the whole context instead of the one session; graft adds
+  * none.
+  *
+  * A drained parquet sink is read back on the child, not on the parent,
+  * so the read-back's jobs use the same default loader (a parent-session
+  * execution runs under the parent's own isolated loader). It is read
+  * with the schema of the DataFrame that wrote it (`ss.read.schema`). A
+  * sink is a fresh directory, so inferring its schema would cost a job on
+  * every call, and a file relation makes any declared schema nullable,
+  * which is what inference over the sink returns. Each read-back ends in
+  * an order on unique keys, so the child's shuffle width cannot move a
+  * row.
   */
 private[streaming] object StreamSessions {
 
@@ -51,13 +74,17 @@ private[streaming] object StreamSessions {
   val FsCheckpointManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
+  /** Spark's per-session artifact isolation (see the header). */
+  val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
   /** A fresh session on the same context with its own shuffle-partition
-    * setting and the fork-free checkpoint manager; the parent's conf is
-    * never touched. */
+    * setting, the fork-free checkpoint manager and artifact isolation off;
+    * the parent's conf is never touched. */
   def withShuffle(spark: SparkSession, partitions: Int): SparkSession = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     ss.conf.set("spark.sql.streaming.checkpointFileManagerClass", FsCheckpointManager)
+    ss.conf.set(ArtifactIsolation, "false")
     ss
   }
 }

@@ -197,6 +197,41 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     assert(jobsOf(Tables.parquet(spark, path))._2 == 0)
   }
 
+  test("schema memo: flipping respectUnknownTypeAnnotation gives its own entry") {
+    // an UNKNOWN-annotated column infers as NullType with the conf on and
+    // as its physical type with it off, so each value needs its own schema
+    val dir = Files.createTempDirectory("graft-memo-unknown").toString
+    val path = s"$dir/part.parquet"
+    val schema: MessageType = Types.buildMessage()
+      .addField(Types.required(INT64).named("id"))
+      .addField(Types.optional(INT32)
+        .as(LogicalTypeAnnotation.unknownType()).named("u"))
+      .named("t")
+    val writer = ExampleParquetWriter.builder(
+      HadoopOutputFile.fromPath(new Path(path), new Configuration())).withType(schema).build()
+    (1L to 3L).foreach { id =>
+      val g = new SimpleGroup(schema)
+      g.add("id", id)
+      writer.write(g)
+    }
+    writer.close()
+    val before = spark.conf.get(Tables.RespectUnknownType)
+    val flipped = (!before.toBoolean).toString
+    val first = Tables.parquet(spark, path).schema
+    spark.conf.set(Tables.RespectUnknownType, flipped)
+    val (other, otherJobs) = try {
+      val read = jobsOf(Tables.parquet(spark, path))
+      assert(jobsOf(Tables.parquet(spark, path))._2 == 0)
+      assert(read._1.schema == spark.read.parquet(path).schema)
+      read
+    } finally spark.conf.set(Tables.RespectUnknownType, before)
+    assert(otherJobs == 1, s"the read with the conf flipped ran $otherJobs jobs")
+    assert(Set(first("u").dataType, other.schema("u").dataType) == Set(NullType, IntegerType),
+      s"u inferred as ${first("u").dataType}, then ${other.schema("u").dataType}")
+    assert(first == spark.read.parquet(path).schema)
+    assert(jobsOf(Tables.parquet(spark, path))._2 == 0)
+  }
+
   test("schema memo: a memo read equals an inferred read, schema and rows") {
     val dir = Files.createTempDirectory("graft-memo-nanos").toString
     writeNanos(dir)

@@ -811,18 +811,9 @@ class GraphSpec extends AnyFunSuite with SparkSuite {
   /** What `body` returns, and the "Block ... already exists" warnings the
     * BlockManager logs while it runs: a cached partition computed twice. */
   private def withBlockWarnings[T](body: => T): (T, Seq[String]) = {
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("graphspec-blocks", null, null, true, null) {
-      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val logger = LogManager.getLogger("org.apache.spark.storage.BlockManager").asInstanceOf[Logger]
-    logger.addAppender(appender)
-    val result = try body finally { logger.removeAppender(appender); appender.stop() }
-    (result, seen.toArray(Array.empty[String]).toSeq.filter(_.contains("already exists")))
+    val (result, lines) = logLines("org.apache.spark.storage.BlockManager",
+      org.apache.logging.log4j.Level.WARN)(body)
+    (result, lines.filter(_.contains("already exists")))
   }
 
   test("hitsOf's distributed tier fills its static caches once: same jobs every call") {

@@ -236,13 +236,18 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
   test("stream child session: fork-free checkpoint manager, checksums on, parent untouched") {
     val key = "spark.sql.streaming.checkpointFileManagerClass"
     val checksum = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val parentBefore = (spark.conf.getOption(key), spark.conf.getOption(checksum))
+    val isolation = StreamSessions.ArtifactIsolation
+    val parentBefore = (spark.conf.getOption(key), spark.conf.getOption(checksum),
+      spark.conf.get(isolation))
     val ss = StreamSessions.withShuffle(spark, 3)
     assert(ss.conf.get(key) == StreamSessions.FsCheckpointManager)
     assert(ss.conf.get("spark.sql.shuffle.partitions") == "3")
     assert(ss.conf.getOption(checksum).forall(_ == "true"))
-    assert((spark.conf.getOption(key), spark.conf.getOption(checksum)) == parentBefore)
+    assert(ss.conf.get(isolation) == "false")
+    assert((spark.conf.getOption(key), spark.conf.getOption(checksum),
+      spark.conf.get(isolation)) == parentBefore)
     assert(!spark.conf.getOption(key).contains(StreamSessions.FsCheckpointManager))
+    assert(spark.conf.get(isolation) == "true")
   }
 
   test("q65: every state delta file has its checksum sidecar") {
@@ -260,6 +265,25 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
     val bare = deltas.filterNot(d => names(d.toString + ".crc"))
     assert(bare.isEmpty,
       s"${bare.size} of ${deltas.size} delta files have no checksum sidecar, e.g. ${bare.take(3)}")
+  }
+
+  test("a warm streaming call creates no executor class loader") {
+    // with artifact isolation on, each stream's session clone has its own
+    // uuid, the executor makes a loader for each, and the code generated in
+    // one call is compiled again in the next
+    val faces = Seq[(String, () => DataFrame)](
+      "q65" -> (() => EventStream.sessionizeFromFiles(spark, sfDir)),
+      "qbb" -> (() => DedupStream.minhashPairsFromStream(spark, sfDir)))
+    faces.foreach { case (name, face) =>
+      face().collect()
+      val (_, lines) = logLines("org.apache.spark.executor.Executor",
+          org.apache.logging.log4j.Level.INFO) {
+        face().collect(); face().collect()
+      }
+      val loaders = lines.filter(_.contains("Created or updated repl class loader"))
+      assert(loaders.isEmpty, s"$name's 2nd and 3rd calls created ${loaders.size} " +
+        s"executor class loaders:\n${loaders.mkString("\n")}")
+    }
   }
 
   /** A face's second call: the jobs it runs and the `graft-*` dirs it
